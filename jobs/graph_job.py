@@ -13,9 +13,11 @@ Completes the cluster-job surface across the north rule's kernel suite
 
 The edge parquet holds directed (src, dst); the job symmetrizes for the
 undirected kernels. ``cc`` and ``lpa`` run through the resumable
-checkpointed drivers — re-running with the same --workdir resumes from the
-latest manifest, and per-superstep lineage + convergence metrics land in
-<workdir>/metrics. ``triangle`` is one-shot (no state to checkpoint).
+checkpointed drivers, which run the in-memory kernels' own superstep
+(``kernels.min_label_step``; with pointer jumping for ``cc``) and
+checkpoint every round — re-running with the same --workdir resumes from
+the latest manifest, and per-superstep lineage + convergence metrics land
+in <workdir>/metrics. ``triangle`` is one-shot (no state to checkpoint).
 """
 
 from __future__ import annotations

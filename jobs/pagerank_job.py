@@ -10,8 +10,11 @@ clusters; locally the same command runs under local[N]):
         --workdir /data/pr_checkpoints \
         [--tol 1e-6] [--damping 0.85] [--partitions 512]
 
-Re-running with the same --workdir resumes from the latest checkpoint
-manifest. Per-superstep metrics land in <workdir>/metrics.
+The job runs ``CheckpointedPageRank``, i.e. the in-memory kernel's own
+superstep (``kernels.pagerank_step``: one exchange per superstep) with a
+parquet checkpoint every few supersteps. Re-running with the same
+--workdir resumes from the latest checkpoint manifest. Per-superstep
+metrics land in <workdir>/metrics.
 """
 
 from __future__ import annotations

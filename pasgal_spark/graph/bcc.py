@@ -561,12 +561,14 @@ def _bcc_summary_driver(pairs, n_vertices: int):
     Returns (n_cc, n_bcc, largest_bcc_edges, n_bridges) mirroring the
     distributed aggregate exactly (empty partition -> (n_cc, 0, None,
     None), the aggregate-over-zero-rows shape)."""
-    adj: dict[int, list[int]] = {}
+    # neighbor SETS: a duplicated (src, dst) row is one edge; as a second
+    # list entry it would be walked twice (a back edge counted twice)
+    adj: dict[int, set[int]] = {}
     for u, v in pairs:
         if u == v:
             continue  # self-loops carry no BCC edge (the src < dst filter)
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
     disc: dict[int, int] = {}
     low: dict[int, int] = {}
     sizes: list[int] = []
@@ -642,6 +644,10 @@ def bcc_summary(
     unchanged — that is the 100 TB path."""
     from pasgal_spark.graph.euler import MAX_DRIVER_ROWS
 
+    # validated before the driver fast path, so small and large inputs
+    # reject the same arguments
+    if strategy not in ("level", "euler"):
+        raise ValueError(f"bcc strategy must be 'level' or 'euler', got {strategy!r}")
     budget = MAX_DRIVER_ROWS if max_driver_edges is None else max_driver_edges
     m_upper = sym.count()  # cheap on the pinned/cached ingest leaf
     if m_upper <= 2 * budget:

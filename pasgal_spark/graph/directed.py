@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from pasgal_spark.plans.lineage import fast_pin, pin
 
-from pasgal_spark.graph.kernels import _StateChain, _hint_state
+from pasgal_spark.graph.kernels import _hint_state, _min_label
 
 
 def _frontier_expand(
@@ -136,58 +136,15 @@ def _min_label_to_fixpoint(
     """Propagate min label along directed edges until fixpoint.
 
     labels: (id, lbl) — every vertex present. Returns same shape.
-    Frontier-based (fused delta, same induction as
-    kernels.label_propagation): only vertices whose label changed last
-    round send; an empty frontier is a true fixpoint (monotone min).
+    ``kernels.min_label_step`` (no pointer jump, no join hint: the work
+    graphs are shrunken derived tables) through the kernels' overlapped
+    fixpoint loop, shared with hash-min CC; raises when the budget runs
+    out before the fixpoint.
     """
-    def step(labels: DataFrame, frontier: DataFrame) -> DataFrame:
-        msgs = (
-            edges.join(frontier, edges.src == frontier.id)
-            .select(
-                edges.dst.alias("id"),
-                "lbl",
-                F.lit(None).cast("long").alias("old"),
-            )
-        )
-        st = labels.select("id", "lbl", F.col("lbl").alias("old"))
-        return (
-            st.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("lbl").alias("lbl"), F.min("old").alias("old"))
-        )
-
-    changed = F.col("old").isNull() | (F.col("lbl") < F.col("old"))
-    chain = _StateChain(3)
-    # round 0: every vertex is a sender
-    cur = chain.advance(step(labels, labels))
-    cur_pinned = chain.last_pinned
-    converged = False
-    for _ in range(max_iterations):
-        # ONE fused aggregate job per round (r6): materializes the
-        # generation and counts senders — overlapped with the next
-        # round's Catalyst compile (kernels._compile_overlapped; the next
-        # plan depends only on this generation's leaf).
-        row, nxt = chain.advance_overlapped(
-            lambda: step(
-                cur.select("id", "lbl"),
-                cur.filter(changed).select("id", "lbl"),
-            ),
-            lambda: cur.agg(F.sum(F.when(changed, 1)).alias("nf")).first(),
-        )
-        converged = (row["nf"] or 0) == 0
-        if converged:
-            break
-        cur, cur_pinned = nxt, chain.last_pinned
-    if not converged:
-        chain.close()
-        # Raise-don't-truncate (same policy as reachability above):
-        # unconverged min-labels would make scc() settle wrong components.
-        raise RuntimeError(
-            f"_min_label_to_fixpoint: labels still changing after "
-            f"{max_iterations} supersteps; raise max_iterations "
-            "(long-diameter graph)"
-        )
-    return chain.seal(cur.select("id", "lbl"), pinned=cur_pinned)
+    return _min_label(
+        edges, labels, "lbl", rounds=max_iterations, converge=True,
+        checkpoint_every=3, hinted=False, who="_min_label_to_fixpoint",
+    )
 
 
 def scc(

@@ -353,7 +353,7 @@ def boruvka_forest_cc(
                 return r
 
             chosen_keys = []
-            rpdf = rpdf.sort_values("key")
+            rpdf = rpdf.sort_values("key", kind="stable")
             for x, y, k in zip(
                 rpdf["x"].tolist(), rpdf["y"].tolist(), rpdf["key"].tolist()
             ):

@@ -25,19 +25,25 @@ Each kernel is the Spark-native re-expression of a reference algorithm
                         orientation + two joins over the edge table.
 - ``degree_analytics`` — port of src/basic_analytics/basic_analytics.cpp:38-73.
 
+Two superstep functions carry every loop of this module, the kernels of
+``pasgal_spark.graph.directed`` and the resumable drivers of
+``pasgal_spark.plans.checkpoints``: ``pagerank_step`` (one PageRank round)
+and ``min_label_step`` (one round of min-label adoption, optionally with a
+pointer jump — hash-min CC, two-phase CC's shrink rounds, LPA and SCC's
+coloring). Each is one join-aggregate: messages over the edge table,
+unioned with the state row and folded by one ``groupBy(id)``.
+
 Scale notes (100 TB framing): the edge table is the big, static relation —
 it is scanned once per superstep and never shuffled after the initial
 partitioning-by-src; only the small per-vertex state moves. Message combine
-is expressed as partial+final hash aggregation (map-side combine), with an
-optional explicit salting stage for hub keys (north_rule). Lineage is
-truncated by eager localCheckpoint every ``checkpoint_every`` supersteps —
-on a cluster this would be a parquet/Iceberg checkpoint (see
+is expressed as partial+final hash aggregation (map-side combine). Lineage
+is truncated by eager localCheckpoint every ``checkpoint_every`` supersteps
+— on a cluster this would be a parquet/Iceberg checkpoint (see
 pasgal_spark.plans.checkpoints for the resumable variant).
 """
 
 from __future__ import annotations
 
-import os
 import threading
 from typing import Callable
 
@@ -58,20 +64,14 @@ from pasgal_spark.plans.lineage import fast_pin, pin
 # Measured r6 (157k edges, 8 supersteps): shuffle_hash 3.7 s vs
 # edge-broadcast 6.1 s vs sort-merge-hint 4.5 s. ``shuffle_hash`` builds
 # the hash map from the per-partition slice of the SMALL state side
-# (spillable in Spark 3.2+); set SPARK_GRAFT_STATE_JOIN_HINT=merge for
-# strict sort-merge, or "none" to let Catalyst/AQE choose.
-STATE_JOIN_HINT = os.environ.get("SPARK_GRAFT_STATE_JOIN_HINT", "shuffle_hash")
-
-
+# (spillable in Spark 3.2+).
 def _hint_state(df: DataFrame) -> DataFrame:
-    """Apply the configured join-strategy hint to a state/frontier side.
+    """Apply the ``shuffle_hash`` join hint to a state/frontier side.
 
     Only meaningful when the other (edge) side is the ingest-partitioned
     cached table; kernels joining against derived/shrunken edge sets skip
     it and let AQE decide."""
-    if STATE_JOIN_HINT in ("shuffle_hash", "merge"):
-        return df.hint(STATE_JOIN_HINT)
-    return df
+    return df.hint("shuffle_hash")
 
 
 def _compile_overlapped(action, compile_thunk):
@@ -86,10 +86,13 @@ def _compile_overlapped(action, compile_thunk):
     runs — not on the probe's result, so the two legs can run
     concurrently (measured: 8 PageRank supersteps 2.8 s -> 1.9 s).
 
-    Contract: ``compile_thunk`` must be a pure driver-side plan compile
-    (fast_pin + cache registration) that launches NO jobs — all jobs stay
-    on the calling thread, preserving the bench's cancellable job-group
-    protocol. Exceptions from either leg propagate."""
+    ``compile_thunk`` is a plan compile (fast_pin + cache registration).
+    It is NOT job-free: under the engine's AQE default ``toRdd()`` runs the
+    plan's shuffle stages to finalize it (3 jobs measured for a join of two
+    aggregates), and those jobs run on the background thread, outside the
+    caller's job group — a job-group cancel does not stop them. The probe
+    (``action``) and every pin stay on the calling thread. Exceptions from
+    either leg propagate."""
     box: dict = {}
 
     def _bg() -> None:
@@ -138,7 +141,9 @@ class _StateChain:
             self._live = []
             self.last_pinned = True
         else:
-            # fast_pin (r6): zero-job LogicalRDD rebind. A bare cache()
+            # fast_pin (r6): LogicalRDD rebind with no action of its own
+            # (under AQE it still runs the plan's shuffle stages; see
+            # lineage.fast_pin). A bare cache()
             # keeps the full logical tree, and generations referencing
             # their predecessor 2-3x make Catalyst's canonicalization
             # walks grow 4x PER GENERATION (measured: 54 s to plan
@@ -213,36 +218,145 @@ class _StateChain:
         self._live = []
 
 
-def salted_sum(
-    df: DataFrame, key: str, value: str, out: str, buckets: int = 8
-) -> DataFrame:
-    """Two-stage sum: partial per (key, salt) then final per key.
+def _iterate(
+    chain: _StateChain,
+    step: Callable[[DataFrame], DataFrame],
+    state: DataFrame,
+    *,
+    rounds: int | None,
+    probe: Callable[[DataFrame], object] | None = None,
+    done: Callable[[object], bool] | None = None,
+    on_step: Callable[[int, object], None] | None = None,
+) -> tuple[DataFrame, bool, bool]:
+    """The superstep loop of the in-memory kernels: generation k+1 is
+    ``step(generation k)``, starting from ``state``.
 
-    Explicit skew taming for power-law hub keys. The salt spreads rows of
-    one hot key over ``buckets`` reducers; the reference gets the same
-    effect from per-worker local queues + atomic write_add
-    (src/BFS/bfs.h:121-132, src/utils.h:45-63).
+    Without ``probe`` it runs exactly ``rounds`` supersteps and takes no
+    action of its own: the chain executes lazily inside its periodic pins
+    and the caller's final ``seal``. With ``probe``, ONE job per superstep
+    (``probe(generation k)``) materializes generation k and returns the
+    value ``done`` tests, overlapped with the compile of generation k+1
+    (``_StateChain.advance_overlapped``); the loop stops at the first
+    generation that is ``done``, or after ``rounds`` probes (None: no cap).
+    ``on_step(k, value)`` fires once per superstep, k from 1 (value NaN
+    without a probe).
 
-    MEASURED (BASELINE.md): for *algebraic* aggregates Spark's hash
-    aggregation already partial-aggregates map-side, so each reducer
-    receives at most one row per (map partition, key) — hub keys are
-    already tamed, and the salted variant's extra shuffle costs ~3x
-    (32.8s vs 15.5s for 6 PageRank supersteps on 3M edges). Use this only
-    for non-combinable aggregates (collect_list/set, exact quantiles) or
-    under aggregation modes that disable partial combine; PageRank and
-    friends default to the plain aggregate (salt_buckets=0).
-    """
-    partial = (
-        df.withColumn("_salt", F.spark_partition_id() % buckets)
-        .groupBy(key, "_salt")
-        .agg(F.sum(value).alias("_psum"))
-    )
-    return partial.groupBy(key).agg(F.sum("_psum").alias(out))
+    Returns ``(generation, pinned, done)``: the last probed generation (a
+    speculative successor is released by ``seal``), whether it is
+    checkpoint-backed — pass it as ``chain.seal(..., pinned=)`` — and
+    whether ``done`` held."""
+    if rounds == 0:
+        return state, True, False
+    cur = chain.advance(step(state))
+    pinned = chain.last_pinned
+    k = 0
+    while True:
+        k += 1
+        if probe is None:
+            value, finished = float("nan"), False
+        else:
+            value, nxt = chain.advance_overlapped(
+                lambda: step(cur), lambda: probe(cur)
+            )
+            finished = done(value)
+        if on_step:
+            on_step(k, value)
+        if finished or k == rounds:
+            return cur, pinned, finished
+        if probe is None:
+            nxt = chain.advance(step(cur))
+        cur, pinned = nxt, chain.last_pinned
 
 
 # ---------------------------------------------------------------------------
 # PageRank (target kernel)
 # ---------------------------------------------------------------------------
+
+def pagerank_step(
+    edges: DataFrame,
+    cur: DataFrame,
+    *,
+    n: int,
+    damping: float,
+    has_dangling: bool,
+) -> DataFrame:
+    """One PageRank superstep: state ``cur`` (id, out_deg, rank) →
+    (id, out_deg, rank, prev_rank). The one step of ``pagerank`` (both
+    modes) and of ``plans.checkpoints.CheckpointedPageRank``.
+
+    - **One exchange.** The state row rides the SAME union+groupBy
+      aggregate as the messages (the min-label message-combine shape), so
+      no join of the state with the summed messages adds two more. Ids
+      absent from the state (edge targets outside the vertex set) are
+      dropped by the ``prev_rank IS NOT NULL`` filter — exactly left-join
+      semantics.
+    - **Data-independent plan.** The dangling mass enters as a broadcast
+      1-row aggregate over ``cur``, not as a probe-derived literal, so the
+      next superstep's compile can overlap this one's probe. With
+      ``has_dangling=False`` (checked once by the prologue) the branch is
+      dropped.
+    - ``prev_rank`` rides along, so the convergence delta is one aggregate
+      over the new state, not a second O(|V|) join.
+
+    Ranks follow r'(v) = (1-d)/n + d * (Σ_{u→v} r(u)/outdeg(u) +
+    dangling_mass/n); double sums may differ from another plan shape in
+    the last ulp (the class the 6-decimal oracle rounding absorbs).
+    """
+    st = cur.select(
+        "id",
+        "out_deg",
+        F.col("rank").alias("prev_rank"),
+        F.lit(None).cast("double").alias("c"),
+    )
+    s = _hint_state(cur)
+    msgs = edges.join(s, edges.src == s.id).select(
+        edges.dst.alias("id"),
+        F.lit(None).cast("long").alias("out_deg"),
+        F.lit(None).cast("double").alias("prev_rank"),
+        (F.col("rank") / F.col("out_deg")).alias("c"),
+    )
+    agg = (
+        st.unionByName(msgs)
+        .groupBy("id")
+        .agg(
+            F.min("out_deg").alias("out_deg"),
+            F.coalesce(F.sum("c"), F.lit(0.0)).alias("contrib"),
+            F.min("prev_rank").alias("prev_rank"),
+        )
+        .filter(F.col("prev_rank").isNotNull())
+    )
+    if has_dangling:
+        dm = cur.filter("out_deg = 0").agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+        )
+        new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+            F.col("contrib") + F.col("_dm") / F.lit(float(n))
+        )
+        return agg.crossJoin(F.broadcast(dm)).select(
+            "id", "out_deg", new_rank.alias("rank"), "prev_rank"
+        )
+    new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("contrib")
+    return agg.select("id", "out_deg", new_rank.alias("rank"), "prev_rank")
+
+
+def _pagerank_base(
+    edges: DataFrame, vertices: DataFrame
+) -> tuple[DataFrame, int, bool]:
+    """PageRank's prologue → (base, n, has_dangling): ``base`` is the
+    cached (id, out_deg) leaf, materialized by the ONE prologue aggregate
+    that also returns |V| and the dangling count (the left join preserves
+    the vertex count exactly). The caller unpersists ``base``."""
+    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
+    base = fast_pin(
+        vertices.join(deg, vertices.id == deg.src, "left")
+        .select(vertices.id, F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
+    ).cache()
+    row = base.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.when(F.col("out_deg") == 0, 1).otherwise(0)).alias("nd"),
+    ).first()
+    return base, row["n"], row["nd"] > 0
+
 
 def pagerank(
     edges: DataFrame,
@@ -255,241 +369,160 @@ def pagerank(
     # between eager checkpoints are shallow InMemoryRelation reads; 4
     # balances lineage truncation against one materialize job per cycle.
     checkpoint_every: int = 4,
-    salt_buckets: int = 0,  # 0 = plain agg (map-side combine); see salted_sum
     on_superstep: Callable[[int, float], None] | None = None,
 ) -> DataFrame:
-    """PageRank with dangling-mass redistribution.
+    """PageRank with dangling-mass redistribution → (id, rank).
 
-    r'(v) = (1-d)/n + d * (Σ_{u→v} r(u)/outdeg(u) + dangling_mass/n)
+    Runs ``pagerank_step`` until max |Δr| < ``tol`` or for ``iterations``
+    supersteps (whichever comes first when both are given).
 
-    Stop after ``iterations`` supersteps (deterministic, oracle-matched) or
-    when max |Δr| < ``tol``. Returns (id, rank).
+    - ``tol``: ONE job per superstep both materializes the generation and
+      returns its delta, overlapped with the next superstep's compile.
+    - ``tol=None``: no probe at all (deterministic, oracle-matched — the
+      declared query's mode); the generations execute inside the chain's
+      periodic pins and the final pin. ``on_superstep`` receives NaN.
     """
     assert iterations is not None or tol is not None
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # base is a cached leaf materialized by the prologue aggregate below —
-    # ONE prologue job total (r6; was a checkpoint job + vertices.count()
-    # + a separate dangling filter-count). The cache is released when the
-    # kernel returns: the result is checkpoint-backed by then (tol: seal;
-    # iterations: the forced final pin).
-    base = fast_pin(
-        vertices.join(deg, vertices.id == deg.src, "left")
-        .select(vertices.id, F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-    ).cache()
-    # The aggregate returns |V| AND the dangling count (the left join
-    # preserves the vertex count exactly). Web graphs usually have
-    # dangling pages, but when a derived graph has none the whole
-    # dangling branch (scan + broadcast subquery per superstep) is dead
-    # weight — check once up front.
-    row = base.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.when(F.col("out_deg") == 0, 1).otherwise(0)).alias("nd"),
-    ).first()
-    n, n_dangling = row["n"], row["nd"]
-    state = base.withColumn("rank", F.lit(1.0 / n))
+    base, n, has_dangling = _pagerank_base(edges, vertices)
     chain = _StateChain(checkpoint_every)
-    has_dangling = n_dangling > 0
-
     try:
-        if tol is not None:
-            return _pagerank_tol(
-                edges, state, chain,
-                n=n, damping=damping, tol=tol, iterations=iterations,
-                has_dangling=has_dangling,
-                on_superstep=on_superstep,
-            )
-        return _pagerank_iterations(
-            edges, state, chain,
-            n=n, damping=damping, iterations=iterations,
-            has_dangling=has_dangling, salt_buckets=salt_buckets,
-            on_superstep=on_superstep,
+        cur, pinned, _ = _iterate(
+            chain,
+            lambda s: pagerank_step(
+                edges, s, n=n, damping=damping, has_dangling=has_dangling
+            ),
+            base.withColumn("rank", F.lit(1.0 / n)),
+            rounds=iterations,
+            probe=None if tol is None else (
+                lambda s: s.agg(
+                    F.max(F.abs(F.col("rank") - F.col("prev_rank")))
+                ).first()[0]
+            ),
+            done=lambda d: d < tol,
+            on_step=on_superstep,
         )
+        # pin the result BEFORE the generation caches (and base) are
+        # released
+        return chain.seal(cur.select("id", "rank"), pinned=pinned)
     finally:
         base.unpersist()
 
 
-def _pagerank_iterations(
+# ---------------------------------------------------------------------------
+# Min-label supersteps: connected components, label propagation, coloring
+# ---------------------------------------------------------------------------
+
+def min_label_step(
     edges: DataFrame,
-    state: DataFrame,
-    chain: _StateChain,
+    labels: DataFrame,
+    frontier: DataFrame,
+    col: str,
     *,
-    n: int,
-    damping: float,
-    iterations: int,
-    has_dangling: bool,
-    salt_buckets: int,
-    on_superstep: Callable[[int, float], None] | None,
+    pointer_jump: bool = False,
+    hinted: bool = True,
 ) -> DataFrame:
-    """Fixed-iteration PageRank superstep loop (deterministic,
-    oracle-matched — the declared query's mode; aggregation structure
-    unchanged since the oracle hash pinned it)."""
-    it = 0
-    while True:
-        s = _hint_state(state)
-        contribs = (
-            edges.join(s, edges.src == s.id)
-            .select(edges.dst.alias("id"), (F.col("rank") / F.col("out_deg")).alias("c"))
-        )
-        if salt_buckets:
-            sums = salted_sum(contribs, "id", "c", "contrib", salt_buckets)
-        else:
-            sums = contribs.groupBy("id").agg(F.sum("c").alias("contrib"))
-        # The superstep rebuilds every vertex row anyway, so join against the
-        # *previous state* (not the static base) and carry the old rank as a
-        # column — the convergence delta then costs one aggregate over the
-        # new state instead of a second O(|V|) join-shuffle per superstep.
-        prev = state.select("id", "out_deg", F.col("rank").alias("prev_rank"))
-        # dangling mass is also damped: r' = (1-d)/n + d*(contrib + dangling/n)
-        if has_dangling:
-            # Dangling mass stays a (broadcast) 1-row relation — no separate
-            # driver action per superstep; it joins into the same lazy plan.
-            dangling = state.filter("out_deg = 0").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            new_rank = (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("_dm") / F.lit(float(n)))
-            )
-            new_state = (
-                prev.join(sums, "id", "left")
-                .crossJoin(F.broadcast(dangling))
-                .select("id", "out_deg", new_rank.alias("rank"), "prev_rank")
-            )
-        else:
-            new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.coalesce(
-                F.col("contrib"), F.lit(0.0)
-            )
-            new_state = prev.join(sums, "id", "left").select(
-                "id", "out_deg", new_rank.alias("rank"), "prev_rank"
-            )
-        last = iterations is not None and it + 1 >= iterations
-        new_state = chain.advance(new_state, force=last)
+    """One min-label superstep → (id, col, old). The one step of hash-min
+    and two-phase CC, label propagation, ``directed.scc_coloring`` and the
+    checkpointed CC/LPA drivers.
 
-        it += 1
-        if on_superstep:
-            on_superstep(it, float("nan"))
-        state = new_state
-        if it >= iterations:
-            break
+    Every vertex of ``labels`` (id, col) adopts the min of its own label
+    and the labels ``frontier`` (id, col) sends along ``edges`` — the
+    deterministic form of LDD's first-arrival CAS adoption
+    (src/BCC/ldd.h:37-122); the atomic ``write_min`` becomes one
+    ``groupBy(id).agg(min)`` over state rows ∪ messages. ``old`` carries
+    the previous label (min(old) per id is exact: each id has exactly one
+    state row), so the next frontier (``_changed``) costs no extra join or
+    shuffle; ids reached only by messages get ``old`` NULL.
 
-    out = state.select("id", "rank")
-    chain.close()
-    return out
+    Frontier = the vertices whose label changed last round. Per-round
+    labels equal the all-senders form's by monotone-min induction: an
+    unchanged u already delivered label(u) to every neighbor the round it
+    last changed, and labels only decrease.
 
-
-def _pagerank_tol(
-    edges: DataFrame,
-    state: DataFrame,
-    chain: _StateChain,
-    *,
-    n: int,
-    damping: float,
-    tol: float,
-    iterations: int | None,
-    has_dangling: bool,
-    on_superstep: Callable[[int, float], None] | None,
-) -> DataFrame:
-    """Convergence-mode PageRank superstep loop (r6 fused + overlapped).
-
-    Structural changes vs the iteration-mode loop, per guide §2.3/§2.4
-    (fewer exchanges) and §1.2 (fewer, overlapped driver actions):
-
-    - **One exchange per superstep.** The state row rides the SAME
-      union+groupBy aggregate as the messages (the CC/LPA message-combine
-      shape) instead of a second SortMergeJoin of prev⋈sums — the old
-      shape paid 3 Exchanges per superstep (contrib agg + both join
-      sides), this one pays 1. Ids absent from the state (edge targets
-      outside ``vertices``) are dropped by the ``prev_rank IS NOT NULL``
-      filter — exactly the old left-join semantics.
-    - **One job per superstep, overlapped with the next compile.** The
-      new state is cache()-registered (pinned every ``chain.every``
-      generations) and ONE aggregate job both materializes it and returns
-      the convergence delta. Because the superstep plan is
-      DATA-INDEPENDENT — the dangling mass enters as a broadcast scalar
-      aggregate over the previous state, not as a probe-derived literal —
-      superstep k+1's Catalyst compile runs in a background thread while
-      superstep k's probe job executes (``advance_overlapped``): the two
-      legs each cost 0.15-0.4 s at small tiers and used to serialize.
-
-    Results: identical per-vertex rank recurrence (the dangling term is
-    ``Σ rank/ n`` over the same rows either way); double sums may differ
-    in the last ulp from the join/literal shapes (same class as the
-    Spark↔DuckDB fold difference the 6-decimal rounding already absorbs;
-    pinned by the power-iteration allclose property test).
+    ``pointer_jump``: then adopt the label of the label (the label-table
+    self-join shortcut — the declarative ``find_compress`` path halving,
+    external/connectivity.h:7-20): O(log n)-ish rounds on long-diameter
+    graphs. The self-join runs over the full state (O(|V|), and jump
+    targets need not be in the frontier). ``hinted``: apply the state-side
+    join hint — only when ``edges`` is the ingest-partitioned cached table
+    (scc_coloring passes False for its shrunken work graphs).
     """
-
-    def build(cur: DataFrame) -> DataFrame:
-        st = cur.select(
-            "id",
-            "out_deg",
-            F.col("rank").alias("prev_rank"),
-            F.lit(None).cast("double").alias("c"),
+    f = _hint_state(frontier) if hinted else frontier
+    msgs = edges.join(f, edges.src == f.id).select(
+        edges.dst.alias("id"), col, F.lit(None).cast("long").alias("old")
+    )
+    new = (
+        labels.select("id", col, F.col(col).alias("old"))
+        .unionByName(msgs)
+        .groupBy("id")
+        .agg(F.min(col).alias(col), F.min("old").alias("old"))
+    )
+    if pointer_jump:
+        parent = new.select(F.col("id").alias(col), F.col(col).alias("grand"))
+        new = new.join(parent, col, "left").select(
+            "id", F.least(col, "grand").alias(col), "old"
         )
-        s = _hint_state(cur)
-        msgs = edges.join(s, edges.src == s.id).select(
-            edges.dst.alias("id"),
-            F.lit(None).cast("long").alias("out_deg"),
-            F.lit(None).cast("double").alias("prev_rank"),
-            (F.col("rank") / F.col("out_deg")).alias("c"),
+    return new
+
+
+def _changed(col: str):
+    """Next round's senders in a ``min_label_step`` state: the label
+    dropped, or ``old IS NULL`` — round 0's all-senders state, or a vertex
+    that entered via messages only (an edge endpoint absent from the
+    vertex set). Such a vertex has never sent; dropping it would freeze
+    the frontier into a false fixpoint."""
+    return F.col("old").isNull() | (F.col(col) < F.col("old"))
+
+
+def _frontier_size(state: DataFrame, changed) -> int:
+    return state.agg(F.sum(F.when(changed, 1))).first()[0] or 0
+
+
+def _min_label(
+    edges: DataFrame,
+    labels: DataFrame,
+    col: str,
+    *,
+    rounds: int,
+    converge: bool,
+    checkpoint_every: int,
+    pointer_jump: bool = False,
+    hinted: bool = True,
+    on_round: Callable[[int], None] | None = None,
+    who: str = "",
+) -> DataFrame:
+    """``min_label_step`` from ``labels`` (id, col) → pinned (id, col).
+
+    ``converge=False``: exactly ``rounds`` rounds and no probe job — the
+    whole chain executes lazily inside its periodic pins and the final
+    seal. ``converge=True``: until the frontier is empty (no label
+    changed ⟺ fixpoint, labels being monotone), ONE aggregate job per
+    round that materializes the generation and counts the next frontier,
+    overlapped with the next round's compile; raises if ``rounds`` rounds
+    do not reach it — unconverged labels would silently be wrong
+    components. ``on_round(i)`` fires per round, i from 0."""
+    changed = _changed(col)
+    chain = _StateChain(checkpoint_every)
+    cur, pinned, converged = _iterate(
+        chain,
+        lambda s: min_label_step(
+            edges, s, s.filter(changed), col,
+            pointer_jump=pointer_jump, hinted=hinted,
+        ),
+        labels.withColumn("old", F.lit(None).cast("long")),
+        rounds=rounds,
+        probe=(lambda s: _frontier_size(s, changed)) if converge else None,
+        done=lambda nf: nf == 0,
+        on_step=on_round and (lambda k, _: on_round(k - 1)),
+    )
+    if converge and not converged:
+        chain.close()
+        raise RuntimeError(
+            f"{who}: labels still changing after {rounds} supersteps; "
+            "raise max_iterations (long-diameter graph)"
         )
-        agg = (
-            st.unionByName(msgs)
-            .groupBy("id")
-            .agg(
-                F.min("out_deg").alias("out_deg"),
-                F.coalesce(F.sum("c"), F.lit(0.0)).alias("contrib"),
-                F.min("prev_rank").alias("prev_rank"),
-            )
-            .filter(F.col("prev_rank").isNotNull())
-        )
-        if has_dangling:
-            # 1-row broadcast relation; joins into the same lazy plan, so
-            # the plan needs nothing from the previous probe (the price of
-            # a literal was a compile/probe data dependency).
-            dm = cur.filter("out_deg = 0").agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-            )
-            new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-                F.col("contrib") + F.col("_dm") / F.lit(float(n))
-            )
-            return agg.crossJoin(F.broadcast(dm)).select(
-                "id", "out_deg", new_rank.alias("rank"), "prev_rank"
-            )
-        new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("contrib")
-        return agg.select("id", "out_deg", new_rank.alias("rank"), "prev_rank")
+    return chain.seal(cur.select("id", col), pinned=pinned)
 
-    cur = chain.advance(build(state))
-    cur_pinned = chain.last_pinned
-    it = 0
-    while True:
-        it += 1
-        # Probe superstep ``it`` (materializes its cache, returns the
-        # convergence delta) while speculatively compiling superstep
-        # ``it+1`` against its leaf. On the converging superstep the
-        # speculative generation is simply never executed (its cache is
-        # registered but unmaterialized; seal releases it).
-        row, nxt = chain.advance_overlapped(
-            lambda: build(cur),
-            lambda: cur.agg(
-                F.max(F.abs(F.col("rank") - F.col("prev_rank"))).alias("d")
-            ).first(),
-        )
-        delta = row["d"]
-        if on_superstep:
-            on_superstep(it, delta)
-        if delta < tol or (iterations and it >= iterations):
-            break
-        cur, cur_pinned = nxt, chain.last_pinned
-
-    # The final generation may be cache()-registered (not pinned): seal
-    # pins the result BEFORE the generation caches are released.
-    return chain.seal(cur.select("id", "rank"), pinned=cur_pinned)
-
-
-# ---------------------------------------------------------------------------
-# Connected components (target kernel)
-# ---------------------------------------------------------------------------
 
 def connected_components(
     sym: DataFrame,
@@ -504,94 +537,19 @@ def connected_components(
 
     component = min vertex id in the component (canonical labels — the
     deterministic replacement for the reference's CAS-race labels,
-    SURVEY.md §7.4). Pointer-jumping (label-of-label shortcut) gives
-    O(log n)-ish rounds on long-diameter graphs — the declarative analog of
-    ``find_compress`` path halving (external/connectivity.h:7-20).
-
-    Frontier-based message passing (fused delta, same induction as
-    ``label_propagation``): only vertices whose label changed last round
-    (by relaxation OR pointer jump) send, so late rounds — when most of
-    the graph has settled — shuffle frontier-incident edges instead of
-    |E|. A stalled frontier is a true fixpoint: any u that still
-    disagreed with a neighbor would have delivered its final label the
-    round it last changed. The pointer-jump self-join stays over the full
-    state (it is O(|V|), not O(|E|), and jump targets need not be in the
-    frontier).
+    SURVEY.md §7.4; semantics of ``get_cc`` union-find,
+    external/connectivity.h:41-59). ``min_label_step`` with pointer
+    jumping, to a fixpoint: frontier messaging means late rounds — when
+    most of the graph has settled — shuffle frontier-incident edges
+    instead of |E|. Raises after ``max_iterations`` rounds without a
+    fixpoint (use ``connected_components_two_phase`` on long-diameter
+    graphs).
     """
-    def step(labels: DataFrame, frontier: DataFrame) -> DataFrame:
-        f = _hint_state(frontier)
-        msgs = (
-            sym.join(f, sym.src == f.id)
-            .select(
-                sym.dst.alias("id"),
-                "component",
-                F.lit(None).cast("long").alias("old"),
-            )
-        )
-        st = labels.select("id", "component", F.col("component").alias("old"))
-        new = (
-            st.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"), F.min("old").alias("old"))
-        )
-        if pointer_jump:
-            parent = new.select(
-                F.col("id").alias("component"), F.col("component").alias("grand")
-            )
-            new = (
-                new.join(parent, "component", "left")
-                .select(
-                    "id",
-                    F.least("component", "grand").alias("component"),
-                    "old",
-                )
-            )
-        return new
-
-    # ``old IS NULL`` = the vertex entered the state via messages only
-    # (an edge endpoint absent from ``vertices``): it has never sent,
-    # so it must be a sender next round — dropping it would freeze the
-    # frontier into a false fixpoint (same rule as sssp's frontier)
-    changed = F.col("old").isNull() | (F.col("component") < F.col("old"))
-    labels0 = vertices.select("id", vertices.id.alias("component"))
-    chain = _StateChain(checkpoint_every)
-    # round 0: every vertex is a sender
-    cur = chain.advance(step(labels0, labels0))
-    cur_pinned = chain.last_pinned
-    converged = False
-    for it in range(max_iterations):
-        # ONE aggregate job per round (r6): materializes the generation
-        # AND counts the next frontier — OVERLAPPED with the next round's
-        # Catalyst compile (the next plan depends only on this
-        # generation's leaf, never on the probe's count). Zero frontier ⟺
-        # no label changed ⟺ fixpoint (labels are monotone
-        # non-increasing); on the converged round the speculative
-        # generation is discarded unexecuted.
-        row, nxt = chain.advance_overlapped(
-            lambda: step(
-                cur.select("id", "component"),
-                cur.filter(changed).select("id", "component"),
-            ),
-            lambda: cur.agg(F.sum(F.when(changed, 1)).alias("nf")).first(),
-        )
-        n_frontier = row["nf"] or 0
-        converged = n_frontier == 0
-        if on_round:
-            on_round(it)
-        if converged:
-            break
-        cur, cur_pinned = nxt, chain.last_pinned
-    if not converged:
-        chain.close()
-        # Raise-don't-truncate (same policy as reachability,
-        # directed.py:57-62): silently returning unconverged labels would
-        # hand callers wrong components on a >budget-diameter graph.
-        raise RuntimeError(
-            f"connected_components: labels still changing after "
-            f"{max_iterations} supersteps; raise max_iterations "
-            "(long-diameter graph) or use connected_components_two_phase"
-        )
-    return chain.seal(cur.select("id", "component"), pinned=cur_pinned)
+    return _min_label(
+        sym, vertices.select("id", vertices.id.alias("component")), "component",
+        rounds=max_iterations, converge=True, checkpoint_every=checkpoint_every,
+        pointer_jump=pointer_jump, on_round=on_round, who="connected_components",
+    )
 
 
 def connected_components_two_phase(
@@ -622,14 +580,11 @@ def connected_components_two_phase(
     src/utils/diameter.tsv:8-9) no longer need O(diameter) supersteps.
     Labels are canonical min-ids, identical to ``connected_components``.
 
-    Frontier-based shrink messaging (r6, the hash-min/LPA induction):
-    only vertices whose label changed last round (relaxation OR pointer
-    jump) send, so rounds 2..k shuffle frontier-incident edges instead of
-    |E|. Per-round labels are identical to the all-senders form (monotone
-    min: an unchanged u already delivered its label the round it last
-    changed) — and even a different phase-1 labeling could not change the
-    result, because phase 2 finishes connectivity exactly from ANY
-    labeling whose residual fits the budget.
+    The shrink rounds are ``min_label_step`` with pointer jumping: rounds
+    2..k shuffle frontier-incident edges instead of |E| — and even a
+    different phase-1 labeling could not change the result, because phase
+    2 finishes connectivity exactly from ANY labeling whose residual fits
+    the budget.
 
     Budget probe (r6 second wave, = ``connected_components_auto``'s fast
     path): when the deduped pair count provably fits the driver budget
@@ -645,50 +600,19 @@ def connected_components_two_phase(
     """
     if m_upper is None:
         m_upper = sym.count()
+    identity = vertices.select("id", vertices.id.alias("component"))
     if m_upper <= 2 * max_residual:
-        identity = vertices.select("id", vertices.id.alias("component"))
         return cc_phase2_union_find(
             sym, identity, max_residual=max_residual,
             context="(two-phase: direct driver union-find)",
             identity_labels=True,
         )
-    labels = vertices.select("id", vertices.id.alias("component"))
-    frontier = labels  # round 0: every vertex is a sender
-    chain = _StateChain(checkpoint_every)
-    for it in range(shrink_rounds):
-        f = _hint_state(frontier)
-        msgs = (
-            sym.join(f, sym.src == f.id)
-            .select(
-                sym.dst.alias("id"),
-                "component",
-                F.lit(None).cast("long").alias("old"),
-            )
-        )
-        st = labels.select("id", "component", F.col("component").alias("old"))
-        new = (
-            st.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"), F.min("old").alias("old"))
-        )
-        parent = new.select(
-            F.col("id").alias("component"), F.col("component").alias("grand")
-        )
-        new = (
-            new.join(parent, "component", "left")
-            .select("id", F.least("component", "grand").alias("component"), "old")
-        )
-        new = chain.advance(new)
-        frontier = new.filter(
-            F.col("old").isNull() | (F.col("component") < F.col("old"))
-        ).select("id", "component")
-        labels = new.select("id", "component")
-        if on_round:
-            on_round(it)
-    # seal: pin the final labeling (it feeds three references in phase 2)
-    # and release the generation caches. NO per-round driver action was
-    # paid: the whole shrink chain executes lazily inside this one job.
-    labels = chain.seal(labels)
+    # NO per-round driver action: the whole shrink chain executes lazily
+    # inside the final pin (the labeling feeds three references in phase 2)
+    labels = _min_label(
+        sym, identity, "component", rounds=shrink_rounds, converge=False,
+        checkpoint_every=checkpoint_every, pointer_jump=True, on_round=on_round,
+    )
     return cc_phase2_union_find(
         sym, labels, max_residual=max_residual,
         context=f"after {shrink_rounds} shrink rounds",
@@ -849,45 +773,12 @@ def label_propagation(
     (src/BCC/ldd.h:37-122). After k rounds label(v) = min id within v's
     k-hop closed neighborhood (the oracle-checkable invariant).
 
-    Frontier-based message passing (fused delta, same pattern as
-    ``pagerank``'s carried prev_rank): only vertices whose label CHANGED
-    last round send messages, so per-round message volume is
-    frontier-incident edges, not |E|. Per-round labels are identical to
-    the all-senders formulation by monotone-min induction — a vertex u
-    that did not change at round k-1 already delivered label(u) to every
-    neighbor the round it last changed, and labels only decrease, so the
-    neighbor folded it in. The previous label rides the state as ``old``
-    (min(old) per group is exact: each id has exactly one state row), so
-    frontier detection costs no extra join or shuffle.
+    ``min_label_step`` for exactly ``rounds`` rounds, no probe job.
     """
-    labels = vertices.select("id", vertices.id.alias("label"))
-    frontier = labels  # round 0: every vertex is a sender
-    chain = _StateChain(checkpoint_every)
-    label_t = dict(labels.dtypes)["label"]
-    for it in range(rounds):
-        f = _hint_state(frontier)
-        msgs = (
-            sym.join(f, sym.src == f.id)
-            .select(
-                sym.dst.alias("id"),
-                "label",
-                F.lit(None).cast(label_t).alias("old"),
-            )
-        )
-        st = labels.select("id", "label", F.col("label").alias("old"))
-        state = (
-            st.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-        )
-        state = chain.advance(state, force=(it == rounds - 1))
-        labels = state.select("id", "label")
-        # old IS NULL: message-only vertex (endpoint absent from
-        # ``vertices``) — never sent yet, keep it in the frontier
-        frontier = state.filter(
-            F.col("old").isNull() | (F.col("label") < F.col("old"))
-        ).select("id", "label")
-    return labels
+    return _min_label(
+        sym, vertices.select("id", vertices.id.alias("label")), "label",
+        rounds=rounds, converge=False, checkpoint_every=checkpoint_every,
+    )
 
 
 def ldd(
@@ -940,42 +831,45 @@ def ldd(
     state = vertices.select(
         "id", (start.cast("long") * big + F.col("id")).alias("key")
     )
-    # Frontier-based (fused delta, same induction as label_propagation):
-    # an unchanged u's message ``key(u) + 2^32`` is itself unchanged, so
-    # it was already delivered the round u last changed — only changed
-    # keys send. Per-round keys identical to the all-senders form.
-    frontier = state
+    # Frontier-based (fused delta, same induction as min_label_step): an
+    # unchanged u's message ``key(u) + 2^32`` is itself unchanged, so it
+    # was already delivered the round u last changed — only changed keys
+    # send. Per-round keys identical to the all-senders form.
     cap_key = (radius_cap + 1) * 2 ** 32
-    chain = _StateChain(3)
-    for r in range(radius_cap):
-        f = _hint_state(frontier)
+    changed = _changed("key")
+
+    def step(full: DataFrame) -> DataFrame:
+        f = _hint_state(full.filter(changed))
         msgs = (
             sym.join(f, sym.src == f.id)
             .select(sym.dst.alias("id"), (F.col("key") + big).alias("key"))
             .filter(F.col("key") < F.lit(cap_key))
             .withColumn("old", F.lit(None).cast("long"))
         )
-        st = state.select("id", "key", F.col("key").alias("old"))
-        # cache + zero-job rebind per round, real pin every 3rd (r6, was
-        # an eager checkpoint job EVERY round): the fixed-radius loop has
-        # no convergence probes, so the whole wave executes lazily in the
-        # periodic pin jobs.
-        full = chain.advance(
-            st.unionByName(msgs)
+        return (
+            full.select("id", "key", F.col("key").alias("old"))
+            .unionByName(msgs)
             .groupBy("id")
             .agg(F.min("key").alias("key"), F.min("old").alias("old"))
         )
-        state = full.select("id", "key")
-        frontier = full.filter(
-            F.col("old").isNull() | (F.col("key") < F.col("old"))
-        ).select("id", "key")
+
+    # cache + rebind per round, real pin every 3rd (r6, was an eager
+    # checkpoint job EVERY round): the fixed-radius loop has no
+    # convergence probes, so the whole wave executes lazily in the
+    # periodic pin jobs.
+    chain = _StateChain(3)
+    state, pinned, _ = _iterate(
+        chain, step, state.withColumn("old", F.lit(None).cast("long")),
+        rounds=radius_cap,
+    )
     return chain.seal(
         state.select(
             "id",
             (F.col("key") % big).alias("label"),
             # exact integer unpack (shiftright, not double-division floor)
             F.shiftright(F.col("key"), 32).cast("long").alias("cost"),
-        )
+        ),
+        pinned=pinned,
     )
 
 
@@ -1150,10 +1044,7 @@ def sssp(
     summation, so double results are bit-stable across partitionings and
     match a sequential Dijkstra exactly (tests/test_kernels.py).
     """
-    spark = wedges.sparkSession
-    wtype = dict(wedges.dtypes)["w"]
-    zero = 0.0 if wtype in ("double", "float") else 0
-    dist0 = spark.createDataFrame([(source, zero)], f"id long, dist {wtype}")
+    dist0, wtype = _sssp_source(wedges, source)
 
     # Frontier-based relaxation (the reference's frontier semantics,
     # sssp.h:196-236, and this engine's fused-delta pattern): only
@@ -1179,29 +1070,19 @@ def sssp(
             .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
         )
 
-    # newly reached (old is null) or improved (dist < old) → frontier
-    changed = F.col("old").isNull() | (F.col("dist") < F.col("old"))
+    # newly reached (old is null) or improved (dist < old) → frontier.
+    # ONE aggregate job per superstep (r6): materializes the generation and
+    # counts senders, overlapped with the next superstep's compile.
+    changed = _changed("dist")
     chain = _StateChain(max(2, checkpoint_every))
-    cur = chain.advance(step(dist0, dist0))
-    cur_pinned = chain.last_pinned
-    converged = False
-    for it in range(max_iterations):
-        # ONE aggregate job per superstep (r6): materializes the
-        # generation and counts senders — overlapped with the next
-        # superstep's Catalyst compile (the relax plan depends only on
-        # this generation's leaf; the speculative generation is discarded
-        # unexecuted on the converged round).
-        row, nxt = chain.advance_overlapped(
-            lambda: step(
-                cur.select("id", "dist"),
-                cur.filter(changed).select("id", "dist"),
-            ),
-            lambda: cur.agg(F.sum(F.when(changed, 1)).alias("nf")).first(),
-        )
-        converged = (row["nf"] or 0) == 0
-        if converged:
-            break
-        cur, cur_pinned = nxt, chain.last_pinned
+    cur, pinned, converged = _iterate(
+        chain,
+        lambda s: step(s, s.filter(changed)),
+        dist0.withColumn("old", F.lit(None).cast(wtype)),
+        rounds=max_iterations,
+        probe=lambda s: _frontier_size(s, changed),
+        done=lambda nf: nf == 0,
+    )
     if not converged:
         chain.close()
         # Raise-don't-truncate (the CC/min-label policy): frozen tentative
@@ -1211,7 +1092,43 @@ def sssp(
             "supersteps; raise max_iterations (long-diameter or "
             "small-weight graph)"
         )
-    return chain.seal(cur.select("id", "dist"), pinned=cur_pinned)
+    return chain.seal(cur.select("id", "dist"), pinned=pinned)
+
+
+def _sssp_source(wedges: DataFrame, source: int) -> tuple[DataFrame, str]:
+    """(the one-row source state (id, dist), dist's type): ``dist`` adopts
+    the weight type (``-DFLOAT`` parity)."""
+    wtype = dict(wedges.dtypes)["w"]
+    zero = 0.0 if wtype in ("double", "float") else 0
+    state = wedges.sparkSession.createDataFrame(
+        [(source, zero)], f"id long, dist {wtype}"
+    )
+    return state, wtype
+
+
+def _bucket_relax(
+    wedges: DataFrame, dist: DataFrame, in_frontier, *, cap, wtype: str
+) -> DataFrame:
+    """One Δ/ρ-stepping superstep over (id, dist, rat): the vertices
+    ``in_frontier`` relax their out-edges and record the dist they relaxed
+    at as ``rat``. Each id has exactly one state row, so min(rat) (nulls
+    skipped) is exactly that row's marker."""
+    frontier = _hint_state(dist.filter(in_frontier).select("id", "dist"))
+    relaxed = (
+        wedges.join(frontier, wedges.src == frontier.id)
+        .select(wedges.dst.alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
+        .filter(F.col("dist") <= cap)
+        .withColumn("rat", F.lit(None).cast(wtype))
+    )
+    st = dist.select(
+        "id", "dist",
+        F.when(in_frontier, F.col("dist")).otherwise(F.col("rat")).alias("rat"),
+    )
+    return (
+        st.unionByName(relaxed)
+        .groupBy("id")
+        .agg(F.min("dist").alias("dist"), F.min("rat").alias("rat"))
+    )
 
 
 def sssp_delta_stepping(
@@ -1233,12 +1150,8 @@ def sssp_delta_stepping(
     physical superstep schedule differs. Weight-type generic like
     ``sssp`` (``-DFLOAT`` parity; same per-path-fold determinism stance).
     """
-    spark = wedges.sparkSession
-    wtype = dict(wedges.dtypes)["w"]
-    zero = 0.0 if wtype in ("double", "float") else 0
-    dist = spark.createDataFrame(
-        [(source, zero)], f"id long, dist {wtype}"
-    ).transform(pin)
+    dist, wtype = _sssp_source(wedges, source)
+    dist = dist.transform(pin)
     # ``rat`` = the tentative distance at which a vertex LAST relaxed its
     # out-edges (null = never relaxed). The active frontier is
     # sub-threshold vertices whose dist improved since they last relaxed
@@ -1270,23 +1183,8 @@ def sssp_delta_stepping(
                 break
             threshold = (int(row["mu"] // delta) + 1) * delta
             continue
-        frontier = _hint_state(dist.filter(in_frontier).select("id", "dist"))
-        relaxed = (
-            wedges.join(frontier, wedges.src == frontier.id)
-            .select(wedges.dst.alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
-            .filter(F.col("dist") <= cap)
-            .withColumn("rat", F.lit(None).cast(wtype))
-        )
-        st = dist.select(
-            "id", "dist",
-            F.when(in_frontier, F.col("dist")).otherwise(F.col("rat")).alias("rat"),
-        )
         dist = chain.advance(
-            st.unionByName(relaxed)
-            .groupBy("id")
-            # each id has exactly one state row, so min(rat) (nulls
-            # skipped) is exactly that row's marker
-            .agg(F.min("dist").alias("dist"), F.min("rat").alias("rat"))
+            _bucket_relax(wedges, dist, in_frontier, cap=cap, wtype=wtype)
         )
     if not converged:
         # probe-before-raise (ADVICE r3 boundary rule): the budget may
@@ -1322,12 +1220,8 @@ def sssp_rho_stepping(
     ``sssp`` / ``sssp_delta_stepping`` (same cap semantics); only the
     physical superstep schedule differs, so the same SQL oracle applies.
     """
-    spark = wedges.sparkSession
-    wtype = dict(wedges.dtypes)["w"]
-    zero = 0.0 if wtype in ("double", "float") else 0
-    dist = spark.createDataFrame(
-        [(source, zero)], f"id long, dist {wtype}"
-    ).transform(pin)
+    dist, wtype = _sssp_source(wedges, source)
+    dist = dist.transform(pin)
     # every dist <= settled_upto is final (positive weights); inclusive
     # bound so the rule is weight-type generic (``-DFLOAT`` parity) —
     # identical bucket schedule to the old ``int(top) + 1`` exclusive
@@ -1365,27 +1259,8 @@ def sssp_rho_stepping(
             )
             if not nf:
                 break
-            frontier = _hint_state(dist.filter(in_frontier).select("id", "dist"))
-            relaxed = (
-                wedges.join(frontier, wedges.src == frontier.id)
-                .select(
-                    wedges.dst.alias("id"), (F.col("dist") + F.col("w")).alias("dist")
-                )
-                .filter(F.col("dist") <= cap)
-                .withColumn("rat", F.lit(None).cast(wtype))
-            )
-            st = dist.select(
-                "id", "dist",
-                F.when(in_frontier, F.col("dist"))
-                .otherwise(F.col("rat"))
-                .alias("rat"),
-            )
             dist = chain.advance(
-                st.unionByName(relaxed)
-                .groupBy("id")
-                # one state row per id → min(rat) (nulls skipped) is
-                # exactly that row's marker
-                .agg(F.min("dist").alias("dist"), F.min("rat").alias("rat"))
+                _bucket_relax(wedges, dist, in_frontier, cap=cap, wtype=wtype)
             )
         settled_upto = top
         if settled_upto >= cap:

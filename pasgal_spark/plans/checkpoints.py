@@ -2,24 +2,26 @@
 
 The north_rule requires iterative kernels to be (a) resumable from a
 checkpoint and (b) observable via per-superstep convergence metrics and
-per-partition lineage records. This module provides the production wrapper
-around the in-memory kernels of ``pasgal_spark.graph.kernels``:
+per-partition lineage records. The drivers here run the kernels' own
+supersteps (``kernels.pagerank_step``, ``kernels.min_label_step``) through
+ONE loop, ``_Resumable._loop``: per superstep it runs the step, pins the
+new state and probes it with one aggregate (PageRank's max |Δr|, CC's
+label-sum potential, LPA's frontier size), then commits in this order:
 
-- state is written to parquet every ``checkpoint_every`` supersteps
-  (on a cluster this directory would be an Iceberg table; parquet keeps the
-  sandbox dependency-free while exercising the same write-ahead pattern);
-- a JSON run manifest (run_id, superstep, checkpoint path) is atomically
-  replaced after each successful checkpoint — the analog of an Iceberg
-  snapshot pointer;
-- a ``metrics`` parquet table accumulates one row per (superstep,
-  partition) with row counts (lineage) plus one summary row per superstep
-  with the convergence delta and wall time — the Spark translation of the
-  reference's TSV metric sinks (/root/reference/src/BFS/bfs.cpp:30-32).
+1. the state as parquet, ``<workdir>/state_%05d`` (every
+   ``checkpoint_every`` supersteps and at convergence; on a cluster an
+   Iceberg table);
+2. ``<workdir>/MANIFEST.json`` (run_id, superstep, state path, probe
+   value), atomically replaced — the analog of an Iceberg snapshot pointer;
+3. one ``<workdir>/metrics`` row per (superstep, partition): row counts
+   (lineage), the probe value and the wall time — the Spark translation of
+   the reference's TSV metric sinks (src/BFS/bfs.cpp:30-32).
 
-Restart semantics: constructing ``CheckpointedPageRank`` over a directory
-holding a manifest resumes from the recorded superstep; the final result is
-identical to an uninterrupted run because each superstep is a pure function
-of the previous state (verified by tests/test_resume.py).
+A driver constructed over a directory holding a manifest resumes from the
+recorded superstep; the result is identical to an uninterrupted run because
+each superstep is a pure function of the previous state
+(tests/test_resume_streaming.py). Supersteps replayed after the manifest
+were already recorded, so each gets its metrics rows once per run_id.
 """
 
 from __future__ import annotations
@@ -28,13 +30,20 @@ import json
 import os
 import time
 from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pasgal_spark.graph.kernels import (
+    _changed,
+    _frontier_size,
+    _pagerank_base,
+    cc_phase2_union_find,
+    min_label_step,
+    pagerank_step,
+)
 from pasgal_spark.plans.lineage import pin
-
-from pasgal_spark.graph.kernels import cc_phase2_union_find, salted_sum
 
 
 @dataclass
@@ -60,29 +69,85 @@ class RunManifest:
         os.replace(tmp, os.path.join(path, "MANIFEST.json"))
 
 
+class _Resumable:
+    """Base of the resumable drivers: workdir, metrics and the loop."""
 
-def _append_lineage_metrics(
-    workdir: str, run_id: str, superstep: int, state: "DataFrame",
-    delta: float, wall_ms: float,
-) -> None:
-    """One metrics row per (superstep, partition): row counts (lineage)
-    plus the run's convergence delta and wall time — the single shared
-    sink for every checkpointed driver (north_rule: per-partition lineage
-    + per-superstep convergence metrics)."""
-    lineage = (
-        state.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("superstep", F.lit(superstep))
-        .withColumn("delta", F.lit(float(delta)))
-        .withColumn("wall_ms", F.lit(wall_ms))
-        .select("run_id", "superstep", "partition_id", "rows", "delta", "wall_ms")
+    def __init__(self, spark: SparkSession, workdir: str, run_id: str) -> None:
+        self.spark = spark
+        self.workdir = workdir
+        self.run_id = run_id
+        self._metrics_path = os.path.join(workdir, "metrics")
+
+    def metrics(self) -> DataFrame:
+        return self.spark.read.parquet(self._metrics_path)
+
+    def _loop(
+        self,
+        *,
+        initial: Callable[[], DataFrame],
+        step: Callable[[DataFrame], DataFrame],
+        probe: Callable[[DataFrame], float | None],
+        supersteps: int,
+        every: int = 1,
+        done: Callable[[float], bool] = lambda value: False,
+    ) -> DataFrame:
+        """Run (or resume) up to superstep ``supersteps``, stopping at the
+        first probe value that is ``done``; returns the last state."""
+        manifest = RunManifest.load(self.workdir)
+        if manifest is None:
+            state, it = initial(), 0
+        else:
+            state = self.spark.read.parquet(manifest.state_path)
+            it = manifest.superstep
+        recorded = 0  # the replay guard: supersteps already in metrics
+        if os.path.exists(self._metrics_path):
+            recorded = self.metrics().filter(F.col("run_id") == self.run_id).agg(
+                F.max("superstep")
+            ).first()[0] or 0
+        while it < supersteps:
+            t0 = time.time()
+            state = step(state).transform(pin)
+            # empty state => aggregates are NULL; the manifest needs a float
+            value = float(probe(state) or 0)
+            it += 1
+            finished = done(value)
+            if it % every == 0 or finished:
+                path = os.path.join(self.workdir, f"state_{it:05d}")
+                state.write.mode("overwrite").parquet(path)
+                RunManifest(self.run_id, it, path, value).save(self.workdir)
+            if it > recorded:
+                wall_ms = (time.time() - t0) * 1000
+                (
+                    state.groupBy(F.spark_partition_id().alias("partition_id"))
+                    .agg(F.count(F.lit(1)).alias("rows"))
+                    .select(
+                        F.lit(self.run_id).alias("run_id"),
+                        F.lit(it).alias("superstep"),
+                        "partition_id",
+                        "rows",
+                        F.lit(value).alias("delta"),
+                        F.lit(wall_ms).alias("wall_ms"),
+                    )
+                    .write.mode("append")
+                    .parquet(self._metrics_path)
+                )
+            if finished:
+                break
+        return state
+
+
+def _identity_labels(vertices: DataFrame, col: str) -> DataFrame:
+    """Round-0 ``min_label_step`` state: every vertex its own label, and
+    ``old`` NULL so every vertex sends in the first round."""
+    return vertices.select(
+        "id", vertices.id.alias(col), F.lit(None).cast("long").alias("old")
     )
-    lineage.write.mode("append").parquet(os.path.join(workdir, "metrics"))
 
 
-class CheckpointedPageRank:
-    """PageRank with parquet checkpoints, resume, and metrics records."""
+class CheckpointedPageRank(_Resumable):
+    """PageRank with parquet checkpoints, resume, and metrics records:
+    ``kernels.pagerank_step`` until max |Δr| < tol, the state checkpointed
+    every ``checkpoint_every`` supersteps and at convergence."""
 
     def __init__(
         self,
@@ -94,138 +159,42 @@ class CheckpointedPageRank:
         run_id: str = "pagerank",
         damping: float = 0.85,
         checkpoint_every: int = 5,
-        salt_buckets: int = 0,  # see kernels.salted_sum: plain agg is faster
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, workdir, run_id)
         self.edges = edges
-        self.workdir = workdir
-        self.run_id = run_id
         self.damping = damping
         self.checkpoint_every = checkpoint_every
-        self.salt_buckets = salt_buckets
-
-        self.n = vertices.count()
-        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-        self.base = (
-            vertices.join(deg, vertices.id == deg.src, "left")
-            .select(vertices.id, F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-            .transform(pin)
-        )
-
-    # -- metrics ------------------------------------------------------------
-
-    def _record_metrics(self, superstep: int, state: DataFrame, delta: float, wall_ms: float) -> None:
-        _append_lineage_metrics(
-            self.workdir, self.run_id, superstep, state, delta, wall_ms
-        )
-
-    def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, "metrics"))
-
-    # -- superstep ----------------------------------------------------------
-
-    def _superstep(self, state: DataFrame) -> DataFrame:
-        """One superstep; the result carries ``prev_rank`` so the convergence
-        delta is a single aggregate over the new state (no second O(|V|)
-        join-shuffle per superstep)."""
-        dangling = state.filter("out_deg = 0").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-        )
-        contribs = (
-            self.edges.join(state, self.edges.src == state.id)
-            .select(
-                self.edges.dst.alias("id"),
-                (F.col("rank") / F.col("out_deg")).alias("c"),
-            )
-        )
-        if self.salt_buckets:
-            sums = salted_sum(contribs, "id", "c", "contrib", self.salt_buckets)
-        else:
-            sums = contribs.groupBy("id").agg(F.sum("c").alias("contrib"))
-        new_rank = (
-            F.lit((1.0 - self.damping) / self.n)
-            + F.lit(self.damping)
-            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("_dm") / F.lit(float(self.n)))
-        )
-        prev = state.select("id", "out_deg", F.col("rank").alias("prev_rank"))
-        return (
-            prev.join(sums, "id", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("id", "out_deg", new_rank.alias("rank"), "prev_rank")
-        )
-
-    def _state_path(self, superstep: int) -> str:
-        return os.path.join(self.workdir, f"state_{superstep:05d}")
-
-    def _checkpoint(self, state: DataFrame, superstep: int, delta: float) -> DataFrame:
-        path = self._state_path(superstep)
-        state.write.mode("overwrite").parquet(path)
-        RunManifest(self.run_id, superstep, path, delta).save(self.workdir)
-        return self.spark.read.parquet(path)
-
-    # -- driver loop ----------------------------------------------------------
+        self.base, self.n, self.has_dangling = _pagerank_base(edges, vertices)
 
     def run(self, *, tol: float = 1e-6, max_supersteps: int = 200) -> DataFrame:
         """Run (or resume) to convergence; returns (id, rank)."""
-        manifest = RunManifest.load(self.workdir)
-        if manifest is not None:
-            state = self.spark.read.parquet(manifest.state_path)
-            it = manifest.superstep
-        else:
-            state = self.base.withColumn("rank", F.lit(1.0 / self.n))
-            it = 0
-
-        # Supersteps recomputed between the last checkpoint and a crash point
-        # were already metrics-recorded by the previous attempt — skip
-        # re-recording them so (run_id, superstep) rows stay unique and
-        # lineage sums aren't double-counted on resume.
-        recorded_upto = 0
-        metrics_path = os.path.join(self.workdir, "metrics")
-        if manifest is not None and os.path.exists(metrics_path):
-            row = (
-                self.spark.read.parquet(metrics_path)
-                .filter(F.col("run_id") == self.run_id)
-                .agg(F.max("superstep"))
-                .first()
-            )
-            recorded_upto = row[0] or 0
-
-        while it < max_supersteps:
-            t0 = time.time()
-            new_state = self._superstep(state).transform(pin)
-            # prev_rank rides along in the superstep output: the delta is one
-            # aggregate over cached blocks, not a join against the old state.
-            delta = new_state.agg(
-                F.max(F.abs(F.col("rank") - F.col("prev_rank")))
-            ).first()[0]
-            it += 1
-            wall_ms = (time.time() - t0) * 1000
-            if it > recorded_upto:
-                self._record_metrics(it, new_state, delta, wall_ms)
-            new_state = new_state.select("id", "out_deg", "rank")
-            if it % self.checkpoint_every == 0 or delta < tol:
-                state = self._checkpoint(new_state, it, delta)
-            else:
-                state = new_state
-            if delta < tol:
-                break
-        return state.select("id", "rank")
+        try:
+            return self._loop(
+                initial=lambda: self.base.withColumn("rank", F.lit(1.0 / self.n)),
+                step=lambda s: pagerank_step(
+                    self.edges, s,
+                    n=self.n, damping=self.damping, has_dangling=self.has_dangling,
+                ),
+                probe=lambda s: s.agg(
+                    F.max(F.abs(F.col("rank") - F.col("prev_rank")))
+                ).first()[0],
+                supersteps=max_supersteps,
+                every=self.checkpoint_every,
+                done=lambda delta: delta < tol,
+            ).select("id", "rank")
+        finally:
+            self.base.unpersist()
 
 
-class CheckpointedConnectedComponents:
+class CheckpointedConnectedComponents(_Resumable):
     """Two-phase connected components with parquet checkpoints, resume, and
     per-superstep metrics — the resumable driver for
     ``kernels.connected_components_two_phase`` (same semantics: canonical
     min-id labels; FIXED shrink superstep count + driver union-find,
-    reference src/BCC/connectivity.h:44-107).
-
-    Resumability: each shrink superstep checkpoints the label state and
-    manifest; a restart replays from the recorded superstep and produces
-    the identical labeling because every superstep is a pure function of
-    the previous labels (verified by tests). The convergence metric
-    recorded per superstep is the label-sum potential (strictly
-    decreasing until fixpoint).
-    """
+    reference src/BCC/connectivity.h:44-107). Every shrink round
+    (``kernels.min_label_step`` with pointer jumping) is checkpointed with
+    its ``old`` column, and probed by the label-sum potential (strictly
+    decreasing until fixpoint)."""
 
     def __init__(
         self,
@@ -238,95 +207,37 @@ class CheckpointedConnectedComponents:
         shrink_rounds: int = 3,
         max_residual: int = 4_000_000,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, workdir, run_id)
         self.sym = sym
         self.vertices = vertices
-        self.workdir = workdir
-        self.run_id = run_id
         self.shrink_rounds = shrink_rounds
         self.max_residual = max_residual
-
-    def _record_metrics(
-        self, superstep: int, labels: DataFrame, potential: float, wall_ms: float
-    ) -> None:
-        _append_lineage_metrics(
-            self.workdir, self.run_id, superstep, labels, potential, wall_ms
-        )
-
-    def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, "metrics"))
-
-    def _superstep(self, labels: DataFrame) -> DataFrame:
-        msgs = (
-            self.sym.join(labels, self.sym.src == labels.id)
-            .select(self.sym.dst.alias("id"), "component")
-        )
-        new = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-        )
-        parent = new.select(
-            F.col("id").alias("component"), F.col("component").alias("grand")
-        )
-        return (
-            new.join(parent, "component", "left")
-            .select("id", F.least("component", "grand").alias("component"))
-        )
-
-    def _checkpoint(self, labels: DataFrame, superstep: int, potential: float) -> DataFrame:
-        path = os.path.join(self.workdir, f"state_{superstep:05d}")
-        labels.write.mode("overwrite").parquet(path)
-        RunManifest(self.run_id, superstep, path, float(potential)).save(self.workdir)
-        return self.spark.read.parquet(path)
 
     def run(self) -> DataFrame:
         """Run (or resume) the shrink supersteps, then finish with the
         driver union-find; returns (id, component)."""
-        manifest = RunManifest.load(self.workdir)
-        if manifest is not None:
-            labels = self.spark.read.parquet(manifest.state_path)
-            it = manifest.superstep
-        else:
-            labels = self.vertices.select(
-                "id", self.vertices.id.alias("component")
-            )
-            it = 0
-        while it < self.shrink_rounds:
-            t0 = time.time()
-            labels = self._superstep(labels).transform(pin)
-            # empty vertex set => SUM is NULL; coalesce so the manifest's
-            # float() doesn't crash (ADVICE r3)
-            potential = labels.agg(F.sum("component")).first()[0] or 0
-            it += 1
-            # checkpoint+manifest commit FIRST, metrics after: a crash
-            # between the two re-executes the superstep on resume, and
-            # metrics-after means the replay cannot leave a duplicate
-            # metric row for a superstep whose state never committed
-            # (ADVICE r3)
-            labels = self._checkpoint(labels, it, potential)
-            self._record_metrics(it, labels, potential, (time.time() - t0) * 1000)
+        changed = _changed("component")
+        labels = self._loop(
+            initial=lambda: _identity_labels(self.vertices, "component"),
+            step=lambda s: min_label_step(
+                self.sym, s, s.filter(changed), "component", pointer_jump=True
+            ),
+            probe=lambda s: s.agg(F.sum("component")).first()[0],
+            supersteps=self.shrink_rounds,
+        )
         return cc_phase2_union_find(
             self.sym, labels, max_residual=self.max_residual,
             context=f"after {self.shrink_rounds} checkpointed shrink rounds",
         )
 
 
-class CheckpointedLabelPropagation:
+class CheckpointedLabelPropagation(_Resumable):
     """Frontier LPA with parquet checkpoints, resume, and metrics — the
     resumable driver for ``kernels.label_propagation`` (same semantics:
     synchronous min-label adoption; after k rounds label(v) = min id in
-    v's k-hop closed neighborhood).
-
-    Completes the resumable-driver story across the north rule's iterative
-    kernels (PageRank and CC above; triangle count is one-shot). The
-    checkpointed state is ``(id, label, old)`` — ``old`` is the previous
-    round's label, so the frontier (``label < old``: the senders of the
-    next round) is reconstructed from the state alone and a resumed run
-    replays the identical per-round labels as an uninterrupted one.
-    Convergence metric per round: frontier size (vertices whose label
-    changed — 0 means a fixpoint was reached before the round budget).
-    """
+    v's k-hop closed neighborhood). Every round is checkpointed; its probe
+    is the frontier size (vertices whose label changed), and 0 — a
+    fixpoint before the round budget — ends the run."""
 
     def __init__(
         self,
@@ -338,79 +249,18 @@ class CheckpointedLabelPropagation:
         run_id: str = "lpa",
         rounds: int = 5,
     ) -> None:
-        self.spark = spark
+        super().__init__(spark, workdir, run_id)
         self.sym = sym
         self.vertices = vertices
-        self.workdir = workdir
-        self.run_id = run_id
         self.rounds = rounds
-
-    def _record_metrics(
-        self, superstep: int, state: DataFrame, delta: float, wall_ms: float
-    ) -> None:
-        _append_lineage_metrics(
-            self.workdir, self.run_id, superstep, state, delta, wall_ms
-        )
-
-    def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.workdir, "metrics"))
-
-    def _superstep(self, labels: DataFrame, frontier: DataFrame) -> DataFrame:
-        # identical shape to kernels.label_propagation's round: frontier
-        # sends, min-fold over (state ∪ messages), previous label carried
-        # as ``old`` (min(old) per id is exact: one state row per id)
-        label_t = dict(labels.dtypes)["label"]
-        msgs = (
-            self.sym.join(frontier, self.sym.src == frontier.id)
-            .select(
-                self.sym.dst.alias("id"),
-                "label",
-                F.lit(None).cast(label_t).alias("old"),
-            )
-        )
-        st = labels.select("id", "label", F.col("label").alias("old"))
-        return (
-            st.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-        )
 
     def run(self) -> DataFrame:
         """Run (or resume) the LPA rounds; returns (id, label)."""
-        manifest = RunManifest.load(self.workdir)
-        if manifest is not None:
-            state = self.spark.read.parquet(manifest.state_path)
-            it = manifest.superstep
-            labels = state.select("id", "label")
-            frontier = state.filter(
-                F.col("old").isNull() | (F.col("label") < F.col("old"))
-            ).select("id", "label")
-        else:
-            labels = self.vertices.select("id", self.vertices.id.alias("label"))
-            frontier = labels  # round 0: every vertex is a sender
-            it = 0
-        while it < self.rounds:
-            t0 = time.time()
-            state = self._superstep(labels, frontier).transform(pin)
-            it += 1
-            # state parquet first, manifest second, metrics last (ADVICE
-            # r3 ordering): a crash between state and manifest replays the
-            # round on resume (pure function, identical result); a crash
-            # before metrics cannot leave a metric row for an uncommitted
-            # state. The frontier count reads the just-written parquet and
-            # stamps the manifest's delta in its ONE write per round.
-            path = os.path.join(self.workdir, f"state_{it:05d}")
-            state.write.mode("overwrite").parquet(path)
-            state = self.spark.read.parquet(path)
-            frontier = state.filter(
-                F.col("old").isNull() | (F.col("label") < F.col("old"))
-            ).select("id", "label")
-            n_frontier = frontier.count()
-            RunManifest(self.run_id, it, path, float(n_frontier)).save(
-                self.workdir
-            )
-            self._record_metrics(it, state, n_frontier, (time.time() - t0) * 1000)
-            labels = state.select("id", "label")
-            if n_frontier == 0:
-                break  # fixpoint: remaining rounds are no-ops
-        return labels
+        changed = _changed("label")
+        return self._loop(
+            initial=lambda: _identity_labels(self.vertices, "label"),
+            step=lambda s: min_label_step(self.sym, s, s.filter(changed), "label"),
+            probe=lambda s: _frontier_size(s, changed),
+            supersteps=self.rounds,
+            done=lambda n_frontier: n_frontier == 0,
+        ).select("id", "label")

@@ -39,11 +39,12 @@ from pyspark.sql import DataFrame
 
 _log = logging.getLogger(__name__)
 _warned_fallback = False
+_warned_fast_fallback = False
 
 
 def fast_pin(df: DataFrame) -> DataFrame:
-    """ZERO-JOB logical-lineage truncation (r6): rebuild ``df`` as a
-    ``LogicalRDD`` leaf over its (lazily) compiled RDD.
+    """Logical-lineage truncation without an action (r6): rebuild ``df``
+    as a ``LogicalRDD`` leaf over its compiled RDD.
 
     Why it exists: a superstep that only ``cache()``s its generations
     keeps the full logical tree, and because each generation references
@@ -52,11 +53,16 @@ def fast_pin(df: DataFrame) -> DataFrame:
     tree — measured 4x cost growth PER GENERATION in round 6 (54 s for
     superstep 8 of a trivial 157k-edge hash-min loop). ``pin`` fixes that
     with an eager localCheckpoint, but that is one extra JOB per
-    generation. ``fast_pin`` gets the O(1) logical plan without the job:
-    ``queryExecution.toRdd()`` compiles the plan to its RDD (no action),
+    generation. ``fast_pin`` gets the O(1) logical plan without the
+    checkpoint: ``queryExecution.toRdd()`` compiles the plan to its RDD,
     and ``internalCreateDataFrame`` wraps it as a stats-fresh LogicalRDD
     leaf — the same construction as ``pin``'s fallback path, minus the
     materialization.
+
+    Jobs: it is zero-job only with AQE off. Under the engine's AQE default
+    ``toRdd()`` finalizes the adaptive plan, which runs its shuffle query
+    stages as jobs (3 measured for a join of two aggregates) — on the
+    thread that calls it, before any action.
 
     Contract: call it on a *cached* DataFrame. The RDD still reads (and
     on first use populates) the cache, so referencing the result twice
@@ -71,7 +77,15 @@ def fast_pin(df: DataFrame) -> DataFrame:
         jss = df.sparkSession._jsparkSession  # type: ignore[attr-defined]
         fresh = jss.internalCreateDataFrame(jrdd, jschema, False)
         return DataFrame(fresh, df.sparkSession)
-    except Exception:  # pragma: no cover - non-classic sessions (Connect)
+    except Exception:  # non-classic sessions (Connect)
+        global _warned_fast_fallback
+        if not _warned_fast_fallback:
+            _warned_fast_fallback = True
+            _log.warning(
+                "fast_pin: LogicalRDD rebind unavailable (non-classic "
+                "session?); returning the plan unchanged — iterative plans "
+                "keep their full logical tree (see fast_pin's docstring)"
+            )
         return df
 
 

@@ -63,45 +63,16 @@ def main() -> None:
     # -- pagerank: result + one superstep (state join + agg + delta carry) --
     pr = kernels.pagerank(g.edges, g.vertices, tol=1e-6)
     add("pagerank_1e6", "result", pr)
-    # superstep mirror: tol-mode fused + overlapped shape (see
-    # kernels._pagerank_tol) — state row rides the message-combine
-    # aggregate; dangling mass is a 1-row broadcast scalar aggregate over
-    # the previous state (data-independent plan, so the next superstep's
-    # compile can overlap the probe); state side carries the join hint.
-    from pasgal_spark.graph.kernels import _hint_state
-
+    # one superstep: the kernel's own step (kernels.pagerank_step) — state
+    # row rides the message-combine aggregate; dangling mass is a 1-row
+    # broadcast scalar aggregate over the previous state (data-independent
+    # plan, so the next superstep's compile can overlap the probe); state
+    # side carries the join hint.
     state = g.vertices.select(
         "id", F.lit(1).alias("out_deg"), F.lit(1.0).alias("rank")
     ).transform(pin)
-    s = _hint_state(state)
-    msgs = g.edges.join(s, g.edges.src == s.id).select(
-        g.edges.dst.alias("id"),
-        F.lit(None).cast("long").alias("out_deg"),
-        F.lit(None).cast("double").alias("prev_rank"),
-        (F.col("rank") / F.col("out_deg")).alias("c"),
-    )
-    st = state.select(
-        "id", "out_deg", F.col("rank").alias("prev_rank"),
-        F.lit(None).cast("double").alias("c"),
-    )
-    agg = (
-        st.unionByName(msgs)
-        .groupBy("id")
-        .agg(
-            F.min("out_deg").alias("out_deg"),
-            F.coalesce(F.sum("c"), F.lit(0.0)).alias("contrib"),
-            F.min("prev_rank").alias("prev_rank"),
-        )
-        .filter(F.col("prev_rank").isNotNull())
-    )
-    dm = state.filter("out_deg = 0").agg(
-        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
-    )
-    new_rank = F.lit(0.1) + F.lit(0.85) * (
-        F.col("contrib") + F.col("_dm") / F.lit(2.0)
-    )
-    new_state = agg.crossJoin(F.broadcast(dm)).select(
-        "id", "out_deg", new_rank.alias("rank"), "prev_rank"
+    new_state = kernels.pagerank_step(
+        g.edges, state, n=2, damping=0.85, has_dangling=True
     )
     add("pagerank_1e6", "superstep", new_state)
 

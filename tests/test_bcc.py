@@ -180,6 +180,23 @@ def test_bcc_summary_counts(spark):
     assert row["n_cc"] == 2  # {0..6} and {7}
 
 
+def test_bcc_summary_rejects_bad_strategy_on_driver_path(spark):
+    """The strategy is validated before the driver fast path: a small graph
+    rejects what a large one would."""
+    sym = edges_df(spark, _sym_pairs(FIG8))
+    with pytest.raises(ValueError, match="strategy"):
+        bccmod.bcc_summary(sym, vertices_df(spark, range(8)), strategy="bogus")
+
+
+def test_bcc_summary_driver_ignores_duplicate_edge_rows(spark):
+    """A duplicated (src, dst) row is one edge to the driver path: the
+    triangle 0-1-2 keeps 3 edges instead of counting its back edge twice."""
+    vertices = vertices_df(spark, range(8))
+    plain = bccmod.bcc_summary(edges_df(spark, _sym_pairs(FIG8)), vertices)
+    dup = bccmod.bcc_summary(edges_df(spark, _sym_pairs(FIG8) + [(0, 2)]), vertices)
+    assert tuple(dup.first()) == tuple(plain.first())
+
+
 def test_relabeled_forest_is_dense_per_tree(spark):
     """Forest output form (reference src/graph.h:436-443): local ids are a
     dense 0-based preorder per tree with the root at 0, and every child's

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from pasgal_spark.graph import kernels
 from pasgal_spark.graph.builder import symmetrize, transpose, validate
 from tests.conftest import edges_df, vertices_df
@@ -190,6 +188,26 @@ def test_pagerank_dangling_star(spark):
     assert got[0] == max(got.values())
 
 
+def test_checkpointed_pagerank_matches_kernel(spark, tmp_path):
+    """The resumable driver runs the kernel's own superstep: same ranks
+    (to rounding) in the same number of supersteps."""
+    from pasgal_spark.plans import CheckpointedPageRank, RunManifest
+
+    edges = edges_df(spark, STAR_EDGES)
+    verts = vertices_df(spark, range(STAR_N))
+    steps = []
+    want = dict(
+        kernels.pagerank(
+            edges, verts, tol=1e-8, on_superstep=lambda k, d: steps.append(k)
+        ).collect()
+    )
+    workdir = str(tmp_path / "pr")
+    got = dict(CheckpointedPageRank(spark, edges, verts, workdir).run(tol=1e-8).collect())
+    assert got.keys() == want.keys()
+    assert all(math.isclose(got[u], want[u], abs_tol=1e-12) for u in want)
+    assert RunManifest.load(workdir).superstep == len(steps)
+
+
 def test_triangle_count(spark):
     for pairs, expected in [
         (TT_EDGES, 2),
@@ -228,22 +246,6 @@ def test_validate_flags_violations(spark):
     edges = edges_df(spark, [(0, 1), (0, 1), (2, 2), (9, 0)])
     v = validate(edges, n=5)
     assert v == {"out_of_range": 1, "self_loops": 1, "dups": 1}
-
-
-def test_salted_sum_equals_plain_sum(spark):
-    df = spark.createDataFrame(
-        [(i % 3, float(i)) for i in range(100)], "k long, v double"
-    )
-    got = {
-        r["k"]: r["s"]
-        for r in kernels.salted_sum(df, "k", "v", "s", buckets=4).collect()
-    }
-    exp = {
-        r["k"]: r["s"]
-        for r in df.groupBy("k").agg(F.sum("v").alias("s")).collect()
-    }
-    assert got.keys() == exp.keys()
-    assert all(math.isclose(got[k], exp[k], rel_tol=1e-12) for k in got)
 
 
 def test_two_phase_cc_matches_fixpoint_loop_on_long_diameter_grid(spark):

@@ -78,3 +78,16 @@ def test_pin_under_aqe_checkpoint_captures_unknown(spark):
     bare = df.localCheckpoint(eager=True)
     part = _analyzed(bare).outputPartitioning().toString()
     assert "UnknownPartitioning" in part, part
+
+
+def test_fast_pin_fallback_logs_once(monkeypatch, caplog):
+    # A frame without a classic JVM plan (a Connect session) comes back
+    # unchanged, and the fallback says so once, like pin's does.
+    from pasgal_spark.plans import lineage
+
+    monkeypatch.setattr(lineage, "_warned_fast_fallback", False)
+    plain = object()
+    with caplog.at_level("WARNING", logger=lineage.__name__):
+        assert lineage.fast_pin(plain) is plain
+        assert lineage.fast_pin(plain) is plain
+    assert sum("fast_pin" in r.getMessage() for r in caplog.records) == 1

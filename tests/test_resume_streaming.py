@@ -19,6 +19,14 @@ EDGES = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (1, 3)]
 N = 6  # vertex 5 isolated + dangling
 
 
+def _assert_one_wall_per_superstep(driver):
+    """Replayed supersteps are not re-recorded: exactly one wall_ms per
+    (run_id, superstep), for supersteps 1..last without a gap."""
+    m = driver.metrics().select("run_id", "superstep", "wall_ms").distinct().toPandas()
+    assert not m.duplicated(["run_id", "superstep"]).any()
+    assert sorted(m["superstep"]) == list(range(1, len(m) + 1))
+
+
 def test_checkpointed_pagerank_resume_identical(spark, tmp_path):
     edges = edges_df(spark, EDGES)
     verts = vertices_df(spark, range(N))
@@ -37,11 +45,11 @@ def test_checkpointed_pagerank_resume_identical(spark, tmp_path):
     m = RunManifest.load(part_dir)
     assert m is not None and m.superstep == 2
 
-    # "crash": new object over the same workdir resumes from the manifest
-    resumed = CheckpointedPageRank(
-        spark, edges, verts, part_dir, checkpoint_every=2
-    ).run(tol=1e-5)
-    resumed_ranks = dict(resumed.collect())
+    # "crash": new object over the same workdir resumes from the manifest,
+    # replaying superstep 3 (recorded, but past the last checkpoint)
+    cp = CheckpointedPageRank(spark, edges, verts, part_dir, checkpoint_every=2)
+    resumed_ranks = dict(cp.run(tol=1e-5).collect())
+    _assert_one_wall_per_superstep(cp)
 
     assert all(
         math.isclose(full_ranks[u], resumed_ranks[u], abs_tol=1e-12) for u in range(N)
@@ -125,6 +133,7 @@ def test_checkpointed_cc_resume_identical(spark, tmp_path):
 
     # metrics: label-sum potential recorded per superstep, non-increasing
     cp = CheckpointedConnectedComponents(spark, sym, verts, part_dir)
+    _assert_one_wall_per_superstep(cp)
     deltas = (
         cp.metrics().select("superstep", "delta").distinct().toPandas()
         .sort_values("superstep")["delta"].tolist()
@@ -174,6 +183,7 @@ def test_checkpointed_lpa_resume_identical(spark, tmp_path):
 
     # metrics: per-round frontier size recorded; the path keeps shrinking
     cp = CheckpointedLabelPropagation(spark, sym, verts, part_dir)
+    _assert_one_wall_per_superstep(cp)
     deltas = (
         cp.metrics().select("superstep", "delta").distinct().toPandas()
         .sort_values("superstep")["delta"].tolist()
