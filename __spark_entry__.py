@@ -211,9 +211,8 @@ def _q_ldd(spark: SparkSession, sf: str) -> DataFrame:
 def _q_bcc(spark: SparkSession, sf: str) -> DataFrame:
     # Canonical per-edge BCC partition (labels = min normalized edge key per
     # cluster — unique regardless of spanning tree, hence oracle-checkable;
-    # VERDICT r2 #1). Runs the diameter-safe euler strategy so the O(log n)
-    # path gets hard-signal coverage; `articulation_points` keeps the
-    # level-sweep path covered.
+    # VERDICT r2 #1). Runs the diameter-safe euler pipeline (O(log n)
+    # supersteps), like every BCC query.
     g = _graph(spark, sf)
     return bccmod.bcc_edges_canonical(
         _sparse_sym(g), g.vertices, strategy="euler", cc=_sparse_cc(spark, sf, g)

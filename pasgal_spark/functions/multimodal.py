@@ -11,8 +11,8 @@ sample data inside Arrow-batched ``mapInPandas`` kernels.
 ``synthesize_real_media`` produces payloads that are real encoded media
 (PNG images, PCM16 WAVs, PNG-frame video containers), deterministic per
 (media_id, seed) — so decode tests verify actual pixels/samples, not
-hashes. The legacy opaque-bytes synthesizer and the md5 feature double
-are kept for the plumbing-only tests.
+hashes. The legacy opaque-bytes synthesizer is kept for the
+plumbing-only tests.
 
 At 100 TB the payloads dominate storage: transforms below never shuffle
 payload bytes — decode/feature extraction happens in ``mapInPandas`` on
@@ -24,7 +24,6 @@ codecs behind the same batch signature.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -38,7 +37,6 @@ MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, width int, height int, "
     "sample_rate int"
 )
-FEATURE_DIM = 16
 
 
 def synthesize_media(spark: SparkSession, n: int, *, seed: int = 42) -> DataFrame:
@@ -68,33 +66,6 @@ def synthesize_media(spark: SparkSession, n: int, *, seed: int = 42) -> DataFram
         F.when(kind == "image", (h % 1080 + 16).cast("int")).alias("height"),
         F.when(kind == "audio", F.lit(16000)).cast("int").alias("sample_rate"),
     )
-
-
-def _bytes_features(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Deterministic stand-in for a real decoder: md5-seeded feature vector."""
-    digest = hashlib.md5(payload).digest()
-    raw = (digest * ((dim * 4) // len(digest) + 1))[: dim * 4]
-    arr = np.frombuffer(raw, dtype=np.uint32).astype(np.float64)
-    return (arr % 1000) / 1000.0
-
-
-def fake_decode_image(media: DataFrame, *, dim: int = FEATURE_DIM) -> DataFrame:
-    """(media_id, features array<double>): the stubbed decode/extract stage.
-
-    Real Spark plumbing: Arrow-batched mapInPandas, payload bytes never
-    leave the input partition, output is the narrow feature relation.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [
-                _bytes_features(bytes(p), dim).tolist() for p in pdf["payload"]
-            ]
-            yield pd.DataFrame({"media_id": pdf["media_id"], "features": feats})
-
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "payload"
-    ).mapInPandas(batches, "media_id long, features array<double>")
 
 
 def synthesize_real_media(

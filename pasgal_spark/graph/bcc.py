@@ -1,26 +1,23 @@
 """FAST-BCC: biconnected components as DataFrame supersteps.
 
 Spark-native re-expression of the reference's FAST-BCC
-(/root/reference/src/BCC/fast-bcc.h:14-283; the BFS skeleton and fence
-idea follow the published algorithm that file implements):
+(src/BCC/fast-bcc.h:14-283). Every step's superstep count
+is O(log n) regardless of graph diameter (the tagging machinery lives in
+``pasgal_spark.graph.euler``):
 
-1. **Spanning tree per component** (BFS forest with deterministic min
-   parents) — fast-bcc.h:227.
-2. **Interval tagging** ``first``/``last`` — the reference computes Euler
-   tour positions via parallel list ranking (fast-bcc.h:32-148).  The
-   positions are only ever consumed through the interval-containment
-   property (``u in subtree(v)  <=>  first[v] <= first[u] and
-   last[u] <= last[v]``, see the ``critical``/``backward`` predicates at
-   fast-bcc.h:230-237), so the Spark plan computes an equivalent
-   *preorder numbering from subtree sizes*: one bottom-up and one
-   top-down pass of O(tree depth) level supersteps, each a small
-   join+aggregate, instead of an O(m)-row list-ranking shuffle chain.
-   On web graphs (BFS) tree depth ~ graph diameter, which is small;
-   each level superstep touches only two adjacent BFS levels.
-3. **low/high tags** = subtree min/max of the non-tree-edge endpoint
-   firsts (fast-bcc.h:177-202) — the sparse-table range query over Euler
-   positions becomes the same bottom-up level aggregation (a subtree IS
-   an Euler/preorder interval).
+1. **Borůvka spanning forest** (``euler.boruvka_forest``) — each
+   component picks its minimum incident cross edge and contracts:
+   <= log2(n) rounds. The contraction also certifies the connectivity
+   labeling (``euler.boruvka_forest_cc``), so no separate CC pass runs.
+2. **Euler tour by list ranking** (``euler.euler_tags``, fast-bcc.h:32-148)
+   — the tree's arcs are threaded into a circuit and ranked by pointer
+   doubling; ``first``/``last``/``parent`` fall out of the entering arcs,
+   under which ``u in subtree(v) <=> first[v] <= first[u] <= last[v]``
+   (the ``critical``/``backward`` predicates at fast-bcc.h:230-237).
+3. **low/high tags** (``euler.subtree_minmax``, fast-bcc.h:177-202) —
+   subtree min/max of the non-tree-edge endpoint firsts, as sparse-table
+   range min/max queries over the Euler positions (a subtree IS an Euler
+   interval).
 4. **Fence predicate** filters the edge table (fast-bcc.h:239-254):
    tree edges survive unless *critical* (child subtree has no escape
    above/past the parent interval); non-tree edges survive unless
@@ -31,217 +28,33 @@ idea follow the published algorithm that file implements):
    fast-bcc.h:205-214), so the per-EDGE component is the cluster label
    of the edge's *deeper* endpoint.
 
-Scale notes: every superstep joins the static (cached) edge table against
-small per-level state; the only full-edge-table passes are the non-tree
-tagging aggregate and the fence filter (one scan each).  No driver-side
-loops over data, no per-row Python.
+Scale notes: every step is a bounded number of shuffles over O(m) or
+O(n) rows; the only full-edge-table passes after tagging are the fence
+filter and the per-edge labeling join. No driver-side loops over data
+past the driver budget, no per-row Python.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pasgal_spark.plans.lineage import pin
 
-from pasgal_spark.graph.kernels import (
-    connected_components_auto,
-    connected_components_two_phase,
+from pasgal_spark.graph.euler import (
+    MAX_DRIVER_ROWS,
+    boruvka_forest_cc,
+    euler_bcc_tags,
 )
+from pasgal_spark.graph.kernels import connected_components_two_phase
 
 
-def spanning_tree(
-    sym: DataFrame, vertices: DataFrame, cc: DataFrame, *, max_depth: int = 200
-) -> DataFrame:
-    """(id, parent, depth, component): BFS tree of each component.
-
-    Roots are the canonical component labels (min vertex id), with
-    ``parent = id`` and ``depth = 0``; parent(v) = min neighbor at
-    depth-1 (deterministic, replacing the reference's CAS-race parents,
-    src/BCC/spanning_forest.h:5-60).
-    """
-    roots = (
-        cc.select(F.col("component").alias("id")).distinct()
-        .select("id", F.col("id").alias("parent"), F.lit(0).alias("depth"))
-        .transform(pin)
-    )
-    visited = roots
-    frontier = roots
-    d = 0
-    while True:
-        d += 1
-        cand = (
-            sym.join(frontier, sym.src == frontier.id)
-            .select(sym.dst.alias("id"), sym.src.alias("parent"))
-            .join(visited.select("id"), "id", "left_anti")
-        )
-        nxt = (
-            cand.groupBy("id")
-            .agg(F.min("parent").alias("parent"))
-            .withColumn("depth", F.lit(d))
-            .transform(pin)
-        )
-        if nxt.isEmpty():
-            break
-        if d > max_depth:
-            # raise-don't-truncate (the scc budget idiom, directed.py): a
-            # silently partial tree would drop every edge past the cut in
-            # fence_filter's inner joins and mislabel those vertices.
-            # Probed AFTER the emptiness test so a tree of depth exactly
-            # max_depth completes (ADVICE r3).
-            raise RuntimeError(
-                f"spanning_tree: depth budget ({max_depth}) exhausted with a "
-                "live frontier; use bcc(..., strategy='euler') for "
-                "long-diameter graphs or raise max_depth"
-            )
-        visited = visited.unionByName(nxt).transform(pin)
-        frontier = nxt
-    return visited.join(cc, "id").select("id", "parent", "depth", "component")
-
-
-def _bottom_up(
-    init: DataFrame,
-    agg_cols: list[tuple[str, str]],
-    max_depth: int,
-) -> DataFrame:
-    """Generic O(depth) bottom-up tree aggregation.
-
-    ``init``: (id, parent, depth, <cols...>) leaf-to-root values; for each
-    (col, how) in ``agg_cols`` (how in min/max/sum) the result carries
-    col' = how(col, how over children's aggregated col).  Returns
-    (id, parent, depth, <cols...>) with subtree-aggregated values.
-    """
-    fns = {"min": (F.min, F.least), "max": (F.max, F.greatest), "sum": (F.sum, None)}
-    init = init.select("id", "parent", "depth", *[c for c, _ in agg_cols])
-    cur = init.filter(F.col("depth") == max_depth).transform(pin)
-    done = [cur]
-    for d in range(max_depth - 1, -1, -1):
-        contrib = cur.groupBy("parent").agg(
-            *[fns[how][0](c).alias(f"_c_{c}") for c, how in agg_cols]
-        ).withColumnRenamed("parent", "id")
-        lvl = init.filter(F.col("depth") == d).join(contrib, "id", "left")
-        outs = []
-        for c, how in agg_cols:
-            child = F.col(f"_c_{c}")
-            if how == "sum":
-                outs.append((F.col(c) + F.coalesce(child, F.lit(0))).alias(c))
-            else:
-                outs.append(fns[how][1](F.col(c), F.coalesce(child, F.col(c))).alias(c))
-        lvl = lvl.select("id", "parent", "depth", *outs).transform(pin)
-        done.append(lvl)
-        cur = lvl
-    out = done[0]
-    for df in done[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def tree_tags(tree: DataFrame, sym: DataFrame) -> DataFrame:
-    """(id, parent, depth, first, last, low, high): FAST-BCC vertex tags.
-
-    ``first``/``last`` form a preorder interval labeling per tree (the
-    declarative stand-in for Euler tour positions, see module docstring);
-    ``low``/``high`` are the subtree min/max of non-tree-edge endpoint
-    firsts (fast-bcc.h:177-202).
-    """
-    max_depth = tree.agg(F.max("depth")).first()[0] or 0
-
-    # -- subtree sizes (bottom-up) ---------------------------------------
-    init = tree.withColumn("size", F.lit(1).cast("long"))
-    sizes = _bottom_up(init, [("size", "sum")], max_depth)
-
-    # -- preorder first (top-down): first[c] = first[p] + 1 + sum of sizes
-    #    of siblings ordered (by id) before c ----------------------------
-    w = (
-        Window.partitionBy("parent")
-        .orderBy("id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    kids = (
-        sizes.filter(F.col("depth") > 0)
-        .withColumn("presum", F.sum("size").over(w) - F.col("size"))
-        .transform(pin)
-    )
-    first = (
-        tree.filter(F.col("depth") == 0)
-        .select("id", F.lit(0).cast("long").alias("first"))
-        .transform(pin)
-    )
-    cur = first
-    for d in range(1, max_depth + 1):
-        lvl = (
-            kids.filter(F.col("depth") == d)
-            .join(cur.select(F.col("id").alias("parent"), F.col("first").alias("pf")), "parent")
-            .select(
-                "id", (F.col("pf") + 1 + F.col("presum")).alias("first")
-            )
-            .transform(pin)
-        )
-        first = first.unionByName(lvl)
-        cur = lvl
-    first = first.transform(pin)
-
-    fl = (
-        tree.join(first, "id")
-        .join(sizes.select("id", "size"), "id")
-        .select(
-            "id", "parent", "depth", "first",
-            (F.col("first") + F.col("size") - 1).alias("last"),
-        )
-        .transform(pin)
-    )
-
-    # -- w1/w2: min/max first over NON-TREE incident edges ---------------
-    # sym holds both directions, so one aggregate keyed on dst sees every
-    # incident edge of every vertex exactly once per direction.
-    ps = fl.select(F.col("id").alias("src"), F.col("parent").alias("p_src"),
-                   F.col("first").alias("f_src"))
-    pd_ = fl.select(F.col("id").alias("dst"), F.col("parent").alias("p_dst"))
-    nt = (
-        sym.join(ps, "src").join(pd_, "dst")
-        .filter((F.col("p_dst") != F.col("src")) & (F.col("p_src") != F.col("dst")))
-        .groupBy("dst")
-        .agg(F.min("f_src").alias("nt_min"), F.max("f_src").alias("nt_max"))
-        .withColumnRenamed("dst", "id")
-    )
-    wvals = fl.join(nt, "id", "left").select(
-        "id", "parent", "depth",
-        F.least("first", F.coalesce("nt_min", "first")).alias("low"),
-        F.greatest("first", F.coalesce("nt_max", "first")).alias("high"),
-    )
-
-    # -- low/high = subtree min/max (bottom-up) ---------------------------
-    lowhigh = _bottom_up(wvals, [("low", "min"), ("high", "max")], max_depth)
-
-    return (
-        fl.join(lowhigh.select("id", "low", "high"), "id")
-        .select("id", "parent", "depth", "first", "last", "low", "high")
-        .transform(pin)
-    )
-
-
-def relabeled_forest(tree: DataFrame, tags: DataFrame) -> DataFrame:
-    """(component, local_id, local_parent, id): the reference's ``Forest``
-    output form — each spanning tree as its own relabeled subgraph
-    (src/graph.h:436-443: per-tree vertex arrays with dense local ids).
-
-    The preorder ``first`` tags ARE a dense 0-based per-tree numbering
-    (root = 0, subtree-contiguous), so relabeling is one join: local id =
-    first[v], local parent = first[parent(v)]. Rows are naturally
-    partitionable by component — the Spark analog of the reference's
-    per-tree CSR blocks.
-    """
-    pf = tags.select(F.col("id").alias("parent"), F.col("first").alias("pfirst"))
-    return (
-        tree.join(tags.select("id", "first"), "id")
-        .join(pf, "parent")
-        .select(
-            "component",
-            F.col("first").alias("local_id"),
-            F.col("pfirst").alias("local_parent"),
-            "id",
-        )
-    )
+def _check_strategy(strategy: str) -> None:
+    """The one BCC strategy is ``euler``; the keyword stays so callers
+    that name it keep working. Checked before any work, on small and
+    large inputs alike."""
+    if strategy != "euler":
+        raise ValueError(f"bcc strategy must be 'euler', got {strategy!r}")
 
 
 def fence_filter(sym: DataFrame, tags: DataFrame) -> DataFrame:
@@ -276,58 +89,17 @@ def fence_filter(sym: DataFrame, tags: DataFrame) -> DataFrame:
     return e.filter(keep).select("src", "dst")
 
 
-def bcc_tags(
-    sym: DataFrame,
-    vertices: DataFrame,
-    cc: DataFrame,
-    *,
-    strategy: str = "level",
-    max_depth: int = 200,
-) -> DataFrame:
-    """(id, parent, first, last, low, high): FAST-BCC tags via either
-    physical strategy — same interval-containment contract, so
-    ``fence_filter`` consumes both.
-
-    - ``level``: BFS forest + O(tree depth) level sweeps (this module) —
-      fewest shuffles on shallow web graphs; raises past ``max_depth``.
-    - ``euler``: Borůvka forest + list-ranked Euler tour + sparse-table
-      range-minmax (pasgal_spark.graph.euler) — O(log n) supersteps
-      regardless of diameter; the reference's own scale path
-      (fast-bcc.h:32-148).
-    """
-    if strategy == "euler":
-        from pasgal_spark.graph.euler import euler_bcc_tags
-
-        return euler_bcc_tags(sym, vertices, cc)
-    if strategy != "level":
-        raise ValueError(f"bcc strategy must be 'level' or 'euler', got {strategy!r}")
-    tree = spanning_tree(sym, vertices, cc, max_depth=max_depth)
-    return tree_tags(tree, sym).select(
-        "id", "parent", "first", "last", "low", "high"
-    )
-
-
 def _cc_and_tags(
-    sym: DataFrame,
-    vertices: DataFrame,
-    cc: DataFrame | None,
-    strategy: str,
+    sym: DataFrame, vertices: DataFrame, cc: DataFrame | None
 ) -> tuple[DataFrame, DataFrame]:
     """Shared (cc, tags) derivation for the BCC family. When no shared cc
-    is supplied and the euler strategy runs, the connectivity labeling is
-    taken from Borůvka's own contraction (``boruvka_forest_cc``) — the
-    forest certifies the components, so the separate CC pass the r4 shape
-    paid here is free (VERDICT r4 next #3)."""
-    if strategy == "euler":
-        from pasgal_spark.graph.euler import boruvka_forest_cc, euler_bcc_tags
-
-        forest = None
-        if cc is None:
-            forest, cc = boruvka_forest_cc(sym, vertices)
-        return cc, euler_bcc_tags(sym, vertices, cc, forest=forest)
+    is supplied, the connectivity labeling is taken from Borůvka's own
+    contraction (``boruvka_forest_cc``) — the forest certifies the
+    components, so no separate CC pass runs (VERDICT r4 next #3)."""
+    forest = None
     if cc is None:
-        cc = connected_components_two_phase(sym, vertices).transform(pin)
-    return cc, bcc_tags(sym, vertices, cc, strategy=strategy)
+        forest, cc = boruvka_forest_cc(sym, vertices)
+    return cc, euler_bcc_tags(sym, vertices, cc, forest=forest)
 
 
 def _fence_cc(sym: DataFrame, tags: DataFrame, vertices: DataFrame) -> DataFrame:
@@ -340,14 +112,16 @@ def _fence_cc(sym: DataFrame, tags: DataFrame, vertices: DataFrame) -> DataFrame
     the fence per superstep; the labeling never references it once phase 1
     is sealed, so the cache is released immediately after.
     """
-    from pasgal_spark.graph.euler import MAX_DRIVER_ROWS
-
     m_upper = sym.count()
-    small = m_upper <= 2 * MAX_DRIVER_ROWS  # = auto's max_residual default
+    small = m_upper <= 2 * MAX_DRIVER_ROWS  # = two-phase's max_residual default
     filtered = fence_filter(sym, tags)
     if not small:
         filtered = filtered.cache()
-    labels = connected_components_auto(filtered, vertices, m_upper=m_upper)
+    # past the budget the bound is dropped: two-phase recounts the (far
+    # smaller) fence output and may still take its direct driver path
+    labels = connected_components_two_phase(
+        filtered, vertices, m_upper=m_upper if small else None
+    )
     if not small:
         filtered.unpersist()
     return labels
@@ -358,7 +132,7 @@ def bcc(
     vertices: DataFrame,
     cc: DataFrame | None = None,
     *,
-    strategy: str = "level",
+    strategy: str = "euler",
 ) -> DataFrame:
     """(id, bcc): FAST-BCC cluster label per vertex (fast-bcc.h:226-259).
 
@@ -368,7 +142,8 @@ def bcc(
     (u, v) of G belongs to the BCC labeled by the *deeper* endpoint's
     cluster (see ``bcc_edges``).
     """
-    _, tags = _cc_and_tags(sym, vertices, cc, strategy)
+    _check_strategy(strategy)
+    _, tags = _cc_and_tags(sym, vertices, cc)
     labels = _fence_cc(sym, tags, vertices)
     return labels.select("id", F.col("component").alias("bcc"))
 
@@ -377,7 +152,7 @@ def bcc_edges(
     sym: DataFrame,
     vertices: DataFrame,
     *,
-    strategy: str = "level",
+    strategy: str = "euler",
     cc: DataFrame | None = None,
     tags: DataFrame | None = None,
 ) -> DataFrame:
@@ -390,8 +165,9 @@ def bcc_edges(
     ``cc``/``tags``: optionally reuse already-computed intermediates
     (callers like ``bcc_summary`` need them anyway — saves full passes).
     """
+    _check_strategy(strategy)
     if tags is None:
-        _, tags = _cc_and_tags(sym, vertices, cc, strategy)
+        _, tags = _cc_and_tags(sym, vertices, cc)
     labels = _fence_cc(sym, tags, vertices).select(
         "id", F.col("component").alias("lbl")
     )
@@ -436,7 +212,7 @@ def bcc_edges_canonical(
     sym: DataFrame,
     vertices: DataFrame,
     *,
-    strategy: str = "level",
+    strategy: str = "euler",
     cc: DataFrame | None = None,
 ) -> DataFrame:
     """(src, dst, bcc) with tree-independent canonical labels
@@ -452,7 +228,7 @@ def articulation_points(
     sym: DataFrame,
     vertices: DataFrame,
     *,
-    strategy: str = "level",
+    strategy: str = "euler",
     cc: DataFrame | None = None,
 ) -> DataFrame:
     """(id): vertices whose removal disconnects their component.
@@ -477,7 +253,7 @@ def tarjan_vishkin_bcc_edges(
     sym: DataFrame,
     vertices: DataFrame,
     *,
-    strategy: str = "level",
+    strategy: str = "euler",
     cc: DataFrame | None = None,
 ) -> DataFrame:
     """(src, dst, bcc) for src < dst: per-edge BCC via the Tarjan-Vishkin
@@ -493,7 +269,8 @@ def tarjan_vishkin_bcc_edges(
     of the fence's *critical* predicate). Aux connectivity labels tree
     edges; a non-tree edge adopts its deeper endpoint's label.
     """
-    _, tags = _cc_and_tags(sym, vertices, cc, strategy)
+    _check_strategy(strategy)
+    _, tags = _cc_and_tags(sym, vertices, cc)
     ts = tags.select(
         F.col("id").alias("src"), F.col("parent").alias("p_src"),
         F.col("first").alias("f_src"), F.col("last").alias("l_src"),
@@ -529,12 +306,12 @@ def tarjan_vishkin_bcc_edges(
     aux_sym = links.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).unionByName(links.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    # cache + probe-materialize + release (r6): auto references the aux
-    # edge set twice (count probe + residual); uncached it would derive
-    # the whole link construction twice
+    # cache + probe-materialize + release (r6): two-phase references the
+    # aux edge set twice (count probe + residual); uncached it would
+    # derive the whole link construction twice
     aux_sym = aux_sym.cache()
     nodes = nonroot.select("id")
-    labels = connected_components_auto(aux_sym, nodes).select(
+    labels = connected_components_two_phase(aux_sym, nodes).select(
         "id", F.col("component").alias("lbl")
     )
     aux_sym.unpersist()
@@ -557,7 +334,7 @@ def _bcc_summary_driver(pairs, n_vertices: int):
     over the collected (src < dst) edge pairs. The summary's four counts
     are graph INVARIANTS — biconnected components are a unique edge
     partition, connectivity a unique vertex partition — so any correct
-    algorithm produces the identical row; strategy only picks machinery.
+    algorithm produces the identical row.
     Returns (n_cc, n_bcc, largest_bcc_edges, n_bridges) mirroring the
     distributed aggregate exactly (empty partition -> (n_cc, 0, None,
     None), the aggregate-over-zero-rows shape)."""
@@ -625,7 +402,7 @@ def bcc_summary(
     sym: DataFrame,
     vertices: DataFrame,
     *,
-    strategy: str = "level",
+    strategy: str = "euler",
     cc: DataFrame | None = None,
     max_driver_edges: int | None = None,
 ) -> DataFrame:
@@ -635,19 +412,16 @@ def bcc_summary(
     cluster, bridges = single-edge BCCs).
 
     Hybrid (r6, the engine's shrink-then-residual idiom, same budget
-    class as ``connected_components_auto``'s zero-round path): when the
-    edge table fits the driver budget, ONE collect + sequential
-    Hopcroft-Tarjan computes the whole summary — the counts are graph
-    invariants, so the row is identical to either distributed strategy's
-    (differential-tested). Past ``max_driver_edges`` (default
-    ``euler.MAX_DRIVER_ROWS``) the distributed machinery below runs
+    class as ``connected_components_two_phase``'s zero-round direct
+    path): when the edge table fits the driver budget, ONE collect +
+    sequential Hopcroft-Tarjan computes the whole summary — the counts
+    are graph invariants, so the row is identical to the distributed
+    path's (differential-tested). Past ``max_driver_edges`` (default
+    ``euler.MAX_DRIVER_ROWS``) the distributed euler machinery below runs
     unchanged — that is the 100 TB path."""
-    from pasgal_spark.graph.euler import MAX_DRIVER_ROWS
-
     # validated before the driver fast path, so small and large inputs
     # reject the same arguments
-    if strategy not in ("level", "euler"):
-        raise ValueError(f"bcc strategy must be 'level' or 'euler', got {strategy!r}")
+    _check_strategy(strategy)
     budget = MAX_DRIVER_ROWS if max_driver_edges is None else max_driver_edges
     m_upper = sym.count()  # cheap on the pinned/cached ingest leaf
     if m_upper <= 2 * budget:
@@ -660,11 +434,11 @@ def bcc_summary(
             [row], "n_cc long, n_bcc long, largest_bcc_edges long, n_bridges long"
         )
 
-    cc, tags = _cc_and_tags(sym, vertices, cc, strategy)
+    cc, tags = _cc_and_tags(sym, vertices, cc)
     # distinct-count as a 1-row broadcast relation: rides the final
     # aggregate's job instead of paying its own driver action (r6)
     ncc = cc.agg(F.countDistinct("component").alias("n_cc"))
-    e = bcc_edges(sym, vertices, strategy=strategy, cc=cc, tags=tags)
+    e = bcc_edges(sym, vertices, cc=cc, tags=tags)
     per = e.groupBy("bcc").agg(F.count(F.lit(1)).alias("n_edges"))
     agg = per.agg(
         F.count(F.lit(1)).alias("n_bcc"),

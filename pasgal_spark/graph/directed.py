@@ -10,14 +10,14 @@ Completes the reference's four-kernel suite (BFS/SSSP live in
                            superstep; the reference's concurrent hash table
                            (src/SCC/multi_reach.h:21-139) *is* Spark's
                            shuffle dedup.
-- ``scc``                — forward/backward min-label coloring: the
-                           deterministic DataFrame rendition of BGSS-style
-                           SCC (src/SCC/scc.h:17-203). Each phase colors
-                           vertices by the min root reaching them forward,
-                           then claims the SCC of each root by backward
-                           reachability inside the color; settled vertices
-                           leave the working set (the reference's ``trim``
-                           + settled-bit idiom, src/SCC/scc.h:26-27,39-49).
+- ``scc``                — trim, giant-first forward/backward reach, then
+                           exponential multi-source batches: the
+                           deterministic DataFrame rendition of the
+                           reference's SCC (src/SCC/scc.h:17-203). Each
+                           batch claims fwd_reach(s) ∩ bwd_reach(s) for
+                           every source s at once; settled vertices leave
+                           the working set (the reference's ``trim`` +
+                           settled-bit idiom, src/SCC/scc.h:26-27,39-49).
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from pasgal_spark.plans.lineage import fast_pin, pin
 
-from pasgal_spark.graph.kernels import _hint_state, _min_label
+from pasgal_spark.graph.kernels import _hint_state
 
 
 def _frontier_expand(
@@ -130,23 +130,6 @@ def multi_reachability(
     )
 
 
-def _min_label_to_fixpoint(
-    edges: DataFrame, labels: DataFrame, *, max_iterations: int = 200
-) -> DataFrame:
-    """Propagate min label along directed edges until fixpoint.
-
-    labels: (id, lbl) — every vertex present. Returns same shape.
-    ``kernels.min_label_step`` (no pointer jump, no join hint: the work
-    graphs are shrunken derived tables) through the kernels' overlapped
-    fixpoint loop, shared with hash-min CC; raises when the budget runs
-    out before the fixpoint.
-    """
-    return _min_label(
-        edges, labels, "lbl", rounds=max_iterations, converge=True,
-        checkpoint_every=3, hinted=False, who="_min_label_to_fixpoint",
-    )
-
-
 def scc(
     edges: DataFrame,
     vertices: DataFrame,
@@ -173,7 +156,7 @@ def scc(
        ``growth``; per batch, SCC(s) = fwd_reach(s) ∩ bwd_reach(s) for
        every source s at once (multi-reachability), so a chain of k
        trivial/small SCCs settles in O(log k) batch rounds instead of the
-       O(k) phases of min-label coloring (kept as ``scc_coloring``).
+       O(k) phases of min-label coloring.
 
     Raises if the round budget is exhausted with vertices unsettled
     (every batch settles at least its sources, so this bounds runaways
@@ -278,92 +261,6 @@ def scc(
     for df in settled_parts[1:]:
         out = out.unionByName(df)
     return out.select("id", "scc")
-
-
-def scc_coloring(
-    edges: DataFrame,
-    vertices: DataFrame,
-    *,
-    max_phases: int = 50,
-) -> DataFrame:
-    """(id, scc): strongly connected components, scc = min member id.
-
-    Coloring algorithm (deterministic): per phase, (1) forward-propagate
-    min vertex id to fixpoint → color(v); (2) a vertex whose color equals
-    its own id is a root; (3) backward-propagate root ids along edges
-    *within the same color* — vertices reached share a cycle with the root
-    through color-internal paths, so they form the root's SCC; (4) settle
-    them, shrink the working graph, repeat. Trivial SCCs settle in the
-    phase their vertex becomes a root.
-
-    Kept as the BGSS-style baseline; ``scc`` (trim + giant-first + batched
-    multi-reach) is the scalable default — coloring settles one color
-    generation per phase, which is O(chain length) phases on SCC-chain
-    topologies (see tests/test_directed.py).
-    """
-    settled = None  # (id, scc)
-    work_edges = edges.transform(pin)
-    work_vertices = vertices.select("id").transform(pin)
-
-    for _ in range(max_phases):
-        if work_vertices.isEmpty():
-            break
-        # (1) forward min-label coloring
-        colors = _min_label_to_fixpoint(
-            work_edges, work_vertices.select("id", work_vertices.id.alias("lbl"))
-        ).withColumnRenamed("lbl", "color")
-
-        # (2+3) backward reach of roots inside their color: reverse edges,
-        # keep only edges whose endpoints share a color.
-        ec = (
-            work_edges.join(colors.withColumnRenamed("id", "src"), "src")
-            .withColumnRenamed("color", "c_src")
-            .join(
-                colors.select(F.col("id").alias("dst"), F.col("color").alias("c_dst")),
-                "dst",
-            )
-            .filter("c_src = c_dst")
-            .select(F.col("dst").alias("src"), F.col("src").alias("dst"))  # reversed
-            .transform(pin)
-        )
-        roots = colors.filter("id = color").select(
-            "id", F.col("id").alias("source")
-        )
-        # backward frontier propagation from all roots at once
-        visited = roots.transform(pin)
-        frontier = visited
-        while True:
-            nxt = (
-                ec.join(frontier, ec.src == frontier.id)
-                .select(ec.dst.alias("id"), "source")
-                .distinct()
-                .join(visited, ["id", "source"], "left_anti")
-                .transform(pin)
-            )
-            if nxt.isEmpty():
-                break
-            visited = visited.unionByName(nxt).transform(pin)
-            frontier = nxt
-        # a vertex can only be backward-reached by its own color's root
-        # (edges are color-internal and sources are the color roots)
-        newly = visited.withColumnRenamed("source", "scc")
-        if newly.isEmpty():  # defensive: every phase settles >= the roots
-            break
-
-        settled = (
-            newly if settled is None else settled.unionByName(newly)
-        ).transform(pin)
-
-        work_vertices = work_vertices.join(newly, "id", "left_anti").transform(pin)
-        work_edges = (
-            work_edges.join(newly.select(F.col("id").alias("src")), "src", "left_anti")
-            .join(newly.select(F.col("id").alias("dst")), "dst", "left_anti")
-            .select("src", "dst")
-            .transform(pin)
-        )
-    if settled is None:
-        return vertices.sparkSession.createDataFrame([], "id long, scc long")
-    return settled.select("id", "scc")
 
 
 def spanning_forest(sym: DataFrame, vertices: DataFrame, cc: DataFrame) -> DataFrame:

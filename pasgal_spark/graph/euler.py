@@ -1,8 +1,8 @@
 """Diameter-independent FAST-BCC machinery: Borůvka forest + Euler tour.
 
-The level-sweep tagging in ``pasgal_spark.graph.bcc`` costs O(tree depth)
-supersteps — fine at web diameters (~650) but pathological on the
-reference's grid corpus (diameters 59k-102k,
+The tagging behind ``pasgal_spark.graph.bcc``. A BFS forest with
+level-by-level tagging would cost O(tree depth) supersteps — pathological
+on the reference's grid corpus (diameters 59k-102k,
 /root/reference/src/utils/diameter.tsv:8-9). This module re-derives the
 reference's own scale path (parallel Euler tour via list ranking,
 /root/reference/src/BCC/fast-bcc.h:32-148, and sparse-table range-minmax,
@@ -871,8 +871,8 @@ def euler_bcc_tags(
     forest: DataFrame | None = None,
 ) -> DataFrame:
     """(id, parent, first, last, low, high): full FAST-BCC tag set with an
-    O(log n) superstep bound — the diameter-safe alternative to
-    ``bcc.tree_tags`` (drop-in for ``bcc.fence_filter``). Pass ``forest``
+    O(log n) superstep bound at any diameter — the tags
+    ``bcc.fence_filter`` consumes. Pass ``forest``
     when the caller already derived it (``boruvka_forest_cc``) to avoid a
     second contraction."""
     if forest is None:

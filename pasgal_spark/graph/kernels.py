@@ -25,13 +25,12 @@ Each kernel is the Spark-native re-expression of a reference algorithm
                         orientation + two joins over the edge table.
 - ``degree_analytics`` — port of src/basic_analytics/basic_analytics.cpp:38-73.
 
-Two superstep functions carry every loop of this module, the kernels of
-``pasgal_spark.graph.directed`` and the resumable drivers of
-``pasgal_spark.plans.checkpoints``: ``pagerank_step`` (one PageRank round)
-and ``min_label_step`` (one round of min-label adoption, optionally with a
-pointer jump — hash-min CC, two-phase CC's shrink rounds, LPA and SCC's
-coloring). Each is one join-aggregate: messages over the edge table,
-unioned with the state row and folded by one ``groupBy(id)``.
+Two superstep functions carry every PageRank and min-label loop of this
+module and the resumable drivers of ``pasgal_spark.plans.checkpoints``:
+``pagerank_step`` (one PageRank round) and ``min_label_step`` (one round of
+min-label adoption, optionally with a pointer jump — hash-min CC, two-phase
+CC's shrink rounds and LPA). Each is one join-aggregate: messages over the
+edge table, unioned with the state row and folded by one ``groupBy(id)``.
 
 Scale notes (100 TB framing): the edge table is the big, static relation —
 it is scanned once per superstep and never shuffled after the initial
@@ -68,9 +67,9 @@ from pasgal_spark.plans.lineage import fast_pin, pin
 def _hint_state(df: DataFrame) -> DataFrame:
     """Apply the ``shuffle_hash`` join hint to a state/frontier side.
 
-    Only meaningful when the other (edge) side is the ingest-partitioned
-    cached table; kernels joining against derived/shrunken edge sets skip
-    it and let AQE decide."""
+    Pays off when the other (edge) side is the ingest-partitioned cached
+    table; ``directed``'s reachability kernels skip it for ``scc``'s
+    shrunken work graphs and let AQE decide."""
     return df.hint("shuffle_hash")
 
 
@@ -409,7 +408,7 @@ def pagerank(
 
 
 # ---------------------------------------------------------------------------
-# Min-label supersteps: connected components, label propagation, coloring
+# Min-label supersteps: connected components, label propagation
 # ---------------------------------------------------------------------------
 
 def min_label_step(
@@ -419,11 +418,10 @@ def min_label_step(
     col: str,
     *,
     pointer_jump: bool = False,
-    hinted: bool = True,
 ) -> DataFrame:
     """One min-label superstep → (id, col, old). The one step of hash-min
-    and two-phase CC, label propagation, ``directed.scc_coloring`` and the
-    checkpointed CC/LPA drivers.
+    and two-phase CC, label propagation and the checkpointed CC/LPA
+    drivers.
 
     Every vertex of ``labels`` (id, col) adopts the min of its own label
     and the labels ``frontier`` (id, col) sends along ``edges`` — the
@@ -443,11 +441,10 @@ def min_label_step(
     self-join shortcut — the declarative ``find_compress`` path halving,
     external/connectivity.h:7-20): O(log n)-ish rounds on long-diameter
     graphs. The self-join runs over the full state (O(|V|), and jump
-    targets need not be in the frontier). ``hinted``: apply the state-side
-    join hint — only when ``edges`` is the ingest-partitioned cached table
-    (scc_coloring passes False for its shrunken work graphs).
+    targets need not be in the frontier). The frontier side always
+    carries the state-side join hint (``_hint_state``).
     """
-    f = _hint_state(frontier) if hinted else frontier
+    f = _hint_state(frontier)
     msgs = edges.join(f, edges.src == f.id).select(
         edges.dst.alias("id"), col, F.lit(None).cast("long").alias("old")
     )
@@ -487,7 +484,6 @@ def _min_label(
     converge: bool,
     checkpoint_every: int,
     pointer_jump: bool = False,
-    hinted: bool = True,
     on_round: Callable[[int], None] | None = None,
     who: str = "",
 ) -> DataFrame:
@@ -506,8 +502,7 @@ def _min_label(
     cur, pinned, converged = _iterate(
         chain,
         lambda s: min_label_step(
-            edges, s, s.filter(changed), col,
-            pointer_jump=pointer_jump, hinted=hinted,
+            edges, s, s.filter(changed), col, pointer_jump=pointer_jump
         ),
         labels.withColumn("old", F.lit(None).cast("long")),
         rounds=rounds,
@@ -586,15 +581,16 @@ def connected_components_two_phase(
     2 finishes connectivity exactly from ANY labeling whose residual fits
     the budget.
 
-    Budget probe (r6 second wave, = ``connected_components_auto``'s fast
-    path): when the deduped pair count provably fits the driver budget
-    (m <= 2*max_residual for a symmetric edge table), the shrink rounds
-    are pure overhead — phase 2 runs directly over identity labels
-    (labels identical by the canonical-min-id contract, pinned by
-    test_connected_components_auto_matches_two_phase; ``on_round`` never
-    fires because no distributed round ran). Past the budget the fixed
-    shrink supersteps engage unchanged — that is the 100 TB path.
-    ``m_upper``: caller-known bound on ``sym.count()``, skips the probe.
+    Budget probe (r6 second wave): when the deduped pair count provably
+    fits the driver budget (m <= 2*max_residual for a symmetric edge
+    table), the shrink rounds are pure overhead — phase 2 runs directly
+    over identity labels (labels identical by the canonical-min-id
+    contract, pinned by test_two_phase_direct_path_matches_shrink_path;
+    ``on_round`` never fires because no distributed round ran). Past the
+    budget the fixed shrink supersteps engage unchanged — that is the
+    100 TB path. ``m_upper``: caller-known bound on ``sym.count()``, skips
+    the probe; a bound past the budget is trusted as is (callers that
+    want a recount there pass ``None``).
     Precondition of the direct path (held by every engine caller): edge
     endpoints ⊆ ``vertices``.
     """
@@ -616,40 +612,6 @@ def connected_components_two_phase(
     return cc_phase2_union_find(
         sym, labels, max_residual=max_residual,
         context=f"after {shrink_rounds} shrink rounds",
-    )
-
-
-def connected_components_auto(
-    sym: DataFrame,
-    vertices: DataFrame,
-    *,
-    max_residual: int = 4_000_000,
-    m_upper: int | None = None,
-) -> DataFrame:
-    """Exact CC choosing the physical strategy from ONE edge-count probe:
-    when the deduped pair count provably fits the driver budget
-    (m <= 2 * max_residual for a symmetric edge table) skip the shrink
-    supersteps entirely and run the budgeted driver union-find directly
-    over identity labels — ``cc_phase2_union_find``'s own shape with zero
-    distributed rounds. Past the budget, the two-phase path (fixed shrink
-    supersteps + driver residual) engages unchanged: that is the 100 TB
-    path, this is the small-graph job-count path. Labels are canonical min-ids
-    either way (identical to ``connected_components_two_phase``).
-
-    ``m_upper``: a caller-known upper bound on ``sym.count()`` (e.g. the
-    pre-filter edge count for a filtered subgraph) — skips the probe job
-    when the bound already fits the budget (r6)."""
-    if m_upper is None or m_upper > 2 * max_residual:
-        m_upper = sym.count()
-    if m_upper <= 2 * max_residual:
-        identity = vertices.select("id", vertices.id.alias("component"))
-        return cc_phase2_union_find(
-            sym, identity, max_residual=max_residual,
-            context="(auto: direct driver union-find)",
-            identity_labels=True,
-        )
-    return connected_components_two_phase(
-        sym, vertices, max_residual=max_residual, m_upper=m_upper
     )
 
 

@@ -93,19 +93,6 @@ def child(cores: int) -> None:
         kernels.pagerank(edges, vertices, iterations=PR_ITERS).select("id").count()
         pr_walls.append(round(time.time() - t0, 2))
 
-    # --- job 1b: Arrow/NumPy CSR-block PageRank ---------------------------
-    # Same logical kernel, but the message combine runs in Python worker
-    # PROCESSES (mapInPandas) — the substrate path that scales on this VM
-    # (BASELINE.md: procs scale ~25x where JVM threads are flat/negative).
-    from pasgal_spark.graph.arrow_kernels import pagerank_arrow
-
-    pagerank_arrow(edges, vertices, iterations=1).count()  # warmup
-    pra_walls = []
-    for _ in range(TRIALS):
-        t0 = time.time()
-        pagerank_arrow(edges, vertices, iterations=PR_ITERS).select("id").count()
-        pra_walls.append(round(time.time() - t0, 2))
-
     # --- job 2: extraction pipeline --------------------------------------
     pages = synthesize_pages(spark, EX_PAGES).repartition(SHUFFLE_PARTITIONS).cache()
     pages.count()
@@ -123,8 +110,6 @@ def child(cores: int) -> None:
                 "cores": cores,
                 "pagerank": {"wall_sec": min(pr_walls), "trials": pr_walls,
                              "m": m, "iters": PR_ITERS},
-                "pagerank_arrow": {"wall_sec": min(pra_walls), "trials": pra_walls,
-                                   "m": m, "iters": PR_ITERS},
                 "extract": {"wall_sec": min(ex_walls), "trials": ex_walls,
                             "pages": EX_PAGES, "links": n_links},
             }
@@ -165,7 +150,6 @@ def parent() -> None:
         f"shuffle_partitions={SHUFFLE_PARTITIONS}",
         "runs": results,
         "pagerank_supersteps": eff("pagerank", "m", PR_ITERS),
-        "pagerank_arrow_supersteps": eff("pagerank_arrow", "m", PR_ITERS),
         "extract_pipeline": eff("extract", "pages"),
         "target": 0.8,
         "substrate_caveat": "sandbox VM: JVM thread scaling pathological "

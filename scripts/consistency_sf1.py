@@ -8,10 +8,10 @@ paths that must agree exactly:
 
 - connected components: hash-min propagation vs two-phase shrink+UF
   (identical canonical min-id labelings);
-- PageRank: DataFrame kernel vs the CSR/NumPy Arrow kernel (allclose
-  1e-9 per vertex) + probability-mass invariant;
-- BCC: level-sweep FAST-BCC vs Euler-tour FAST-BCC vs Tarjan-Vishkin —
-  three assemblies, one canonical per-edge partition;
+- PageRank: DataFrame kernel vs a NumPy power iteration over the
+  collected edges (allclose 1e-9 per vertex) + probability-mass invariant;
+- BCC: Euler-tour FAST-BCC vs Tarjan-Vishkin — two assemblies, one
+  canonical per-edge partition;
 - BFS vs SSSP with unit weights (dist equality on the reach set).
 
 Non-recursive SQL oracles (dedup/similarity/text/degree/triangles) run
@@ -26,6 +26,8 @@ import os
 import sys
 import time
 
+import numpy as np
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
@@ -33,10 +35,27 @@ from pyspark.sql import functions as F  # noqa: E402
 from pasgal_spark.session import get_spark  # noqa: E402
 from pasgal_spark.graph import build_graph, kernels  # noqa: E402
 from pasgal_spark.graph import bcc as bccmod  # noqa: E402
-from pasgal_spark.graph.arrow_kernels import pagerank_arrow  # noqa: E402
 from pasgal_spark.plans.lineage import pin  # noqa: E402
 
 SPARSE_FILTER = "(least(src, dst) * 31 + greatest(src, dst) * 17) % 8 = 0"
+
+
+def pagerank_numpy(ids: np.ndarray, src: np.ndarray, dst: np.ndarray,
+                   iterations: int, damping: float = 0.85) -> np.ndarray:
+    """Power iteration with dangling-mass redistribution, the formula of
+    ``kernels.pagerank_step``; ``ids`` sorted, ``src``/``dst`` edge
+    endpoints (all in ``ids``). Returns ranks aligned with ``ids``."""
+    n = len(ids)
+    s, d = np.searchsorted(ids, src), np.searchsorted(ids, dst)
+    if not ((ids[s] == src).all() and (ids[d] == dst).all()):
+        raise ValueError("edge endpoint outside the vertex set")
+    out_deg = np.bincount(s, minlength=n).astype(np.float64)
+    dangling = out_deg == 0
+    rank = np.full(n, 1.0 / n)
+    for _ in range(iterations):
+        contrib = np.bincount(d, weights=rank[s] / out_deg[s], minlength=n)
+        rank = (1.0 - damping) / n + damping * (contrib + rank[dangling].sum() / n)
+    return rank
 
 
 def main() -> None:
@@ -66,19 +85,24 @@ def main() -> None:
     check("cc_hashmin_vs_two_phase", diff == 0,
           f"mismatches={diff} wall={time.time()-t0:.1f}s")
 
-    # -- PageRank: DataFrame vs Arrow-CSR kernel + mass invariant ----------
+    # -- PageRank: DataFrame kernel vs NumPy power iteration + mass --------
     t0 = time.time()
     pr_df = kernels.pagerank(g.edges, g.vertices, iterations=10).transform(pin)
     mass = pr_df.agg(F.sum("rank")).first()[0]
     check("pagerank_mass", abs(mass - 1.0) < 1e-6, f"sum={mass:.9f}")
-    pr_ar = pagerank_arrow(g.edges, g.vertices, iterations=10)
-    md = (
-        pr_df.withColumnRenamed("rank", "a")
-        .join(pr_ar.withColumnRenamed("rank", "b"), "id")
-        .agg(F.max(F.abs(F.col("a") - F.col("b")))).first()[0]
+    ids = np.sort(g.vertices.select("id").toPandas()["id"].to_numpy(np.int64))
+    ep = g.edges.select("src", "dst").toPandas()
+    want = pagerank_numpy(
+        ids, ep["src"].to_numpy(np.int64), ep["dst"].to_numpy(np.int64), 10
     )
-    check("pagerank_df_vs_arrow", md < 1e-9,
-          f"max|delta|={md:.2e} wall={time.time()-t0:.1f}s")
+    got = pr_df.toPandas()
+    rows_ok = len(got) == len(ids)
+    md = np.abs(
+        got["rank"].to_numpy() - want[np.searchsorted(ids, got["id"].to_numpy())]
+    ).max()
+    check("pagerank_df_vs_numpy", rows_ok and md < 1e-9,
+          f"rows={len(got)}/{len(ids)} max|delta|={md:.2e} "
+          f"wall={time.time()-t0:.1f}s")
 
     # -- BFS vs unit-weight SSSP -------------------------------------------
     t0 = time.time()
@@ -93,27 +117,20 @@ def main() -> None:
     check("bfs_vs_unit_sssp", diff == 0 and cnt_b == cnt_s,
           f"mismatches={diff} rows={cnt_b}/{cnt_s} wall={time.time()-t0:.1f}s")
 
-    # -- BCC: three assemblies, one canonical partition --------------------
+    # -- BCC: two assemblies, one canonical partition ----------------------
     t0 = time.time()
     sparse = pin(g.sym.filter(SPARSE_FILTER))
     cc = kernels.connected_components_two_phase(sparse, g.vertices).transform(pin)
-    lvl = bccmod.bcc_edges_canonical(
-        sparse, g.vertices, strategy="level", cc=cc).transform(pin)
-    eul = bccmod.bcc_edges_canonical(
-        sparse, g.vertices, strategy="euler", cc=cc).transform(pin)
+    eul = bccmod.bcc_edges_canonical(sparse, g.vertices, cc=cc).transform(pin)
     tv = bccmod.canonicalize_edge_labels(
         bccmod.tarjan_vishkin_bcc_edges(sparse, g.vertices, cc=cc)
     ).transform(pin)
-    d1 = lvl.withColumnRenamed("bcc", "a").join(
-        eul.withColumnRenamed("bcc", "b"), ["src", "dst"]
-    ).filter("a <> b").count()
-    d2 = lvl.withColumnRenamed("bcc", "a").join(
+    diff = eul.withColumnRenamed("bcc", "a").join(
         tv.withColumnRenamed("bcc", "b"), ["src", "dst"]
     ).filter("a <> b").count()
-    rows = (lvl.count(), eul.count(), tv.count())
-    check("bcc_level_vs_euler_vs_tv",
-          d1 == 0 and d2 == 0 and len(set(rows)) == 1,
-          f"mismatches=({d1},{d2}) rows={rows} wall={time.time()-t0:.1f}s")
+    rows = (eul.count(), tv.count())
+    check("bcc_euler_vs_tv", diff == 0 and rows[0] == rows[1],
+          f"mismatches={diff} rows={rows} wall={time.time()-t0:.1f}s")
 
     print("FAILURES:", ", ".join(failures) if failures else "none")
     sys.exit(1 if failures else 0)

@@ -163,24 +163,6 @@ def main() -> None:
         print("  FAIL (Exchange between the join and the edge cache scan)")
         print(p[:2500])
 
-    # 3c. BCC level superstep (spanning_tree expansion): edge side cached,
-    #     frontier side is the only moving relation.
-    frontier = g.vertices.limit(4).select("id", g.vertices.id.alias("parent"))
-    level = (
-        g.sym.join(frontier, g.sym.src == frontier.id)
-        .select(g.sym.dst.alias("id"), g.sym.src.alias("parent"))
-        .groupBy("id")
-        .agg(F.min("parent").alias("parent"))
-    )
-    p = plan_of(level)
-    check(
-        "bcc level superstep",
-        p,
-        must=["Scan ExistingRDD", "HashAggregate"],
-        must_not=[],
-    )
-    print(f"  [{'x' if _edge_side_unshuffled(p) else ' '}] cached edge side not re-exchanged")
-
     # 4. extractor: Python only at the extraction boundary
     from pasgal_spark.sources.pages import pages_from_documents
     from pasgal_spark.sources.extract import extract_links, links_to_edges

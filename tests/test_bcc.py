@@ -5,7 +5,6 @@ the reference's own verification strategy (fast-bcc checked against
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from pasgal_spark.graph import bcc as bccmod
 from tests.conftest import edges_df, vertices_df
@@ -21,7 +20,7 @@ def _sym_pairs(pairs):
     return sorted(s)
 
 
-def _spark_edge_groups(spark, n, pairs, strategy="level"):
+def _spark_edge_groups(spark, n, pairs, strategy="euler"):
     sym = edges_df(spark, _sym_pairs(pairs))
     vertices = vertices_df(spark, range(n))
     rows = bccmod.bcc_edges(sym, vertices, strategy=strategy).collect()
@@ -46,7 +45,8 @@ PATH = [(i, i + 1) for i in range(6)]
 THETA = [(0, 1), (1, 2), (2, 5), (0, 3), (3, 5), (0, 4), (4, 5)]
 
 
-@pytest.mark.parametrize("strategy", ["level", "euler"])
+# euler is the only strategy; the parameter keeps the test ids stable
+@pytest.mark.parametrize("strategy", ["euler"])
 @pytest.mark.parametrize(
     "pairs,n",
     [(FIG8, 8), (CHORD, 5), (PATH, 7), (THETA, 6)],
@@ -58,7 +58,7 @@ def test_bcc_edge_partition_matches_hopcroft_tarjan(spark, pairs, n, strategy):
     assert got == want
 
 
-@pytest.mark.parametrize("strategy", ["level", "euler"])
+@pytest.mark.parametrize("strategy", ["euler"])
 def test_bcc_random_graph_matches_oracle(spark, strategy):
     # Deterministic hash-derived graph (the reference's synthetic idiom,
     # src/graph.h:397-433): ~2n edges over n=40 vertices, plus a guaranteed
@@ -88,46 +88,29 @@ def _long_diameter_pairs():
 
 
 def test_bcc_euler_long_diameter_matches_oracle(spark):
-    """The level-sweep path would need ~diameter supersteps here; the
-    euler strategy (Borůvka + list ranking + sparse table) stays
-    O(log n) and must still match Hopcroft-Tarjan exactly."""
+    """A BFS level sweep would need ~diameter supersteps here; the euler
+    pipeline (Borůvka + list ranking + sparse table) stays O(log n) and
+    must still match Hopcroft-Tarjan exactly."""
     n, pairs = _long_diameter_pairs()
-    got = _spark_edge_groups(spark, n, pairs, "euler")
+    got = _spark_edge_groups(spark, n, pairs)
     want = bcc_oracle(n, pairs)
     assert got == want
 
 
-def test_spanning_tree_raises_instead_of_truncating(spark):
-    """No silent-partial path: a component deeper than max_depth must
-    raise (the scc budget idiom), never return a truncated tree."""
-    pairs = [(i, i + 1) for i in range(30)]
-    sym = edges_df(spark, _sym_pairs(pairs))
-    vertices = vertices_df(spark, range(31))
-    from pasgal_spark.graph.kernels import connected_components_two_phase
-
-    cc = connected_components_two_phase(sym, vertices)
-    with pytest.raises(RuntimeError, match="depth budget"):
-        bccmod.spanning_tree(sym, vertices, cc, max_depth=10)
-
-
 def test_bcc_edges_canonical_labels_are_min_edge_keys(spark):
     """Canonical per-edge labels: every cluster's label equals the min
-    normalized edge key in the cluster, and level/euler strategies agree
-    exactly (tree-independence of the canonical form)."""
+    normalized edge key in the cluster (tree-independence of the
+    canonical form)."""
     n = 8
     sym = edges_df(spark, _sym_pairs(FIG8))
     vertices = vertices_df(spark, range(n))
-    lvl = {
-        (r["src"], r["dst"]): r["bcc"]
-        for r in bccmod.bcc_edges_canonical(sym, vertices, strategy="level").collect()
-    }
     eul = {
         (r["src"], r["dst"]): r["bcc"]
-        for r in bccmod.bcc_edges_canonical(sym, vertices, strategy="euler").collect()
+        for r in bccmod.bcc_edges_canonical(sym, vertices).collect()
     }
-    assert lvl == eul
-    for (s, d), lbl in lvl.items():
-        keys = [s2 * 2**32 + d2 for (s2, d2), l2 in lvl.items() if l2 == lbl]
+    assert len(eul) == len(FIG8)
+    for (s, d), lbl in eul.items():
+        keys = [s2 * 2**32 + d2 for (s2, d2), l2 in eul.items() if l2 == lbl]
         assert lbl == min(keys)
 
 
@@ -182,10 +165,11 @@ def test_bcc_summary_counts(spark):
 
 def test_bcc_summary_rejects_bad_strategy_on_driver_path(spark):
     """The strategy is validated before the driver fast path: a small graph
-    rejects what a large one would."""
+    rejects what a large one would — the removed "level" value included."""
     sym = edges_df(spark, _sym_pairs(FIG8))
-    with pytest.raises(ValueError, match="strategy"):
-        bccmod.bcc_summary(sym, vertices_df(spark, range(8)), strategy="bogus")
+    for strategy in ("bogus", "level"):
+        with pytest.raises(ValueError, match="strategy"):
+            bccmod.bcc_summary(sym, vertices_df(spark, range(8)), strategy=strategy)
 
 
 def test_bcc_summary_driver_ignores_duplicate_edge_rows(spark):
@@ -195,31 +179,6 @@ def test_bcc_summary_driver_ignores_duplicate_edge_rows(spark):
     plain = bccmod.bcc_summary(edges_df(spark, _sym_pairs(FIG8)), vertices)
     dup = bccmod.bcc_summary(edges_df(spark, _sym_pairs(FIG8) + [(0, 2)]), vertices)
     assert tuple(dup.first()) == tuple(plain.first())
-
-
-def test_relabeled_forest_is_dense_per_tree(spark):
-    """Forest output form (reference src/graph.h:436-443): local ids are a
-    dense 0-based preorder per tree with the root at 0, and every child's
-    local parent is a valid local id of the same tree."""
-    from pasgal_spark.graph.kernels import connected_components_two_phase
-
-    n = 8
-    sym = edges_df(spark, _sym_pairs(FIG8))
-    vertices = vertices_df(spark, range(n))
-    cc = connected_components_two_phase(sym, vertices)
-    tree = bccmod.spanning_tree(sym, vertices, cc)
-    tags = bccmod.tree_tags(tree, sym)
-    rows = bccmod.relabeled_forest(tree, tags).collect()
-    by_comp = {}
-    for r in rows:
-        by_comp.setdefault(r["component"], []).append(r)
-    for comp, rs in by_comp.items():
-        ids = sorted(r["local_id"] for r in rs)
-        assert ids == list(range(len(rs)))  # dense 0-based
-        roots = [r for r in rs if r["id"] == comp]
-        assert len(roots) == 1 and roots[0]["local_id"] == 0
-        valid = set(ids)
-        assert all(r["local_parent"] in valid for r in rs)
 
 
 # -- r5 hybrid driver/distributed path differentials -------------------------
@@ -290,21 +249,22 @@ def test_euler_stage_driver_paths_match_distributed(spark):
     assert mm_dist.exceptAll(mm_np).count() == 0
 
 
-def test_connected_components_auto_matches_two_phase(spark):
+def test_two_phase_direct_path_matches_shrink_path(spark):
     from pasgal_spark.graph import kernels
 
     pairs, n = _random_graph(4, 100, 130)
     sym = edges_df(spark, _sym_pairs(pairs))
     vertices = vertices_df(spark, range(n))
-    want = kernels.connected_components_two_phase(sym, vertices)
-    # driver path and the exact-budget boundary (probe-first rule:
-    # a residual exactly at the budget must succeed, not raise)
-    got_auto = kernels.connected_components_auto(sym, vertices)
+    # a bound past the budget forces the shrink rounds + residual path
+    want = kernels.connected_components_two_phase(sym, vertices, m_upper=10**12)
+    # the direct driver path and its exact-budget boundary (probe-first
+    # rule: a residual exactly at the budget must succeed, not raise)
+    got_direct = kernels.connected_components_two_phase(sym, vertices)
     n_pairs = sym.count() // 2
-    got_edge = kernels.connected_components_auto(
+    got_edge = kernels.connected_components_two_phase(
         sym, vertices, max_residual=n_pairs
     )
-    for got in (got_auto, got_edge):
+    for got in (got_direct, got_edge):
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
 
@@ -312,15 +272,12 @@ def test_connected_components_auto_matches_two_phase(spark):
 def test_bcc_summary_driver_matches_distributed(spark):
     """The r6 driver fast path for bcc_summary (one collect + sequential
     Hopcroft-Tarjan) must produce the identical row to the distributed
-    machinery (max_driver_edges=0 forces it) under both strategies — the
-    summary's counts are graph invariants."""
+    euler machinery (max_driver_edges=0 forces it) — the summary's
+    counts are graph invariants."""
     for seed in (11, 12):
         pairs, n = _random_graph(seed, 120, 160)
         sym = edges_df(spark, _sym_pairs(pairs))
         vertices = vertices_df(spark, range(n))
         fast = bccmod.bcc_summary(sym, vertices).first()
-        for strategy in ("level", "euler"):
-            dist = bccmod.bcc_summary(
-                sym, vertices, strategy=strategy, max_driver_edges=0
-            ).first()
-            assert tuple(fast) == tuple(dist), f"seed {seed} {strategy}"
+        dist = bccmod.bcc_summary(sym, vertices, max_driver_edges=0).first()
+        assert tuple(fast) == tuple(dist), f"seed {seed}"

@@ -1,15 +1,11 @@
-"""Directed kernels (reachability / multi-reach / SCC / spanning forest)
-and the Arrow CSR-block PageRank variant."""
+"""Directed kernels (reachability / multi-reach / SCC / spanning forest)."""
 
 from __future__ import annotations
 
-import math
 from collections import defaultdict
 
 from pasgal_spark.graph import directed, kernels
-from pasgal_spark.graph.arrow_kernels import pagerank_arrow
 from tests.conftest import edges_df, vertices_df
-from tests.oracles import pagerank_oracle
 
 # digraph: cycle {0,1,2}, cycle {3,4}, chain 2->3, 5 isolated, 6->0
 DI_EDGES = [(0, 1), (1, 2), (2, 0), (3, 4), (4, 3), (2, 3), (6, 0)]
@@ -98,17 +94,6 @@ def test_spanning_forest_long_diameter_chain(spark):
         assert r["component"] == 0
 
 
-def test_pagerank_arrow_matches_dataframe_kernel(spark):
-    edges = edges_df(spark, DI_EDGES)
-    verts = vertices_df(spark, range(DI_N))
-    a = dict(pagerank_arrow(edges, verts, iterations=12).collect())
-    b = dict(kernels.pagerank(edges, verts, iterations=12).collect())
-    exp = pagerank_oracle(DI_N, DI_EDGES, iters=12)
-    for u in range(DI_N):
-        assert math.isclose(a[u], b[u], abs_tol=1e-9)
-        assert math.isclose(a[u], exp[u], abs_tol=1e-9)
-
-
 def _chain_of_cycles(k: int, size: int = 3):
     """k directed `size`-cycles linked in a chain: the coloring algorithm's
     pathological topology (one SCC settles per phase)."""
@@ -134,16 +119,8 @@ def test_scc_chain_of_cycles_matches_oracle_in_log_rounds(spark):
     batch_rounds = sum(1 for kind, _ in rounds if kind == "batch")
     # 12 SCCs: trim settles none (every vertex is on a cycle), giant-first
     # settles one, exponential batches (4, 7, 11, ...) cover the remaining
-    # 11 in <= 3 rounds — vs >= 12 phases for the coloring baseline.
+    # 11 in <= 3 rounds — min-label coloring would need >= 12 phases.
     assert batch_rounds <= 3, rounds
-
-
-def test_scc_coloring_baseline_still_exact(spark):
-    edges_l, n = _chain_of_cycles(5)
-    edges = edges_df(spark, edges_l)
-    verts = vertices_df(spark, range(n))
-    got = dict(directed.scc_coloring(edges, verts).collect())
-    assert got == _scc_oracle(n, edges_l)
 
 
 def test_scc_dag_settles_via_trim(spark):
@@ -158,36 +135,3 @@ def test_scc_dag_settles_via_trim(spark):
     )
     assert got == {i: i for i in range(8)}
     assert all(kind == "trim" for kind, _ in rounds), rounds
-
-
-def test_pagerank_blocked_matches_dataframe_kernel(spark):
-    from pasgal_spark.graph.arrow_kernels import pagerank_blocked
-
-    edges = edges_df(spark, DI_EDGES)
-    verts = vertices_df(spark, range(DI_N))
-    a = dict(pagerank_blocked(edges, verts, iterations=12).collect())
-    b = dict(kernels.pagerank(edges, verts, iterations=12).collect())
-    for u in range(DI_N):
-        assert math.isclose(a[u], b[u], abs_tol=1e-9)
-
-
-def test_min_label_raises_on_budget_exhaustion(spark):
-    """Unconverged min-labels would make scc() settle wrong components —
-    the fixpoint loop must raise when the budget runs out (VERDICT r4 #1)."""
-    import pytest
-
-    edges = edges_df(spark, [(i, i + 1) for i in range(9)])
-    labels = spark.createDataFrame([(i, i) for i in range(10)], "id long, lbl long")
-    with pytest.raises(RuntimeError, match="still changing"):
-        directed._min_label_to_fixpoint(edges, labels, max_iterations=5).collect()
-
-
-def test_min_label_succeeds_at_exact_budget_boundary(spark):
-    """Convergence exactly at max_iterations succeeds: a 10-chain needs 9
-    propagation rounds + 1 confirming round = 10 (probe-before-raise)."""
-    edges = edges_df(spark, [(i, i + 1) for i in range(9)])
-    labels = spark.createDataFrame([(i, i) for i in range(10)], "id long, lbl long")
-    got = dict(
-        directed._min_label_to_fixpoint(edges, labels, max_iterations=10).collect()
-    )
-    assert got == {i: 0 for i in range(10)}

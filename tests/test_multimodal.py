@@ -26,17 +26,6 @@ def test_synthesize_media_deterministic_and_typed(spark):
             assert r["sample_rate"] == 16000
 
 
-def test_fake_decode_image_shapes_and_determinism(spark):
-    media = mm.synthesize_media(spark, 30)
-    f1 = {r["media_id"]: r["features"] for r in mm.fake_decode_image(media).collect()}
-    f2 = {r["media_id"]: r["features"] for r in mm.fake_decode_image(media).collect()}
-    assert f1 == f2
-    assert len(f1) == media.filter("kind = 'image'").count()
-    for v in f1.values():
-        assert len(v) == mm.FEATURE_DIM
-        assert all(0.0 <= x < 1.0 for x in v)
-
-
 def test_decode_image_rejects_non_media_payloads_loudly(spark):
     # legacy opaque-hash payloads are not decodable media: the real
     # decoder must fail per-payload with a clear error, never return junk

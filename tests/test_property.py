@@ -213,13 +213,12 @@ def test_prop_bcc_both_strategies_match_hopcroft_tarjan(spark, g):
     want = bcc_oracle(n, base)
     sym_df = edges_df(spark, sym)
     verts = vertices_df(spark, range(n))
-    for strategy in ("level", "euler"):
-        rows = bcc.bcc_edges(sym_df, verts, strategy=strategy).collect()
-        groups = {}
-        for r in rows:
-            groups.setdefault(r["bcc"], set()).add((r["src"], r["dst"]))
-        got = set(frozenset(grp) for grp in groups.values())
-        assert got == want, strategy
+    rows = bcc.bcc_edges(sym_df, verts).collect()
+    groups = {}
+    for r in rows:
+        groups.setdefault(r["bcc"], set()).add((r["src"], r["dst"]))
+    got = set(frozenset(grp) for grp in groups.values())
+    assert got == want
 
 
 @given(g=graphs())
