@@ -4,7 +4,9 @@ Completes the reference's four-kernel suite (BFS/SSSP live in
 ``kernels``; BCC is documented out-of-scope in SURVEY.md §2D):
 
 - ``reachability``       — boolean BFS over out-edges (reference
-                           src/SCC/reach.h:16-130, minus distances).
+                           src/SCC/reach.h:16-130, minus distances): the
+                           push levels of ``kernels.bfs`` on the same
+                           frontier loop, ``kernels._frontier_loop``.
 - ``multi_reachability`` — label-set propagation: a frontier of
                            (vertex, source_label) pairs, deduped per
                            superstep; the reference's concurrent hash table
@@ -27,68 +29,33 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import fast_pin, pin
+from pasgal_spark.graph.kernels import _frontier_loop, _push_level
+from pasgal_spark.plans.lineage import pin
 
-from pasgal_spark.graph.kernels import _hint_state
 
-
-def _frontier_expand(
-    edges: DataFrame,
-    seed: DataFrame,
-    key_cols: list[str],
-    *,
-    max_iterations: int,
-    who: str,
-    hinted: bool = True,
+def _reach(
+    edges: DataFrame, seed: DataFrame, who: str, max_iterations: int, hinted: bool
 ) -> DataFrame:
-    """Shared BFS-style closure loop for reachability/multi_reachability.
+    """Closure of ``seed`` over ``edges``: push levels keyed on the seed's
+    columns, on ``kernels._frontier_loop``. Level ``max_iterations + 1``
+    is the budget probe: empty (the frontier died exactly at the budget)
+    succeeds, live raises (ADVICE r3)."""
 
-    r6 job diet (was: eager-checkpoint nxt + isEmpty + eager-checkpoint
-    visited = 3 jobs per level): per level ONE count job on the cached
-    frontier; visited stays a lazy union of fast_pin'd leaves, re-pinned
-    every 3 levels; the result is pinned before the caches are released.
-    ``hinted``: apply the state-side join hint — only when ``edges`` is
-    the ingest-partitioned cached table (scc passes False for its
-    shrunken work graphs, where the hint would force a pointless
-    edge-side exchange).
-    """
-    visited = seed.transform(pin)
-    frontier = visited
-    live_caches: list[DataFrame] = []
-    try:
-        for it in range(max_iterations + 1):
-            f = _hint_state(frontier) if hinted else frontier
-            nxt = (
-                edges.join(f, edges.src == f.id)
-                .select(edges.dst.alias("id"), *key_cols[1:])
-                .distinct()
-                .join(visited, key_cols, "left_anti")
+    def on_level(d: int, size: int) -> None:
+        if d > max_iterations and size:
+            raise RuntimeError(
+                f"{who}: frontier still live after {max_iterations} "
+                "supersteps; raise max_iterations (long-diameter graph)"
             )
-            # rebind-then-cache: one Catalyst compile per level (see
-            # kernels._StateChain.advance)
-            nxt = fast_pin(nxt).cache()
-            live_caches.append(nxt)
-            empty = nxt.count() == 0
-            if empty:
-                break
-            if it == max_iterations:
-                # probed after the emptiness test: a graph whose frontier
-                # dies at exactly max_iterations succeeds (ADVICE r3)
-                raise RuntimeError(
-                    f"{who}: frontier still live after {max_iterations} "
-                    "supersteps; raise max_iterations (long-diameter graph)"
-                )
-            visited = visited.unionByName(nxt)
-            if (it + 1) % 3 == 0:
-                visited = pin(visited)
-                for c in live_caches:
-                    c.unpersist()
-                live_caches = []
-            frontier = nxt
-        return pin(visited)
-    finally:
-        for c in live_caches:
-            c.unpersist()
+
+    return _frontier_loop(
+        seed,
+        lambda _, frontier, visited: _push_level(
+            edges, frontier, visited, seed.columns, hinted
+        ),
+        levels=max_iterations + 1,
+        on_level=on_level,
+    )
 
 
 def reachability(
@@ -100,14 +67,10 @@ def reachability(
     Raises if the superstep budget is exhausted with a live frontier —
     a silently truncated reach set would make callers (``scc``) settle
     wrong components; same raise-don't-truncate policy as ``scc``'s
-    round budget.
+    round budget. ``hinted``: see ``kernels._push_level``.
     """
-    spark = edges.sparkSession
-    seed = spark.createDataFrame([(source,)], "id long")
-    return _frontier_expand(
-        edges, seed, ["id"],
-        max_iterations=max_iterations, who="reachability", hinted=hinted,
-    )
+    seed = edges.sparkSession.createDataFrame([(source,)], "id long")
+    return _reach(edges, seed, "reachability", max_iterations, hinted)
 
 
 def multi_reachability(
@@ -118,16 +81,13 @@ def multi_reachability(
 
     Propagates (vertex, label) pairs; `distinct()` per superstep is the
     shuffle-native replacement for the reference's resizable concurrent
-    multimap (src/SCC/resizable_table.h:40-173).
+    multimap (src/SCC/resizable_table.h:40-173). Same budget rule as
+    ``reachability``.
     """
-    spark = edges.sparkSession
-    seed = spark.createDataFrame(
+    seed = edges.sparkSession.createDataFrame(
         [(s, s) for s in sources], "id long, source long"
     )
-    return _frontier_expand(
-        edges, seed, ["id", "source"],
-        max_iterations=max_iterations, who="multi_reachability", hinted=hinted,
-    )
+    return _reach(edges, seed, "multi_reachability", max_iterations, hinted)
 
 
 def scc(

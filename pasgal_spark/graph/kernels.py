@@ -36,18 +36,24 @@ Scale notes (100 TB framing): the edge table is the big, static relation —
 it is scanned once per superstep and never shuffled after the initial
 partitioning-by-src; only the small per-vertex state moves. Message combine
 is expressed as partial+final hash aggregation (map-side combine). Lineage
-is truncated by eager localCheckpoint every ``checkpoint_every`` supersteps
-— on a cluster this would be a parquet/Iceberg checkpoint (see
+is truncated by an eager checkpoint (``lineage.pin``) at a fixed per-kernel
+cadence — on a cluster this would be a parquet/Iceberg checkpoint (see
 pasgal_spark.plans.checkpoints for the resumable variant).
+
+Two loops drive the iterative kernels: the probe loop ``_iterate``
+(PageRank, the min-label loops, LDD, Bellman-Ford SSSP) and the frontier
+loop ``_frontier_loop`` (BFS and ``directed``'s reachability). Δ- and
+ρ-stepping SSSP drive ``_StateChain`` themselves: their step depends on
+the probe's threshold.
 """
 
 from __future__ import annotations
 
-import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import InheritableThread
 
 from pasgal_spark.plans.lineage import fast_pin, pin
 
@@ -73,44 +79,6 @@ def _hint_state(df: DataFrame) -> DataFrame:
     return df.hint("shuffle_hash")
 
 
-def _compile_overlapped(action, compile_thunk):
-    """Run ``compile_thunk`` in a background thread while ``action`` runs
-    on the calling thread; returns ``(action_result, compile_result)``.
-
-    The r6 follow-up to the job-diet work (guide §1.2): after the fusion
-    passes, a superstep's wall is ONE Catalyst compile (fast_pin's
-    ``toRdd()``, measured 0.18-0.4 s at sf0.1) plus ONE probe job
-    (0.12-0.35 s), serialized. But the compile of superstep k+1's plan
-    depends only on superstep k's *leaf* — which exists before the probe
-    runs — not on the probe's result, so the two legs can run
-    concurrently (measured: 8 PageRank supersteps 2.8 s -> 1.9 s).
-
-    ``compile_thunk`` is a plan compile (fast_pin + cache registration).
-    It is NOT job-free: under the engine's AQE default ``toRdd()`` runs the
-    plan's shuffle stages to finalize it (3 jobs measured for a join of two
-    aggregates), and those jobs run on the background thread, outside the
-    caller's job group — a job-group cancel does not stop them. The probe
-    (``action``) and every pin stay on the calling thread. Exceptions from
-    either leg propagate."""
-    box: dict = {}
-
-    def _bg() -> None:
-        try:
-            box["v"] = compile_thunk()
-        except BaseException as e:  # noqa: BLE001 - re-raised on the caller
-            box["e"] = e
-
-    th = threading.Thread(target=_bg, daemon=True)
-    th.start()
-    try:
-        res = action()
-    finally:
-        th.join()
-    if "e" in box:
-        raise box["e"]
-    return res, box["v"]
-
-
 class _StateChain:
     """Superstep state manager: cache every generation, checkpoint periodically.
 
@@ -119,94 +87,54 @@ class _StateChain:
     recomputes the whole chain per reference — measured 10x slowdowns at
     3M edges. ``cache()`` registers the plan so downstream plans substitute
     an InMemoryRelation (shallow plans, zero extra jobs); an eager
-    ``localCheckpoint`` every ``every`` generations truncates lineage and
-    lets superseded generations be unpersisted. On a cluster the
-    localCheckpoint becomes a parquet/Iceberg write
-    (pasgal_spark.plans.checkpoints).
+    ``pin`` every ``every`` generations truncates lineage and lets
+    superseded generations be unpersisted. On a cluster the pin becomes a
+    parquet/Iceberg write (pasgal_spark.plans.checkpoints).
+
+    ``pinned``: whether the generation the caller holds is
+    checkpoint-backed (``advance`` sets it; ``_iterate`` resets it when it
+    hands back the generation before the last one built).
     """
 
-    def __init__(self, every: int = 4) -> None:
+    def __init__(self, every: int) -> None:
         self.every = max(1, every)
         self._gen = 0
         self._live: list[DataFrame] = []
-        self.last_pinned = True  # no generation yet: nothing cache-backed
+        self.pinned = True  # no generation yet: nothing cache-backed
 
-    def advance(self, df: DataFrame, *, force: bool = False) -> DataFrame:
-        self._gen += 1
-        if force or self._gen % self.every == 0:
-            out = df.transform(pin)
-            for c in self._live:
-                c.unpersist()
-            self._live = []
-            self.last_pinned = True
-        else:
-            # fast_pin (r6): LogicalRDD rebind with no action of its own
-            # (under AQE it still runs the plan's shuffle stages; see
-            # lineage.fast_pin). A bare cache()
-            # keeps the full logical tree, and generations referencing
-            # their predecessor 2-3x make Catalyst's canonicalization
-            # walks grow 4x PER GENERATION (measured: 54 s to plan
-            # superstep 8 of a 157k-edge loop). The rebind keeps the
-            # logical plan O(1) per generation; the periodic pin above
-            # still truncates the accumulated RDD lineage. Rebind FIRST,
-            # cache the leaf: the real plan compiles exactly once (caching
-            # the original frame would compile it a second time for the
-            # InMemoryRelation).
-            out = fast_pin(df).cache()
-            self._live.append(out)
-            self.last_pinned = False
-        return out
+    def pins_next(self) -> bool:
+        """Whether the next ``advance`` runs a real pin (a checkpoint job)."""
+        return (self._gen + 1) % self.every == 0
 
-    def advance_overlapped(self, build, probe):
-        """``advance(build())`` overlapped with ``probe()`` — the PREVIOUS
-        generation's materializing action (see ``_compile_overlapped``).
-        ``build`` is a thunk returning the next generation's PLAN: both
-        the py4j DataFrame construction (~0.1 s/superstep) and the
-        Catalyst compile ride the background thread. Returns
-        ``(probe_result, new_generation)``.
-
-        On pin generations the real pin launches a localCheckpoint job,
-        which must stay on the calling thread (bench job-group contract),
-        so those run sequentially — pin FIRST: executing the new
-        generation populates the probed generation's cache as a
-        byproduct, so the probe that follows is a warm-cache read instead
-        of a full materialization (the new generation is computed before
-        the probe's verdict, but that costs extra work only when
-        convergence lands exactly on a pin generation — once per run at
-        worst). Every other generation gets the full build/compile vs
-        probe overlap."""
+    def advance(self, df: DataFrame) -> DataFrame:
         self._gen += 1
         if self._gen % self.every == 0:
-            out = build().transform(pin)
-            row = probe()
-            # Keep the PROBED (previous) generation's cache alive: unlike
-            # ``advance``, the caller may still break with it (the new
-            # generation here is speculative) and seal reads it.
+            out = df.transform(pin)
+            # the newest cached generation (the pin's input) stays alive:
+            # the probe loop still reads it after the pin
             for c in self._live[:-1]:
                 c.unpersist()
             self._live = self._live[-1:]
-            self.last_pinned = True
-            return row, out
-        row, out = _compile_overlapped(probe, lambda: fast_pin(build()).cache())
-        self._live.append(out)
-        self.last_pinned = False
-        return row, out
+            self.pinned = True
+        else:
+            # fast_pin (r6) keeps the logical plan O(1) per generation: a
+            # bare cache() keeps the full tree, and Catalyst's walks over
+            # generations that reference their predecessor 2-3x grew 4x
+            # PER GENERATION (54 s to plan superstep 8 of a 157k-edge
+            # loop). Rebind FIRST, cache the leaf: the plan compiles once.
+            out = fast_pin(df).cache()
+            self._live.append(out)
+            self.pinned = False
+        return out
 
-    def seal(self, df: DataFrame, *, pinned: bool | None = None) -> DataFrame:
-        """Pin ``df`` (derived from the last generation) unless that
+    def seal(self, df: DataFrame) -> DataFrame:
+        """Pin ``df`` (derived from the held generation) unless that
         generation is already checkpoint-backed, then release every live
         cache. Callers MUST route their return value through this (or pin
         it themselves) before the chain is closed — a cache()-backed final
         generation would otherwise recompute its whole lineage on first
-        use after ``close()`` unpersists it.
-
-        ``pinned``: overlapped loops break with the generation BEFORE the
-        (speculative) last one, so ``last_pinned`` describes the wrong
-        generation for them — they pass the sealed generation's own
-        pinned-ness explicitly."""
-        if pinned is None:
-            pinned = self.last_pinned
-        if not pinned:
+        use after ``close()`` unpersists it."""
+        if not self.pinned:
             df = df.transform(pin)
         self.close()
         return df
@@ -226,45 +154,70 @@ def _iterate(
     probe: Callable[[DataFrame], object] | None = None,
     done: Callable[[object], bool] | None = None,
     on_step: Callable[[int, object], None] | None = None,
-) -> tuple[DataFrame, bool, bool]:
-    """The superstep loop of the in-memory kernels: generation k+1 is
-    ``step(generation k)``, starting from ``state``.
+) -> tuple[DataFrame, bool]:
+    """The probe loop of the in-memory kernels: generation k+1 is
+    ``step(generation k)``, starting from ``state``; ``on_step(k, value)``
+    fires once per superstep, k from 1.
 
-    Without ``probe`` it runs exactly ``rounds`` supersteps and takes no
-    action of its own: the chain executes lazily inside its periodic pins
-    and the caller's final ``seal``. With ``probe``, ONE job per superstep
-    (``probe(generation k)``) materializes generation k and returns the
-    value ``done`` tests, overlapped with the compile of generation k+1
-    (``_StateChain.advance_overlapped``); the loop stops at the first
-    generation that is ``done``, or after ``rounds`` probes (None: no cap).
-    ``on_step(k, value)`` fires once per superstep, k from 1 (value NaN
-    without a probe).
+    Without ``probe``: exactly ``rounds`` supersteps and no action of its
+    own — the chain executes inside its periodic pins and the caller's
+    ``seal`` (value NaN). With ``probe``: ONE job per superstep,
+    ``probe(generation k)``, materializes generation k and returns the
+    value ``done`` tests; the loop stops at the first ``done`` generation
+    or after ``rounds`` probes (None: no cap).
 
-    Returns ``(generation, pinned, done)``: the last probed generation (a
-    speculative successor is released by ``seal``), whether it is
-    checkpoint-backed — pass it as ``chain.seal(..., pinned=)`` — and
-    whether ``done`` held."""
+    The only overlap in the engine (r6): generation k+1's compile needs
+    only generation k's leaf, not the probe's verdict, so ``step`` +
+    ``advance`` (py4j plan building, fast_pin's compile) run on a
+    ``pyspark.InheritableThread`` during the probe (8 PageRank supersteps
+    2.8 s -> 1.9 s). The thread copies the caller's local properties, so
+    the shuffle-stage jobs AQE runs inside the compile stay in the
+    caller's job group. On pin generations the pin runs FIRST on the
+    calling thread, then the probe — a warm-cache read, since executing
+    generation k+1 filled generation k's cache. Exceptions from either
+    leg propagate.
+
+    Returns ``(generation, done)``: the last probed generation and
+    whether ``done`` held; ``chain.pinned`` then describes that
+    generation, and ``seal``/``close`` release a built successor."""
     if rounds == 0:
-        return state, True, False
+        return state, False
+
+    def advance_into(box: list, gen: DataFrame) -> None:
+        try:
+            box.append(chain.advance(step(gen)))
+        except BaseException as e:  # noqa: BLE001 - re-raised on the caller
+            box.append(e)
+
     cur = chain.advance(step(state))
-    pinned = chain.last_pinned
+    pinned = chain.pinned
     k = 0
     while True:
         k += 1
-        if probe is None:
-            value, finished = float("nan"), False
-        else:
-            value, nxt = chain.advance_overlapped(
-                lambda: step(cur), lambda: probe(cur)
-            )
-            finished = done(value)
+        value, nxt = float("nan"), None
+        if probe is not None and chain.pins_next():
+            nxt = chain.advance(step(cur))
+            value = probe(cur)
+        elif probe is not None:
+            box: list = []
+            leg = InheritableThread(target=advance_into, args=(box, cur), daemon=True)
+            leg.start()
+            try:
+                value = probe(cur)
+            finally:
+                leg.join()
+            if isinstance(box[0], BaseException):
+                raise box[0]
+            nxt = box[0]
+        finished = probe is not None and done(value)
         if on_step:
             on_step(k, value)
         if finished or k == rounds:
-            return cur, pinned, finished
-        if probe is None:
+            chain.pinned = pinned
+            return cur, finished
+        if nxt is None:
             nxt = chain.advance(step(cur))
-        cur, pinned = nxt, chain.last_pinned
+        cur, pinned = nxt, chain.pinned
 
 
 # ---------------------------------------------------------------------------
@@ -364,10 +317,6 @@ def pagerank(
     iterations: int | None = None,
     tol: float | None = None,
     damping: float = 0.85,
-    # every generation is cache()-registered (see _StateChain), so chains
-    # between eager checkpoints are shallow InMemoryRelation reads; 4
-    # balances lineage truncation against one materialize job per cycle.
-    checkpoint_every: int = 4,
     on_superstep: Callable[[int, float], None] | None = None,
 ) -> DataFrame:
     """PageRank with dangling-mass redistribution → (id, rank).
@@ -383,9 +332,12 @@ def pagerank(
     """
     assert iterations is not None or tol is not None
     base, n, has_dangling = _pagerank_base(edges, vertices)
-    chain = _StateChain(checkpoint_every)
+    # every generation is cache()-registered (see _StateChain), so chains
+    # between pins are shallow InMemoryRelation reads; a pin every 4
+    # balances lineage truncation against one materialize job per cycle
+    chain = _StateChain(4)
     try:
-        cur, pinned, _ = _iterate(
+        cur, _ = _iterate(
             chain,
             lambda s: pagerank_step(
                 edges, s, n=n, damping=damping, has_dangling=has_dangling
@@ -400,9 +352,8 @@ def pagerank(
             done=lambda d: d < tol,
             on_step=on_superstep,
         )
-        # pin the result BEFORE the generation caches (and base) are
-        # released
-        return chain.seal(cur.select("id", "rank"), pinned=pinned)
+        # pin the result BEFORE the caches (and base) are released
+        return chain.seal(cur.select("id", "rank"))
     finally:
         base.unpersist()
 
@@ -482,7 +433,7 @@ def _min_label(
     *,
     rounds: int,
     converge: bool,
-    checkpoint_every: int,
+    every: int,
     pointer_jump: bool = False,
     on_round: Callable[[int], None] | None = None,
     who: str = "",
@@ -496,10 +447,11 @@ def _min_label(
     round that materializes the generation and counts the next frontier,
     overlapped with the next round's compile; raises if ``rounds`` rounds
     do not reach it — unconverged labels would silently be wrong
-    components. ``on_round(i)`` fires per round, i from 0."""
+    components. ``every``: the chain's pin cadence. ``on_round(i)`` fires
+    per round, i from 0."""
     changed = _changed(col)
-    chain = _StateChain(checkpoint_every)
-    cur, pinned, converged = _iterate(
+    chain = _StateChain(every)
+    cur, converged = _iterate(
         chain,
         lambda s: min_label_step(
             edges, s, s.filter(changed), col, pointer_jump=pointer_jump
@@ -516,7 +468,7 @@ def _min_label(
             f"{who}: labels still changing after {rounds} supersteps; "
             "raise max_iterations (long-diameter graph)"
         )
-    return chain.seal(cur.select("id", col), pinned=pinned)
+    return chain.seal(cur.select("id", col))
 
 
 def connected_components(
@@ -524,7 +476,6 @@ def connected_components(
     vertices: DataFrame,
     *,
     max_iterations: int = 100,
-    checkpoint_every: int = 4,
     pointer_jump: bool = True,
     on_round: Callable[[int], None] | None = None,
 ) -> DataFrame:
@@ -542,7 +493,7 @@ def connected_components(
     """
     return _min_label(
         sym, vertices.select("id", vertices.id.alias("component")), "component",
-        rounds=max_iterations, converge=True, checkpoint_every=checkpoint_every,
+        rounds=max_iterations, converge=True, every=4,
         pointer_jump=pointer_jump, on_round=on_round, who="connected_components",
     )
 
@@ -553,7 +504,6 @@ def connected_components_two_phase(
     *,
     shrink_rounds: int = 3,
     max_residual: int = 4_000_000,
-    checkpoint_every: int = 2,
     on_round: Callable[[int], None] | None = None,
     m_upper: int | None = None,
 ) -> DataFrame:
@@ -607,7 +557,7 @@ def connected_components_two_phase(
     # inside the final pin (the labeling feeds three references in phase 2)
     labels = _min_label(
         sym, identity, "component", rounds=shrink_rounds, converge=False,
-        checkpoint_every=checkpoint_every, pointer_jump=True, on_round=on_round,
+        every=2, pointer_jump=True, on_round=on_round,
     )
     return cc_phase2_union_find(
         sym, labels, max_residual=max_residual,
@@ -726,7 +676,6 @@ def label_propagation(
     vertices: DataFrame,
     *,
     rounds: int = 5,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous min-label LPA for a fixed number of rounds → (id, label).
 
@@ -739,7 +688,7 @@ def label_propagation(
     """
     return _min_label(
         sym, vertices.select("id", vertices.id.alias("label")), "label",
-        rounds=rounds, converge=False, checkpoint_every=checkpoint_every,
+        rounds=rounds, converge=False, every=4,
     )
 
 
@@ -820,7 +769,7 @@ def ldd(
     # convergence probes, so the whole wave executes lazily in the
     # periodic pin jobs.
     chain = _StateChain(3)
-    state, pinned, _ = _iterate(
+    state, _ = _iterate(
         chain, step, state.withColumn("old", F.lit(None).cast("long")),
         rounds=radius_cap,
     )
@@ -830,8 +779,7 @@ def ldd(
             (F.col("key") % big).alias("label"),
             # exact integer unpack (shiftright, not double-division floor)
             F.shiftright(F.col("key"), 32).cast("long").alias("cost"),
-        ),
-        pinned=pinned,
+        )
     )
 
 
@@ -839,24 +787,81 @@ def ldd(
 # BFS / SSSP (frontier supersteps; reference §2D)
 # ---------------------------------------------------------------------------
 
+def _push_level(
+    edges: DataFrame, frontier: DataFrame, visited: DataFrame,
+    key_cols: list[str], hinted: bool = True,
+) -> DataFrame:
+    """One push level: expand ``frontier``'s out-edges carrying
+    ``key_cols[1:]`` along, dedup, anti-join ``visited`` on ``key_cols`` —
+    the edge work is proportional to the frontier's degree sum.
+    ``hinted``: apply the state-side join hint — only when ``edges`` is the
+    ingest-partitioned cached table (``scc`` passes False for its shrunken
+    work graphs, where the hint would force a pointless edge-side
+    exchange)."""
+    f = _hint_state(frontier) if hinted else frontier
+    return (
+        edges.join(f, edges.src == f.id)
+        .select(edges.dst.alias("id"), *key_cols[1:])
+        .distinct()
+        .join(visited, key_cols, "left_anti")
+    )
+
+
+def _frontier_loop(
+    seed: DataFrame,
+    build: Callable[[int, DataFrame, DataFrame], DataFrame],
+    *,
+    levels: int,
+    on_level: Callable[[int, int], None],
+) -> DataFrame:
+    """The frontier loop of BFS and ``directed``'s reachability kernels →
+    the pinned visited set: ``seed`` plus every level reached.
+
+    Level d (from 1, at most ``levels``) is ``build(d, frontier,
+    visited)``, rebound and cached (one compile, as in
+    ``_StateChain.advance``) and materialized by ONE count job; then
+    ``on_level(d, size)`` fires (it may raise). An empty level ends the
+    loop; otherwise it joins visited, a lazy union of cached levels
+    re-pinned every 3 levels to bound RDD lineage and release the level
+    caches. The result is pinned before the caches are released."""
+    visited = frontier = seed
+    live: list[DataFrame] = []
+    try:
+        for d in range(1, levels + 1):
+            nxt = fast_pin(build(d, frontier, visited)).cache()
+            live.append(nxt)
+            size = nxt.count()
+            on_level(d, size)
+            if size == 0:
+                break
+            visited = visited.unionByName(nxt)
+            if d % 3 == 0:
+                visited = pin(visited)
+                for c in live:
+                    c.unpersist()
+                live = []
+            frontier = nxt
+        return pin(visited)
+    finally:
+        for c in live:
+            c.unpersist()
+
+
 def bfs(
     sym: DataFrame,
     source: int = 0,
     *,
     max_depth: int = 30,
-    checkpoint_every: int = 1,
     vertices: DataFrame | None = None,
     dense_threshold: float = 0.05,
-    on_superstep: Callable[[int, str, int | None], None] | None = None,
+    on_superstep: Callable[[int, str, int], None] | None = None,
 ) -> DataFrame:
     """Hop distances from ``source`` over the symmetric graph → (id, dist).
 
     Direction-optimizing frontier supersteps (reference
-    src/BFS/bfs.h:140-222):
+    src/BFS/bfs.h:140-222) on ``_frontier_loop``:
 
-    - **push** (sparse frontier): expand the frontier's out-edges, dedup,
-      anti-join visited — the edge work is proportional to the frontier's
-      degree sum.
+    - **push** (sparse frontier): ``_push_level``.
     - **pull** (dense frontier, needs ``vertices``): when the frontier
       exceeds ``dense_threshold * n``, flip to the reference's dense phase
       (bfs.h:140-158) — semi-join the edge table against the (small)
@@ -867,118 +872,46 @@ def bfs(
       shrinking unvisited set. The early-exit per vertex becomes the
       semi-join (first match wins, no dedup of |frontier| copies).
 
-    Without ``vertices`` the loop is pure push (old behavior). Only
-    vertices reached within ``max_depth`` hops are returned.
+    Without ``vertices`` the loop is pure push. ``on_superstep(d, mode,
+    size)`` fires per level with the level's frontier size. Only vertices
+    reached within ``max_depth`` hops are returned.
     """
-    spark = sym.sparkSession
-    visited = spark.createDataFrame([(source, 0)], "id long, dist int")
-    frontier = visited
+    seed = sym.sparkSession.createDataFrame([(source, 0)], "id long, dist int")
     n = vertices.count() if vertices is not None else None
-    frontier_size, visited_size = 1, 1
-    d = 0
-    live_caches: list[DataFrame] = []
-    # r6 job diet: per level ONE count job on the cached frontier (was:
-    # eager-checkpoint nxt + count + eager-checkpoint visited = 3 jobs).
-    # The visited set stays a lazy union of fast_pin'd frontier leaves,
-    # re-pinned every 3 levels to bound RDD lineage and release caches.
-    visited_pin_every = max(1, 3 * max(1, checkpoint_every))
+    frontier_size, visited_size, mode = 1, 1, "push"
 
-    def build_push(depth: int, frontier: DataFrame, visited: DataFrame) -> DataFrame:
-        f = _hint_state(frontier)
-        return (
-            sym.join(f, sym.src == f.id)
-            .select(sym.dst.alias("id"))
-            .distinct()
-            .join(visited, "id", "left_anti")
-            .withColumn("dist", F.lit(depth))
+    def build(d: int, frontier: DataFrame, visited: DataFrame) -> DataFrame:
+        nonlocal mode
+        # Pull pays off only when the unvisited side is smaller than the
+        # frontier (its edge work is ~unvisited in-degree vs frontier
+        # expansion) — the reference's m_frontier vs m_unvisited test
+        # (bfs.h:160-162) with counts as the degree proxy.
+        dense = (
+            n is not None
+            and frontier_size > dense_threshold * n
+            and 0 < n - visited_size < frontier_size
         )
-
-    def build_pull(depth: int, frontier: DataFrame, visited: DataFrame) -> DataFrame:
-        unvisited = vertices.join(visited.select("id"), "id", "left_anti")
-        return (
-            sym.join(unvisited.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .join(frontier.select(F.col("id").alias("src")), "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .withColumn("dist", F.lit(depth))
-        )
-
-    spec: DataFrame | None = None  # speculatively compiled next level (push)
-    try:
-        while d < max_depth:
-            d += 1
-            # Pull pays off only when the unvisited side is smaller than the
-            # frontier (its edge work is ~unvisited in-degree vs frontier
-            # expansion) — the reference's m_frontier vs m_unvisited test
-            # (bfs.h:160-162) with counts as the degree proxy.
-            unvisited_size = (n - visited_size) if n is not None else None
-            dense = (
-                n is not None
-                and frontier_size > dense_threshold * n
-                and 0 < unvisited_size < frontier_size
+        mode = "pull" if dense else "push"
+        if not dense:
+            level = _push_level(sym, frontier, visited, ["id"])
+        else:
+            unvisited = vertices.join(visited.select("id"), "id", "left_anti")
+            level = (
+                sym.join(unvisited.select(F.col("id").alias("dst")), "dst", "left_semi")
+                .join(frontier.select(F.col("id").alias("src")), "src", "left_semi")
+                .select(F.col("dst").alias("id"))
+                .distinct()
             )
-            if spec is not None and not dense:
-                nxt = spec  # compiled during the previous level's count
-            else:
-                if spec is not None:
-                    spec.unpersist()  # speculation was push; level went dense
-                # rebind-then-cache: one Catalyst compile per level (see
-                # _StateChain.advance)
-                nxt = fast_pin(
-                    (build_pull if dense else build_push)(d, frontier, visited)
-                ).cache()
-            spec = None
-            live_caches.append(nxt)
-            will_pin_visited = d % visited_pin_every == 0
-            if n is not None:
-                # dense switch needs exact sizes; the count also
-                # materializes the cache — one job per level, OVERLAPPED
-                # with the speculative compile of the next level's push
-                # shape (the plan depends only on this level's leaf; if
-                # the count flips the next level to pull, the speculation
-                # is discarded and the pull shape compiles sequentially —
-                # at most 1-3 dense levels on a web BFS). Levels that
-                # re-pin the visited union skip speculation: the pin
-                # replaces the leaves the speculative plan would bind to.
-                if not will_pin_visited and d < max_depth:
-                    frontier_size, spec = _compile_overlapped(
-                        nxt.count,
-                        lambda: fast_pin(
-                            build_push(d + 1, nxt, visited.unionByName(nxt))
-                        ).cache(),
-                    )
-                else:
-                    frontier_size = nxt.count()
-                empty = frontier_size == 0
-            else:
-                # pure-push path: a limit-1 probe beats a full frontier scan;
-                # the frontier size is genuinely unknown here, so the callback
-                # receives None (not a sentinel; ADVICE r3)
-                frontier_size = None
-                empty = nxt.isEmpty()
-            if on_superstep:
-                on_superstep(d, "pull" if dense else "push", frontier_size)
-            if empty:
-                break
-            if frontier_size is not None:
-                visited_size += frontier_size
-            visited = visited.unionByName(nxt)
-            if will_pin_visited:
-                if spec is not None:
-                    spec.unpersist()
-                    spec = None
-                visited = pin(visited)
-                for c in live_caches:
-                    c.unpersist()
-                live_caches = []
-            frontier = nxt
-        # pin the result before the frontier caches are released
-        return pin(visited)
-    finally:
-        if spec is not None:
-            spec.unpersist()
-        for c in live_caches:
-            c.unpersist()
+        return level.withColumn("dist", F.lit(d))
+
+    def on_level(d: int, size: int) -> None:
+        nonlocal frontier_size, visited_size
+        frontier_size = size
+        visited_size += size
+        if on_superstep:
+            on_superstep(d, mode, size)
+
+    return _frontier_loop(seed, build, levels=max_depth, on_level=on_level)
 
 
 def sssp(
@@ -987,7 +920,6 @@ def sssp(
     *,
     cap: int = 40,
     max_iterations: int = 100,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Bellman-Ford shortest paths with distances capped at ``cap``.
 
@@ -1036,8 +968,8 @@ def sssp(
     # ONE aggregate job per superstep (r6): materializes the generation and
     # counts senders, overlapped with the next superstep's compile.
     changed = _changed("dist")
-    chain = _StateChain(max(2, checkpoint_every))
-    cur, pinned, converged = _iterate(
+    chain = _StateChain(2)
+    cur, converged = _iterate(
         chain,
         lambda s: step(s, s.filter(changed)),
         dist0.withColumn("old", F.lit(None).cast(wtype)),
@@ -1054,7 +986,7 @@ def sssp(
             "supersteps; raise max_iterations (long-diameter or "
             "small-weight graph)"
         )
-    return chain.seal(cur.select("id", "dist"), pinned=pinned)
+    return chain.seal(cur.select("id", "dist"))
 
 
 def _sssp_source(wedges: DataFrame, source: int) -> tuple[DataFrame, str]:

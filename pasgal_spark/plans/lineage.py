@@ -61,14 +61,17 @@ def fast_pin(df: DataFrame) -> DataFrame:
 
     Jobs: it is zero-job only with AQE off. Under the engine's AQE default
     ``toRdd()`` finalizes the adaptive plan, which runs its shuffle query
-    stages as jobs (3 measured for a join of two aggregates) — on the
-    thread that calls it, before any action.
+    stages as jobs (3 measured for a join of two aggregates) before any
+    action, under the calling thread's local properties — its job group
+    included. The probe loop (``kernels._iterate``) calls it on a
+    background ``pyspark.InheritableThread`` that copies the caller's
+    local properties, so those jobs stay in the caller's job group.
 
     Contract: call it on a *cached* DataFrame. The RDD still reads (and
     on first use populates) the cache, so referencing the result twice
     costs one computation; the RDD lineage keeps growing until a real
-    ``pin`` truncates it, so iterative kernels still pin every
-    ``checkpoint_every`` generations (the _StateChain cadence).
+    ``pin`` truncates it, so iterative kernels still pin every few
+    generations (the _StateChain cadence).
     """
     try:
         jdf = df._jdf  # type: ignore[attr-defined]

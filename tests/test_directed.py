@@ -49,6 +49,25 @@ def test_multi_reachability(spark):
     assert got == exp
 
 
+def test_reachability_budget_boundary(spark):
+    """A frontier that dies exactly at ``max_iterations`` succeeds; one
+    level short raises (raise-don't-truncate, ADVICE r3 boundary rule):
+    a directed path with L edges needs L levels."""
+    import pytest
+
+    length = 5
+    edges = edges_df(spark, [(i, i + 1) for i in range(length)])
+    want = set(range(length + 1))
+    got = directed.reachability(edges, 0, max_iterations=length).collect()
+    assert {r["id"] for r in got} == want
+    got = directed.multi_reachability(edges, [0], max_iterations=length).collect()
+    assert {(r["id"], r["source"]) for r in got} == {(v, 0) for v in want}
+    with pytest.raises(RuntimeError, match="frontier still live"):
+        directed.reachability(edges, 0, max_iterations=length - 1)
+    with pytest.raises(RuntimeError, match="frontier still live"):
+        directed.multi_reachability(edges, [0], max_iterations=length - 1)
+
+
 def test_scc_micrograph(spark):
     edges = edges_df(spark, DI_EDGES)
     verts = vertices_df(spark, range(DI_N))

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import math
 
-from pasgal_spark.graph import kernels
+from pasgal_spark.graph import directed, kernels
 from pasgal_spark.graph.builder import symmetrize, transpose, validate
 from tests.conftest import edges_df, vertices_df
 from tests.oracles import (
@@ -462,20 +462,50 @@ def test_frontier_handles_message_only_vertices(spark):
 
 
 def test_cc_overlapped_loop_across_pin_cadences(spark):
-    """The r6 overlapped superstep loop (advance_overlapped: background
-    compile of round k+1 during round k's probe) must produce correct,
-    re-usable results for every pin cadence — including checkpoint_every=1
-    (every generation takes the sequential pin branch) and cadences where
-    convergence lands on or beside a pin generation (the seal
-    pinned-ness/cache-retention edge)."""
+    """The probe loop (``_iterate``: the next round built on a background
+    thread during this round's probe, pin generations run pin-then-probe
+    on the calling thread) must produce correct, re-usable results for
+    every pin cadence — including every=1 (every generation is a pin) and
+    cadences where convergence lands on or beside a pin generation, so
+    the generation handed back is sometimes checkpoint-backed and
+    sometimes cache-backed with a speculative successor to release."""
     sym = edges_df(spark, _sym_pairs(PATH_EDGES))
     verts = vertices_df(spark, range(PATH_N))
     want = cc_oracle(PATH_N, PATH_EDGES)
     for every in (1, 2, 3, 4):
-        out = kernels.connected_components(
-            sym, verts, checkpoint_every=every, pointer_jump=False
+        out = kernels._min_label(
+            sym, verts.select("id", verts.id.alias("component")), "component",
+            rounds=100, converge=True, every=every,
         )
         got = dict(out.collect())
-        assert got == want, f"checkpoint_every={every}"
+        assert got == want, f"every={every}"
         # sealed result stays usable after the chain's caches released
-        assert out.count() == PATH_N, f"checkpoint_every={every}"
+        assert out.count() == PATH_N, f"every={every}"
+
+
+def test_kernel_jobs_stay_in_callers_job_group(spark):
+    """Every job a kernel launches — the probe loop's background compile
+    leg (AQE runs shuffle stages inside ``fast_pin``) included — lands in
+    the caller's job group, so a group cancel reaches it."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listeners = sc._jsc.sc().listenerBus()  # job ids register asynchronously
+    sym = edges_df(spark, _sym_pairs(TT_EDGES))
+    verts = vertices_df(spark, range(TT_N))
+    wedges = spark.createDataFrame(
+        [(u, v, 1) for u, v in _sym_pairs(TT_EDGES)], "src long, dst long, w long"
+    )
+    listeners.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("kernel-jobs", "job-group test")
+    try:
+        kernels.pagerank(sym, verts, tol=1e-6).collect()
+        kernels.connected_components(sym, verts).collect()
+        kernels.bfs(sym, 0, vertices=verts).collect()
+        kernels.sssp(wedges, 0).collect()
+        directed.reachability(sym, 0).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    listeners.waitUntilEmpty()
+    assert tracker.getJobIdsForGroup("kernel-jobs")
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
