@@ -41,7 +41,7 @@ def _graph(spark: SparkSession, sf_dir: str) -> LinkGraph:
     spark.conf.set("spark.sql.defaultSizeInBytes", str(1 << 40))
     g = _GRAPH_CACHE.get(sf_dir)
     if g is None or g.edges.sparkSession is not spark:
-        # Range-partition the edge tables by src at ingest so every superstep
+        # Hash-partition the edge tables by src at ingest so every superstep
         # join reuses the cached layout instead of re-exchanging the edge side
         # (the ingest layout documented in builder.build_graph).
         parts = max(spark.sparkContext.defaultParallelism // 2, 8)

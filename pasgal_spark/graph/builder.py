@@ -7,6 +7,14 @@ partitioned relation; the transpose (src/graph.h:84-110 ``make_inverse``)
 becomes a column swap + re-shuffle; symmetrization (src/graph.h:476-504)
 becomes union+distinct.
 
+``build_graph`` reads its input once, as the reference symmetrizes the edge
+arrays it already holds and computes weights from the ids
+(src/graph.h:309-327). ``edges`` (from ``GRAPH_CTE``) is hash-partitioned by
+``src`` and pinned; ``sym`` is ``distinct(edges ∪ transpose(edges))`` over
+that pinned leaf, with one exchange into the same ``src`` layout; ``wedges``
+is a narrow projection adding ``w`` over the ``sym`` leaf, neither pinned nor
+cached. Only ``vertices`` runs a second, customer-only query.
+
 For the driver's correctness harness the graph is *derived* from the
 driver-provided TPC-H-ish tables by deterministic, portable SQL
 (``GRAPH_CTE``) that runs identically under Spark SQL and DuckDB — the same
@@ -100,16 +108,13 @@ class LinkGraph:
 # parquet size is a free (zero-job) proxy for edge-table volume. 8 MB of
 # parquet ≈ 1M edges ≈ 16 MB in-memory — the "fewer, larger map tasks"
 # rule (guide §2.2/§6): a constant partition count leaves KB-sized map
-# tasks at small tiers and under-splits at large ones. Env-overridable
-# for cluster tiers.
-INGEST_TARGET_BYTES = int(
-    __import__("os").environ.get("SPARK_GRAFT_INGEST_TARGET_BYTES", str(8 * 1024 * 1024))
-)
+# tasks at small tiers and under-splits at large ones.
+INGEST_TARGET_BYTES = 8 * 1024 * 1024
 
 
 def _derive_partitions(sf_dir: str, requested: int) -> int:
     """Scale-adaptive ingest partition count: ceil(orders bytes / target),
-    floored at 1, capped at the caller's ``requested`` (the cluster
+    floored at 2, capped at the caller's ``requested`` (the cluster
     parallelism hint). Falls back to ``requested`` when the size cannot
     be read (non-local paths)."""
     import math
@@ -137,72 +142,59 @@ def build_graph(
     sf_dir: str,
     *,
     partitions: int | None = None,
-    cache: bool = True,
 ) -> LinkGraph:
-    """Derive the canonical graph from the parquet tables at ``sf_dir``."""
+    """Derive the canonical graph from the parquet tables at ``sf_dir``,
+    reading them once (module docstring). ``partitions`` (default: the
+    session's parallelism) caps the scale-adaptive partition count."""
+    from pasgal_spark.plans.lineage import pin
+
     load_views(spark, sf_dir, ["customer", "orders"])
 
     def q(body: str) -> DataFrame:
         return spark.sql(f"WITH {GRAPH_CTE} {body}")
 
-    edges = q("SELECT src, dst FROM edges")
-    sym = q("SELECT src, dst FROM sym")
-    vertices = q("SELECT id FROM vertices")
-    wedges = q("SELECT src, dst, w FROM wedges")
+    n = _derive_partitions(
+        sf_dir, partitions or spark.sparkContext.defaultParallelism
+    )
+    # Each pinned table is a partitioning-DECLARING LogicalRDD leaf with
+    # its cache on top (r6). Three properties, all measured:
+    # - LEAF logical plans: a cached-but-not-checkpointed table keeps its
+    #   whole derivation (parquet scans + CTE unions + distinct) in the
+    #   LOGICAL plan of every consumer, and the iterative kernels
+    #   re-analyze that subtree on every superstep — 0.3-0.6 s of pure
+    #   driver planning per superstep at sf0.1.
+    # - ``pin(hash_cols=("src",))`` declares HashPartitioning(src, n) over
+    #   the leaf's own attributes, so every superstep join (shuffle_hash,
+    #   see kernels._hint_state) consumes the layout with NO edge-side
+    #   exchange or re-broadcast — only the O(|V|) state side moves
+    #   (guide §2.4). The declaration drops any ordering.
+    # - ``.cache()`` of the LEAF gives Catalyst REAL size statistics after
+    #   materialization, so broadcast decisions track the actual tier;
+    #   InMemoryTableScan passes the declared partitioning through. The
+    #   eager counts materialize stats before the first consumer plans.
+    def pinned(df: DataFrame, **kw) -> DataFrame:
+        df = pin(df, **kw).cache()
+        df.count()
+        return df
 
-    if partitions:
-        # HASH-partition by src + sort within partitions: the superstep
-        # join key layout (north_rule: explicit partitioning of the edge
-        # table; on a cluster this would be a bucketed table). Hash (r6,
-        # was range) because hash partitioning SATISFIES an equi-join's
-        # required distribution — the cached edge side then feeds every
-        # superstep join with NO per-superstep Exchange or re-broadcast,
-        # only the O(|V|) state side moves (guide §2.4: share the
-        # exchange; §3.1: pick the strategy deliberately). Range
-        # partitioning never matches a hash requirement, so the old
-        # layout silently re-broadcast (small tiers) or re-shuffled (big
-        # tiers) the whole edge table every superstep. The sort makes the
-        # cached layout also satisfy sort-merge's ordering requirement.
-        # The count is derived from input bytes (capped at the caller's
-        # parallelism hint) so map tasks stay MB-sized at every tier
-        # instead of a constant tuned for one (guide §2.2).
-        partitions = _derive_partitions(sf_dir, partitions)
-        edges = edges.repartition(partitions, "src")
-        sym = sym.repartition(partitions, "src")
-        wedges = wedges.repartition(partitions, "src")
-    if cache:
-        # Materialize the ingest tables as partitioning-DECLARING
-        # LogicalRDD LEAVES, then cache the leaf (r6; was a lazy .cache()
-        # of the raw derivation). Three properties, all measured this
-        # round:
-        # - LEAF logical plans: a cached-but-not-checkpointed table keeps
-        #   its whole derivation (parquet scans + CTE unions + distinct)
-        #   in the LOGICAL plan of every consumer, and the iterative
-        #   kernels re-analyze that subtree on every superstep — 0.3-0.6 s
-        #   of pure driver planning per superstep at sf0.1.
-        # - ``pin(hash_cols=("src",))`` declares HashPartitioning(src, N)
-        #   over the leaf's own attributes, so every superstep join
-        #   consumes the layout with NO edge-side exchange or re-broadcast
-        #   (the bucketed-table idiom, guide §2.4) — the checkpoint's own
-        #   captured partitioning never matches (see plans/lineage.py).
-        # - ``.cache()`` of the LEAF (an InMemoryRelation over a leaf is
-        #   O(1) to canonicalize) gives Catalyst REAL size statistics
-        #   after materialization, so broadcast decisions track the
-        #   actual tier instead of treating every checkpoint as the 1 TiB
-        #   default; InMemoryTableScan passes the declared partitioning
-        #   through. The eager counts below materialize stats before the
-        #   first consumer plans against the tables.
-        from pasgal_spark.plans.lineage import pin
-
-        edges = pin(edges, hash_cols=("src",)).cache()
-        sym = pin(sym, hash_cols=("src",)).cache()
-        vertices = pin(vertices).cache()
-        # wedges feeds every SSSP superstep's relax join — unpinned it
-        # re-derives from the orders parquet (scan+union+distinct) per
-        # step and re-plans the derivation per superstep.
-        wedges = pin(wedges, hash_cols=("src",)).cache()
-        for df in (edges, sym, vertices, wedges):
-            df.count()
+    edges = pinned(
+        q("SELECT src, dst FROM edges").repartition(n, "src"), hash_cols=("src",)
+    )
+    vertices = pinned(q("SELECT id FROM vertices"))
+    # sym = distinct(edges ∪ transpose(edges)) over the cached edge leaf:
+    # no second scan of orders. HashPartitioning(src) satisfies the
+    # distinct's clustering on (src, dst), so the repartition is its one
+    # exchange. edges has no self-loops, so neither does sym.
+    sym = pinned(
+        edges.union(transpose(edges)).repartition(n, "src").distinct(),
+        hash_cols=("src",),
+    )
+    # w is a pure function of (src, dst): a narrow projection over the sym
+    # leaf keeps its declared src layout, so the SSSP relax joins still
+    # read the edge side unshuffled.
+    wedges = sym.withColumn(
+        "w", ((sym.src * 31 + sym.dst * 17) % 8 + 1).cast("bigint")
+    )
     return LinkGraph(edges=edges, sym=sym, vertices=vertices, wedges=wedges)
 
 

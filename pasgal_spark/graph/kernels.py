@@ -161,10 +161,13 @@ def _iterate(
 
     Without ``probe``: exactly ``rounds`` supersteps and no action of its
     own — the chain executes inside its periodic pins and the caller's
-    ``seal`` (value NaN). With ``probe``: ONE job per superstep,
+    ``seal`` (value NaN). With ``probe``: one action per superstep,
     ``probe(generation k)``, materializes generation k and returns the
     value ``done`` tests; the loop stops at the first ``done`` generation
-    or after ``rounds`` probes (None: no cap).
+    or after ``rounds`` probes (None: no cap). One action is not one job:
+    under AQE the probe and the compile in ``advance`` each run every
+    shuffle query stage as its own job, and the periodic pins add theirs
+    (traced at sf0.1: tol-mode PageRank ran 72-78 jobs for 8 supersteps).
 
     The only overlap in the engine (r6): generation k+1's compile needs
     only generation k's leaf, not the probe's verdict, so ``step`` +
@@ -324,8 +327,10 @@ def pagerank(
     Runs ``pagerank_step`` until max |Δr| < ``tol`` or for ``iterations``
     supersteps (whichever comes first when both are given).
 
-    - ``tol``: ONE job per superstep both materializes the generation and
-      returns its delta, overlapped with the next superstep's compile.
+    - ``tol``: one probe action per superstep both materializes the
+      generation and returns its delta, overlapped with the next
+      superstep's compile. Under AQE that is several jobs per superstep
+      (traced at sf0.1: 72-78 jobs for 8 supersteps, see ``_iterate``).
     - ``tol=None``: no probe at all (deterministic, oracle-matched — the
       declared query's mode); the generations execute inside the chain's
       periodic pins and the final pin. ``on_superstep`` receives NaN.
@@ -443,12 +448,12 @@ def _min_label(
     ``converge=False``: exactly ``rounds`` rounds and no probe job — the
     whole chain executes lazily inside its periodic pins and the final
     seal. ``converge=True``: until the frontier is empty (no label
-    changed ⟺ fixpoint, labels being monotone), ONE aggregate job per
-    round that materializes the generation and counts the next frontier,
-    overlapped with the next round's compile; raises if ``rounds`` rounds
-    do not reach it — unconverged labels would silently be wrong
-    components. ``every``: the chain's pin cadence. ``on_round(i)`` fires
-    per round, i from 0."""
+    changed ⟺ fixpoint, labels being monotone), one aggregate action per
+    round (several jobs under AQE, see ``_iterate``) that materializes
+    the generation and counts the next frontier, overlapped with the next
+    round's compile; raises if ``rounds`` rounds do not reach it —
+    unconverged labels would silently be wrong components. ``every``: the
+    chain's pin cadence. ``on_round(i)`` fires per round, i from 0."""
     changed = _changed(col)
     chain = _StateChain(every)
     cur, converged = _iterate(
@@ -965,7 +970,7 @@ def sssp(
         )
 
     # newly reached (old is null) or improved (dist < old) → frontier.
-    # ONE aggregate job per superstep (r6): materializes the generation and
+    # One aggregate action per superstep (r6): materializes the generation and
     # counts senders, overlapped with the next superstep's compile.
     changed = _changed("dist")
     chain = _StateChain(2)

@@ -60,7 +60,13 @@ def _edge_side_unshuffled(plan: str) -> bool:
     return True
 
 
-def check(name: str, plan: str, must: list[str], must_not: list[str]) -> None:
+def check(
+    name: str,
+    plan: str,
+    must: list[str],
+    must_not: list[str],
+    holds: dict[str, bool] | None = None,
+) -> None:
     print(f"== {name} ==")
     ok = True
     for m in must:
@@ -71,6 +77,9 @@ def check(name: str, plan: str, must: list[str], must_not: list[str]) -> None:
         hit = m not in plan
         ok &= hit
         print(f"  [{'x' if hit else ' '}] free of {m!r}")
+    for m, hit in (holds or {}).items():
+        ok &= hit
+        print(f"  [{'x' if hit else ' '}] {m}")
     print("  PASS" if ok else "  FAIL")
     if not ok:
         print(plan[:4000])
@@ -162,6 +171,26 @@ def main() -> None:
     if not _edge_side_unshuffled(p):
         print("  FAIL (Exchange between the join and the edge cache scan)")
         print(p[:2500])
+
+    # 3c. SSSP relax superstep over the weighted view: wedges is a
+    #     projection of the pinned sym leaf, and must keep its declared src
+    #     layout so the relax join reads the edge side unshuffled.
+    dist = g.vertices.select(
+        "id", F.lit(0).cast("bigint").alias("dist")
+    ).hint("shuffle_hash")  # the state-side hint kernels.sssp applies
+    relax = (
+        g.wedges.join(dist, g.wedges.src == dist.id)
+        .groupBy(g.wedges.dst)
+        .agg(F.min(dist.dist + g.wedges.w).alias("dist"))
+    )
+    p = plan_of(relax)
+    check(
+        "sssp relax superstep over projected wedges",
+        p,
+        must=["Scan ExistingRDD", "HashAggregate"],
+        must_not=[],
+        holds={"cached edge side not re-exchanged": _edge_side_unshuffled(p)},
+    )
 
     # 4. extractor: Python only at the extraction boundary
     from pasgal_spark.sources.pages import pages_from_documents

@@ -292,6 +292,30 @@ def test_two_phase_cc_matches_on_canonical_graph(spark, sf_dir):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+def test_ingest_tables_match_graph_cte(spark, sf_dir):
+    """build_graph derives sym from the pinned edges and projects wedges
+    from sym; each table must still equal its GRAPH_CTE view as a multiset,
+    with the same dtypes, and the src-partitioned tables share one
+    partition count."""
+    from pasgal_spark.graph.builder import GRAPH_CTE, build_graph
+
+    g = build_graph(spark, sf_dir, partitions=4)
+    views = {
+        "edges": (g.edges, "src, dst"),
+        "sym": (g.sym, "src, dst"),
+        "vertices": (g.vertices, "id"),
+        "wedges": (g.wedges, "src, dst, w"),
+    }
+    for view, (got, cols) in views.items():
+        want = spark.sql(f"WITH {GRAPH_CTE} SELECT {cols} FROM {view}")
+        assert got.dtypes == want.dtypes, view
+        assert got.exceptAll(want).count() == 0, view
+        assert want.exceptAll(got).count() == 0, view
+    n = g.edges.rdd.getNumPartitions()
+    assert g.sym.rdd.getNumPartitions() == n
+    assert g.wedges.rdd.getNumPartitions() == n
+
+
 def test_ldd_matches_sequential_shifted_start_oracle(spark):
     """LDD (reference src/BCC/ldd.h): cluster(v) = argmin over centers u of
     (start(u) + dist(u, v), u), start from capped trailing-zeros of the
