@@ -393,12 +393,18 @@ def min_label_step(
     unchanged u already delivered label(u) to every neighbor the round it
     last changed, and labels only decrease.
 
-    ``pointer_jump``: then adopt the label of the label (the label-table
-    self-join shortcut — the declarative ``find_compress`` path halving,
-    external/connectivity.h:7-20): O(log n)-ish rounds on long-diameter
-    graphs. The self-join runs over the full state (O(|V|), and jump
-    targets need not be in the frontier). The frontier side always
-    carries the state-side join hint (``_hint_state``).
+    ``pointer_jump``: then adopt the label of the label (the declarative
+    ``find_compress`` path halving, external/connectivity.h:7-20):
+    O(log n)-ish rounds on long-diameter graphs. The grand-parent is read
+    from the input generation ``labels`` (the parent array that is
+    already there, as ``find_compress`` reads it), not from this round's
+    result, so the message join, union and aggregate appear once in the
+    plan. ``labels``' label of l is an id of l's component, so labels
+    stay ids of their component and the fixpoint is still the canonical
+    minimum. The jump join runs over the full state (O(|V|), and jump
+    targets need not be in the frontier).
+    The frontier side always carries the state-side join hint
+    (``_hint_state``).
     """
     f = _hint_state(frontier)
     msgs = edges.join(f, edges.src == f.id).select(
@@ -411,7 +417,7 @@ def min_label_step(
         .agg(F.min(col).alias(col), F.min("old").alias("old"))
     )
     if pointer_jump:
-        parent = new.select(F.col("id").alias(col), F.col(col).alias("grand"))
+        parent = labels.select(F.col("id").alias(col), F.col(col).alias("grand"))
         new = new.join(parent, col, "left").select(
             "id", F.least(col, "grand").alias(col), "old"
         )
@@ -1187,14 +1193,13 @@ def sssp_rho_stepping(
 # Triangle counting (target kernel; no reference impl — SURVEY.md §2D)
 # ---------------------------------------------------------------------------
 
-def triangle_count(sym: DataFrame) -> DataFrame:
-    """Exact global triangle count over the symmetrized graph → (triangles).
-
-    Degree-ordered orientation: keep edge u→v iff (deg(u),u) < (deg(v),v),
-    so every triangle is counted exactly once and the wedge join fans out
-    from low-degree endpoints — the standard mitigation for power-law hubs
-    (a hub's O(d²) wedges are never enumerated from the hub side).
-    """
+def _oriented(sym: DataFrame) -> DataFrame:
+    """Degree-ordered orientation of ``sym`` → the cached, materialized
+    (src, dst) leaf the caller unpersists. Keeps u→v iff (deg(u), u) <
+    (deg(v), v), so every triangle is counted exactly once and the wedge
+    join fans out from low-degree endpoints — the standard mitigation for
+    power-law hubs (a hub's O(d²) wedges are never enumerated from the
+    hub side)."""
     # Spread the edge table UP to cluster parallelism when the ingest
     # layout has fewer partitions (r6, guide §2.5 input side): unlike the
     # superstep kernels (tiny per-round state, exchange-elision is what
@@ -1221,15 +1226,24 @@ def triangle_count(sym: DataFrame) -> DataFrame:
         )
         .select("src", "dst")
     )
-    e.cache()
-    # Materialize BEFORE the wedge join is planned (r6): the cached
-    # oriented-edge table then carries REAL size statistics, so Catalyst
-    # broadcasts it only when it is genuinely under the threshold and
-    # otherwise picks a parallel shuffled-hash join (preferSortMergeJoin
-    # is off in the session defaults). The un-materialized estimate is a
-    # join-product guess that chose broadcast for a 1.5M-row build at the
-    # 10x tier (9.5 s vs 3.9 s).
+    # Rebound, then cached: a bare cache() over build_graph's hash-declared
+    # sym misses on the self-join copies (``lineage.pin``). Materialized
+    # BEFORE the wedge join is planned (r6), the cached leaf carries REAL
+    # size statistics: Catalyst broadcasts it only when it is genuinely
+    # under the threshold, else picks a parallel shuffled-hash join
+    # (preferSortMergeJoin is off in the session defaults); the estimate
+    # chose broadcast for a 1.5M-row build at 10x (9.5 s vs 3.9 s).
+    e = fast_pin(e).cache()
     e.count()
+    return e
+
+
+def triangle_count(sym: DataFrame) -> DataFrame:
+    """Exact global triangle count over the symmetrized graph → (triangles):
+    a join-aggregate over ONE materialized oriented edge table
+    (``_oriented``), whose three references all read its cache.
+    """
+    e = _oriented(sym)
     try:
         wedge = (
             e.alias("a")

@@ -67,11 +67,15 @@ def fast_pin(df: DataFrame) -> DataFrame:
     background ``pyspark.InheritableThread`` that copies the caller's
     local properties, so those jobs stay in the caller's job group.
 
-    Contract: call it on a *cached* DataFrame. The RDD still reads (and
-    on first use populates) the cache, so referencing the result twice
-    costs one computation; the RDD lineage keeps growing until a real
-    ``pin`` truncates it, so iterative kernels still pin every few
-    generations (the _StateChain cadence).
+    Idiom: ``fast_pin(df).cache()``, then one action — rebind FIRST,
+    cache the leaf. The plan compiles once, the action fills the cache,
+    and every later reference to the leaf reads it, the copies a
+    self-join or self-union makes included (a plain ``LogicalRDD`` leaf's
+    copy hits the cache; see ``pin``'s ``hash_cols`` caveat for one that
+    does not). Uncached, the leaf re-runs ``df``'s whole computation on
+    every action. The RDD lineage keeps growing until a real ``pin``
+    truncates it, so iterative kernels still pin every few generations
+    (the _StateChain cadence).
     """
     try:
         jdf = df._jdf  # type: ignore[attr-defined]
@@ -112,6 +116,17 @@ def pin(df: DataFrame, *, hash_cols: tuple[str, ...] | None = None) -> DataFrame
     captured and reused (explain-asserted in tests). The engine's explain
     assertions (scripts/explain_plans.py) pin down that the *edge* side —
     the O(m) relation — never re-exchanges either way.
+
+    ``hash_cols`` caveat (measured, Spark 4.1): the copy of a
+    hash-declared leaf that ``DeduplicateRelations`` makes for a self-join
+    or self-union misses the leaf's ``.cache()`` (a plain leaf's copy hits
+    it), and every plan derived above that copy differs from the one
+    derived above the original, so a cached derived plan misses on it
+    too. A plan derived from such a leaf that a query references twice
+    is therefore rebound before it is cached:
+    ``fast_pin(derived).cache()`` (``kernels._oriented``); a bare
+    ``derived.cache()`` is read by one reference and recomputed by the
+    other.
     """
     global _warned_fallback
     ck = df.localCheckpoint(eager=True)

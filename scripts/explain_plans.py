@@ -17,16 +17,19 @@ Run: python scripts/explain_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import os
 import sys
 import contextlib
 
-sys.path.insert(0, "/root/repo")
+# import the package of the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from pasgal_spark.session import get_spark  # noqa: E402
-from pasgal_spark.graph import build_graph  # noqa: E402
+from pasgal_spark.graph import build_graph, kernels  # noqa: E402
 from pasgal_spark.graph.builder import load_views  # noqa: E402
+from pasgal_spark.plans.lineage import fast_pin  # noqa: E402
 
 
 def plan_of(df) -> str:
@@ -58,6 +61,25 @@ def _edge_side_unshuffled(plan: str) -> bool:
         if "src#" in seg and "dst#" in seg:
             return False
     return True
+
+
+def _tree(plan: str) -> list[str]:
+    """The lines of the formatted plan's operator tree (its first block)."""
+    return plan.split("\n\n")[0].splitlines()
+
+
+def _count(tree: list[str], marker: str) -> int:
+    return sum(marker in line for line in tree)
+
+
+def _raw_scans(tree: list[str]) -> int:
+    """Leaf scans NOT under an InMemoryRelation: a cached relation prints
+    its own plan beneath it, so only a scan whose parent line is not the
+    InMemoryRelation reads (and recomputes from) the raw leaf."""
+    return sum(
+        "Scan ExistingRDD" in line and "InMemoryRelation" not in parent
+        for parent, line in zip(tree, tree[1:])
+    )
 
 
 def check(
@@ -191,6 +213,60 @@ def main() -> None:
         must_not=[],
         holds={"cached edge side not re-exchanged": _edge_side_unshuffled(p)},
     )
+
+    # 3d. pointer-jump min-label superstep over a generation leaf (rebound
+    #     and cached, as _StateChain.advance makes it): the grand-parent is
+    #     read from that generation, so the message join, union and
+    #     aggregate appear once. Reading it from the round's own result
+    #     planned them twice, over two copies of sym that share no
+    #     exchange.
+    gen = fast_pin(labels.withColumn("old", F.lit(None).cast("long"))).cache()
+    gen.count()
+    step = kernels.min_label_step(
+        g.sym, gen, gen.filter(kernels._changed("component")), "component",
+        pointer_jump=True,
+    )
+    p = plan_of(step)
+    t = _tree(p)
+    check(
+        "pointer-jump min-label superstep",
+        p,
+        must=[],
+        must_not=[],
+        holds={
+            "exactly one Union": _count(t, "Union") == 1,
+            "exactly one message join": _count(t, "Join Inner") == 1,
+        },
+    )
+    gen.unpersist()
+
+    # 3e. triangle wedge + closing joins, built as triangle_count builds
+    #     them over the oriented table kernels._oriented hands out: all
+    #     three references must read its cache. A bare cache() of the
+    #     orientation over the hash-declared sym leaf was read by one and
+    #     recomputed (sort-merge joins over raw sym scans) by the others.
+    e = kernels._oriented(g.sym)
+    wedge = (
+        e.alias("a")
+        .join(e.alias("b"), F.col("a.dst") == F.col("b.src"))
+        .select(F.col("a.src").alias("x"), F.col("a.dst").alias("y"), F.col("b.dst").alias("z"))
+    )
+    tri = wedge.join(
+        e.alias("c"), (F.col("x") == F.col("c.src")) & (F.col("z") == F.col("c.dst"))
+    ).agg(F.count(F.lit(1)).alias("triangles"))
+    p = plan_of(tri)
+    t = _tree(p)
+    check(
+        "triangle joins over the rebound oriented table",
+        p,
+        must=[],
+        must_not=["SortMergeJoin"],
+        holds={
+            "three InMemoryTableScan reads": _count(t, "InMemoryTableScan") == 3,
+            "no raw sym scan": _raw_scans(t) == 0,
+        },
+    )
+    e.unpersist()
 
     # 4. extractor: Python only at the extraction boundary
     from pasgal_spark.sources.pages import pages_from_documents

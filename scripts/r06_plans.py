@@ -18,7 +18,9 @@ import os
 import sys
 import contextlib
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in: its package is imported, its plans/ written
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -43,7 +45,7 @@ def plan_of(df) -> str:
 def main() -> None:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    outdir = "/root/repo/plans/r06"
+    outdir = os.path.join(ROOT, "plans", "r06")
     os.makedirs(outdir, exist_ok=True)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(
@@ -88,7 +90,7 @@ def main() -> None:
         .groupBy("id")
         .agg(F.min("component").alias("component"))
     )
-    parent = new.select(
+    parent = labels.select(  # the grand-parent comes from the input labels
         F.col("id").alias("component"), F.col("component").alias("grand")
     )
     shrunk = new.join(parent, "component", "left").select(

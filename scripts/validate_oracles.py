@@ -10,13 +10,15 @@ CORRECTNESS_r{N}.json comparison. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# import the package of the checkout this script lives in
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from pasgal_spark.session import get_spark  # noqa: E402

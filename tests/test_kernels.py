@@ -8,6 +8,7 @@ import math
 
 from pasgal_spark.graph import directed, kernels
 from pasgal_spark.graph.builder import symmetrize, transpose, validate
+from pasgal_spark.plans.lineage import fast_pin, pin
 from tests.conftest import edges_df, vertices_df
 from tests.oracles import (
     bfs_oracle,
@@ -208,16 +209,45 @@ def test_checkpointed_pagerank_matches_kernel(spark, tmp_path):
     assert RunManifest.load(workdir).superstep == len(steps)
 
 
+def _hash_leaf(spark, pairs):
+    """The symmetric edge table in build_graph's layout: a pinned leaf
+    declared hash-partitioned by src, cached."""
+    sym = edges_df(spark, _sym_pairs(pairs)).repartition(2, "src")
+    return pin(sym, hash_cols=("src",)).cache()
+
+
 def test_triangle_count(spark):
-    for pairs, expected in [
-        (TT_EDGES, 2),
-        (PATH_EDGES, 0),
-        (TT_EDGES + [(0, 3), (0, 4)], None),  # denser; compare vs oracle
+    dense = TT_EDGES + [(0, 3), (0, 4)]
+    for sym, pairs, expected in [
+        (edges_df(spark, _sym_pairs(TT_EDGES)), TT_EDGES, 2),
+        (edges_df(spark, _sym_pairs(PATH_EDGES)), PATH_EDGES, 0),
+        (edges_df(spark, _sym_pairs(dense)), dense, None),  # vs oracle
+        (_hash_leaf(spark, dense), dense, None),
     ]:
-        sym = edges_df(spark, _sym_pairs(pairs))
         got = kernels.triangle_count(sym).first()["triangles"]
         exp = triangle_oracle(pairs) if expected is None else expected
         assert got == exp
+
+
+def test_pointer_jump_step_plans_one_message_round(spark):
+    """The pointer-jump superstep reads the grand-parent from its input
+    generation, so over the hash-declared sym leaf the message join,
+    union and aggregate are planned once, not a second time for the jump."""
+    sym = _hash_leaf(spark, TT_EDGES)
+    gen = fast_pin(
+        vertices_df(spark, range(TT_N)).selectExpr(
+            "id", "id AS component", "CAST(NULL AS BIGINT) AS old"
+        )
+    ).cache()
+    gen.count()
+    step = kernels.min_label_step(
+        sym, gen, gen.filter(kernels._changed("component")), "component",
+        pointer_jump=True,
+    )
+    plan = step._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Union") == 1, plan
+    gen.unpersist()
+    sym.unpersist()
 
 
 def test_degree_analytics_counts_isolated(spark):
