@@ -17,7 +17,6 @@ DataFrame library:
                    Jaccard), similarity search, text analytics.
 - ``plans``      — superstep driver loop with checkpointing, resumability and
                    per-superstep metrics/lineage records.
-- ``streaming``  — Structured Streaming adapters for the events table.
 
 Design stance: DataFrame-only declarative plans; Catalyst handles pushdown,
 pruning and AQE (broadcast/skew) decisions; Python never touches rows except

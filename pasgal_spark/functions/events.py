@@ -1,11 +1,10 @@
-"""Event-stream analytics (batch form) + relational coverage queries.
+"""Event analytics + relational coverage queries.
 
 These cover the dataflow primitives of SURVEY.md §2C on the driver's tables:
 scan/prefix-sum (running totals — reference ``scan_inplace``,
 src/graph.h:107-109), group-by-count histograms (``histogram_by_key``,
 external/connectivity.h:66), top-k (``max_element``), sessionization
-(ordered window + gap predicate). The streaming twin of the tumbling
-rollup lives in pasgal_spark.streaming.
+(ordered window + gap predicate).
 """
 
 from __future__ import annotations

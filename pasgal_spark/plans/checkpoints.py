@@ -92,13 +92,16 @@ class _Resumable:
         done: Callable[[float], bool] = lambda value: False,
     ) -> DataFrame:
         """Run (or resume) up to superstep ``supersteps``, stopping at the
-        first probe value that is ``done``; returns the last state."""
+        first probe value that is ``done``; returns the last state. A
+        manifest whose value is already ``done`` is returned unstepped."""
         manifest = RunManifest.load(self.workdir)
         if manifest is None:
             state, it = initial(), 0
         else:
             state = self.spark.read.parquet(manifest.state_path)
             it = manifest.superstep
+            if done(manifest.delta):
+                return state
         recorded = 0  # the replay guard: supersteps already in metrics
         if os.path.exists(self._metrics_path):
             recorded = self.metrics().filter(F.col("run_id") == self.run_id).agg(

@@ -207,3 +207,48 @@ def test_pricing_summary_sums_are_partition_order_invariant(spark):
     assert snapshot(li.repartition(37)) == base
     assert snapshot(li.repartition(11, "l_discount")) == base
     assert snapshot(li.orderBy("l_extendedprice", ascending=False)) == base
+
+
+def test_sessionize_gap_threshold_and_hourly_rollup(spark):
+    """The batch event functions on a hand-built frame. A gap of exactly
+    1800 s stays in the session; 1800.4 s starts a new one (a whole-second
+    gap would merge it, as the sf1 tier once showed against DuckDB's
+    fractional epoch). Two events share a ts: the tie sorts by event_id,
+    which only the prefix sum can show (sessionize sees a 0 s gap either
+    way). An event in the last second of an hour stays in that bucket."""
+    import datetime
+
+    from pasgal_spark.functions import events as ev
+
+    t0 = datetime.datetime(2024, 1, 1)  # epoch 1704067200 = hour 473352
+
+    def at(seconds):
+        return t0 + datetime.timedelta(seconds=seconds)
+
+    events = spark.createDataFrame(
+        [
+            (0, at(0), 1, "view", 1.5),
+            (1, at(1800), 1, "view", 2.25),  # gap 1800 s: same session
+            (2, at(3600.4), 1, "click", 3.0),  # gap 1800.4 s: new session
+            (3, at(600), 2, "view", 4.0),
+            (5, at(2400.4), 2, "click", 0.5),  # gap 1800.4 s, tied ts ...
+            (4, at(2400.4), 2, "view", 0.25),  # ... event 4 sorts first
+            (6, at(7199.5), 3, "view", 8.0),  # last second of hour 473353
+        ],
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, "
+        "value double",
+    )
+
+    assert dict(ev.sessionize(events).collect()) == {1: 2, 2: 2, 3: 1}
+    assert {
+        (r["hour_bucket"], r["event_type"]): (r["n"], r["sum_value"])
+        for r in ev.hourly_rollup(events).collect()
+    } == {
+        (473352, "view"): (4, 8.0),
+        (473352, "click"): (1, 0.5),
+        (473353, "click"): (1, 3.0),
+        (473353, "view"): (1, 8.0),
+    }
+    assert {
+        r["event_id"]: r["cum_value"] for r in ev.running_total(events).collect()
+    } == {0: 1.5, 1: 3.75, 2: 6.75, 3: 4.0, 4: 4.25, 5: 4.75, 6: 8.0}

@@ -1,17 +1,11 @@
-"""Resumability (north_rule: identical result after restart-from-checkpoint)
-and Structured Streaming rollup tests."""
+"""Resumability of the checkpointed drivers (north_rule: identical result
+after restart-from-checkpoint)."""
 
 from __future__ import annotations
 
 import math
-import shutil
 
 from pasgal_spark.plans import CheckpointedPageRank, RunManifest
-from pasgal_spark.streaming import (
-    read_event_stream,
-    run_to_memory_sink,
-    windowed_event_counts,
-)
 from tests.conftest import edges_df, vertices_df
 from tests.oracles import pagerank_oracle
 
@@ -59,6 +53,22 @@ def test_checkpointed_pagerank_resume_identical(spark, tmp_path):
     assert all(math.isclose(full_ranks[u], exp[u], abs_tol=1e-4) for u in range(N))
 
 
+def test_rerun_of_converged_run_is_a_noop(spark, tmp_path):
+    """A second run() over the workdir of a converged run returns the
+    recorded state: no further superstep, the same ranks, the manifest
+    untouched (LPA at its fixpoint: test_checkpointed_lpa_fixpoint_early_stop)."""
+    edges = edges_df(spark, EDGES)
+    verts = vertices_df(spark, range(N))
+    workdir = str(tmp_path / "pr")
+    first = CheckpointedPageRank(spark, edges, verts, workdir, checkpoint_every=3)
+    first_ranks = dict(first.run(tol=1e-2).collect())
+    converged_at = RunManifest.load(workdir).superstep
+
+    again = CheckpointedPageRank(spark, edges, verts, workdir, checkpoint_every=3)
+    assert dict(again.run(tol=1e-2).collect()) == first_ranks
+    assert RunManifest.load(workdir).superstep == converged_at
+
+
 def test_metrics_record_per_partition_lineage(spark, tmp_path):
     edges = edges_df(spark, EDGES)
     verts = vertices_df(spark, range(N))
@@ -75,26 +85,6 @@ def test_metrics_record_per_partition_lineage(spark, tmp_path):
     # convergence metric is monotone-ish decreasing overall
     deltas = m.groupby("superstep")["delta"].first()
     assert deltas.iloc[-1] < deltas.iloc[0]
-
-
-def test_streaming_rollup_matches_batch(spark, sf_dir, tmp_path):
-    # stage the events parquet as a stream source directory
-    src = str(tmp_path / "stream_src")
-    spark.read.parquet(f"{sf_dir}/events.parquet").coalesce(4).write.parquet(src)
-
-    stream = read_event_stream(spark, src)
-    got = run_to_memory_sink(windowed_event_counts(stream), "rollup_test")
-
-    batch = (
-        spark.read.parquet(src)
-        .groupBy(
-            __import__("pyspark.sql.functions", fromlist=["window"]).window("ts", "1 hour"),
-            "event_type",
-        )
-        .count()
-    )
-    assert got.count() == batch.count()
-    assert got.agg({"n": "sum"}).first()[0] == spark.read.parquet(src).count()
 
 
 def test_checkpointed_cc_resume_identical(spark, tmp_path):
@@ -194,7 +184,8 @@ def test_checkpointed_lpa_resume_identical(spark, tmp_path):
 
 def test_checkpointed_lpa_fixpoint_early_stop(spark, tmp_path):
     """An empty frontier ends the run early; labels equal the fixed-round
-    kernel's (fixpoint: further rounds are no-ops)."""
+    kernel's (fixpoint: further rounds are no-ops). A second run() over
+    the workdir runs no round."""
     from pasgal_spark.graph.kernels import label_propagation
     from pasgal_spark.plans.checkpoints import CheckpointedLabelPropagation
 
@@ -212,3 +203,9 @@ def test_checkpointed_lpa_fixpoint_early_stop(spark, tmp_path):
     }
     m = RunManifest.load(str(tmp_path / "lpafix"))
     assert m is not None and m.superstep < 10  # stopped at the fixpoint
+
+    again = CheckpointedLabelPropagation(
+        spark, sym, verts, str(tmp_path / "lpafix"), rounds=10
+    ).run()
+    assert sorted(again.collect()) == sorted(got.collect())
+    assert RunManifest.load(str(tmp_path / "lpafix")).superstep == m.superstep
