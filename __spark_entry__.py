@@ -19,6 +19,7 @@ from pasgal_spark.graph import build_graph, kernels
 from pasgal_spark.graph import bcc as bccmod
 from pasgal_spark.graph import directed
 from pasgal_spark.graph.builder import GRAPH_CTE, LinkGraph, load_views
+from pasgal_spark.plans.lineage import local_relation, pin
 from pasgal_spark.sources.pages import PAGES_CTE, pages_from_documents
 from pasgal_spark.sources.extract import extract_links, extract_text, links_to_edges
 from pasgal_spark.functions import textstats, dedup, similarity, events as ev
@@ -187,8 +188,6 @@ _SPARSE_CC_CACHE: dict[str, DataFrame] = {}
 def _sparse_cc(spark: SparkSession, sf: str, g: LinkGraph) -> DataFrame:
     cached = _SPARSE_CC_CACHE.get(sf)
     if cached is None or cached.sparkSession is not spark:
-        from pasgal_spark.plans.lineage import pin
-
         cached = pin(
             kernels.connected_components_two_phase(_sparse_sym(g), g.vertices)
         )
@@ -285,7 +284,7 @@ def _q_approx_diameter_directed(spark: SparkSession, sf: str) -> DataFrame:
             g.edges, source=far["id"], max_depth=AD_MAXD, vertices=g.vertices
         )
         best = max(best, d2.agg(F.max("dist")).first()[0])
-    return spark.createDataFrame([(best,)], "diameter int")
+    return local_relation(spark, "diameter int", [best])
 
 
 def _q_extract_links(spark: SparkSession, sf: str) -> DataFrame:

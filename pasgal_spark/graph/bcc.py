@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import pin
+from pasgal_spark.plans.lineage import local_relation, pin
 
 from pasgal_spark.graph.euler import (
     MAX_DRIVER_ROWS,
@@ -430,8 +430,10 @@ def bcc_summary(
         row = _bcc_summary_driver(
             zip(pdf["src"].tolist(), pdf["dst"].tolist()), n_vertices
         )
-        return vertices.sparkSession.createDataFrame(
-            [row], "n_cc long, n_bcc long, largest_bcc_edges long, n_bridges long"
+        return local_relation(
+            vertices.sparkSession,
+            "n_cc long, n_bcc long, largest_bcc_edges long, n_bridges long",
+            *([x] for x in row),
         )
 
     cc, tags = _cc_and_tags(sym, vertices, cc)

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pasgal_spark.graph.kernels import _frontier_loop, _push_level
-from pasgal_spark.plans.lineage import pin
+from pasgal_spark.plans.lineage import local_relation, pin
 
 
 def _reach(
@@ -69,7 +69,7 @@ def reachability(
     wrong components; same raise-don't-truncate policy as ``scc``'s
     round budget. ``hinted``: see ``kernels._push_level``.
     """
-    seed = edges.sparkSession.createDataFrame([(source,)], "id long")
+    seed = local_relation(edges.sparkSession, "id long", [source])
     return _reach(edges, seed, "reachability", max_iterations, hinted)
 
 
@@ -84,9 +84,7 @@ def multi_reachability(
     multimap (src/SCC/resizable_table.h:40-173). Same budget rule as
     ``reachability``.
     """
-    seed = edges.sparkSession.createDataFrame(
-        [(s, s) for s in sources], "id long, source long"
-    )
+    seed = local_relation(edges.sparkSession, "id long, source long", sources, sources)
     return _reach(edges, seed, "multi_reachability", max_iterations, hinted)
 
 
@@ -216,7 +214,7 @@ def scc(
         batch = min(int(batch * growth) + 1, 4096)
 
     if not settled_parts:
-        return spark.createDataFrame([], "id long, scc long")
+        return local_relation(spark, "id long, scc long", [], [])
     out = settled_parts[0]
     for df in settled_parts[1:]:
         out = out.unionByName(df)

@@ -58,10 +58,11 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import pin
+from pasgal_spark.plans.lineage import local_relation, pin
 
 _B = 2 ** 32  # (a, b) -> (a << 32) | b packing; ids asserted < 2^31
 
@@ -338,8 +339,9 @@ def boruvka_forest_cc(
             break
         if cnt <= max_residual:
             # deterministic driver union-find (path halving), edges in
-            # ascending key order — the exact idiom of
-            # kernels.cc_phase2_union_find. Link larger root under
+            # ascending key order: Kruskal, so it stays sequential — the
+            # chosen keys depend on the order (kernels'
+            # _min_root_union_find only labels). Link larger root under
             # smaller so roots stay group minima: the forest (chosen
             # keys) is unaffected by link direction, and the labeling
             # byproduct comes out canonical for free.
@@ -365,12 +367,9 @@ def boruvka_forest_cc(
                         parent[rx] = ry
                     chosen_keys.append(k)
             if chosen_keys:
-                mask = _B - 1
+                keys = np.asarray(chosen_keys, dtype=np.int64)
                 forest_parts.append(
-                    spark.createDataFrame(
-                        [(k >> 32, k & mask) for k in chosen_keys],
-                        "a long, b long",
-                    )
+                    local_relation(spark, "a long, b long", keys >> 32, keys & (_B - 1))
                 )
             break
         if rounds_done >= max_rounds:
@@ -384,13 +383,15 @@ def boruvka_forest_cc(
             done = True
 
     if not forest_parts:
-        forest = spark.createDataFrame([], "a long, b long")
+        forest = local_relation(spark, "a long, b long", [], [])
     elif not phase1_engaged and len(forest_parts) == 1:
         # pure driver path: the forest is a single driver-built relation
         # whose keys are unique by construction (one per accepted union).
-        # Keep it a LocalRelation (r6): the old distinct+pin paid a job,
-        # and downstream euler_tags' limit+toPandas on a LocalRelation is
-        # a DRIVER-LOCAL conversion — zero jobs.
+        # Keep it a LocalRelation: the old distinct+pin paid a job.
+        # Measured (Spark 4.1): euler_tags' limit+toPandas over it runs
+        # 0 jobs with Arrow off (a driver-local collect) and 1 job under
+        # the engine's Arrow toPandas, which runs even a LocalTableScan
+        # as a job.
         forest = forest_parts[0]
     else:
         out = forest_parts[0]
@@ -407,8 +408,10 @@ def boruvka_forest_cc(
                 r = uf_parent[r]
             return r
 
-        remap = [(x, _find(x)) for x in list(uf_parent) if _find(x) != x]
-        map_df = spark.createDataFrame(remap or [], "comp long, final long")
+        moved = [x for x in list(uf_parent) if _find(x) != x]
+        map_df = local_relation(
+            spark, "comp long, final long", moved, [_find(x) for x in moved]
+        )
         labels = labels.join(F.broadcast(map_df), "comp", "left").select(
             "id", F.coalesce("final", "comp").alias("comp")
         )
@@ -455,14 +458,11 @@ def _euler_ent_numpy(a, b):
     doubling, entering-arc aggregates) over NumPy arrays. ceil(log2(n))
     vectorized passes instead of ceil(log2(n)) Spark supersteps.
 
-    Returns a pandas DataFrame (id, minp, maxp, par) — one row per tree
+    Returns the columns (id, minp, maxp, par) — one row per tree
     vertex. Trees are identified without a components input: each Euler
     circuit's minimum vertex (the canonical root, = the component label
     upstream) is found by min-propagation doubling around the circuit.
     """
-    import numpy as np
-    import pandas as pd
-
     # adjacency rows (u, v): arc v -> u (enters u from v), both directions
     u = np.concatenate([a, b]).astype(np.int64)
     v = np.concatenate([b, a]).astype(np.int64)
@@ -519,14 +519,7 @@ def _euler_ent_numpy(a, b):
     he = np.empty(n_arcs, dtype=bool)
     he[:-1] = hb[1:]
     he[-1] = True
-    return pd.DataFrame(
-        {
-            "id": heads[hb],
-            "minp": pos2[hb],
-            "maxp": pos2[he],
-            "par": tails[hb],
-        }
-    )
+    return heads[hb], pos2[hb], pos2[he], tails[hb]
 
 
 def euler_tags(
@@ -556,11 +549,11 @@ def euler_tags(
     # distributed path still needs the exact count for its round bound.
     pdf = forest.limit(budget + 1).toPandas()
     if len(pdf) <= budget:
-        if len(pdf) == 0:
-            ent = spark.createDataFrame([], "id long, minp long, maxp long, par long")
-        else:
-            ent_pdf = _euler_ent_numpy(pdf["a"].to_numpy(), pdf["b"].to_numpy())
-            ent = spark.createDataFrame(ent_pdf)
+        cols = (
+            _euler_ent_numpy(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+            if len(pdf) else ([], [], [], [])
+        )
+        ent = local_relation(spark, "id long, minp long, maxp long, par long", *cols)
         return _tags_from_ent(cc, ent)
     del pdf
     n_edges = forest.count()
@@ -655,9 +648,6 @@ def _minmax_numpy(comp, iid, first, last, w1, w2):
     leaves and isolated vertices fall back to low=w1/high=w2 in the
     caller's coalesce, exactly what the distributed table returns for a
     one-position range."""
-    import numpy as np
-    import pandas as pd
-
     # (component << 32) | position sorts rows into per-component position
     # order; a subtree = a contiguous index slice of this order
     keys = (comp << 32) | first
@@ -669,7 +659,7 @@ def _minmax_numpy(comp, iid, first, last, w1, w2):
     internal = ls > fs
     qi = np.flatnonzero(internal)
     if len(qi) == 0:
-        return pd.DataFrame({"id": [], "low": [], "high": []}).astype("int64")
+        return qi, qi, qi
     j_idx = np.searchsorted(ks, (cs[qi] << 32) | ls[qi], side="right") - 1
     length = j_idx - qi + 1  # >= 2: an internal vertex has a descendant
     kq = np.floor(np.log2(length)).astype(np.int64)
@@ -691,7 +681,7 @@ def _minmax_numpy(comp, iid, first, last, w1, w2):
             blk = 1 << k
             low[sel] = np.minimum(a_mn[qi[sel]], a_mn[j_idx[sel] - blk + 1])
             high[sel] = np.maximum(a_mx[qi[sel]], a_mx[j_idx[sel] - blk + 1])
-    return pd.DataFrame({"id": ids_s[qi], "low": low, "high": high})
+    return ids_s[qi], low, high
 
 
 def subtree_minmax(
@@ -754,10 +744,8 @@ def subtree_minmax(
         # run the identical sparse-table doubling vectorized; upload
         # (id, low, high) for internal vertices; leaves/isolated coalesce
         # to their own w1/w2 (= the one-position range answer)
-        if len(pdf) == 0:
-            res = spark.createDataFrame([], "id long, low long, high long")
-        else:
-            res_pdf = _minmax_numpy(
+        cols = (
+            _minmax_numpy(
                 pdf["component"].to_numpy(),
                 pdf["id"].to_numpy(),
                 pdf["first"].to_numpy(),
@@ -765,10 +753,9 @@ def subtree_minmax(
                 pdf["w1"].to_numpy(),
                 pdf["w2"].to_numpy(),
             )
-            if len(res_pdf) == 0:
-                res = spark.createDataFrame([], "id long, low long, high long")
-            else:
-                res = spark.createDataFrame(res_pdf)
+            if len(pdf) else ([], [], [])
+        )
+        res = local_relation(spark, "id long, low long, high long", *cols)
         out = (
             base.join(res, "id", "left")
             .select(

@@ -29,17 +29,45 @@ threshold); explicit ``F.broadcast`` hints still apply.
 On a cluster the same role is played by parquet/Iceberg checkpoints
 (``pasgal_spark.plans.checkpoints``), whose read-back scans carry real
 file-size stats — naturally bounded. ``pin`` is the in-memory analog.
+
+``local_relation`` is the other direction: the one way the package turns
+driver-side rows (a BFS seed, a union-find fix-up map, a NumPy fast
+path's result) into a relation.
 """
 
 from __future__ import annotations
 
 import logging
+from typing import Sequence
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_string
 
 _log = logging.getLogger(__name__)
 _warned_fallback = False
 _warned_fast_fallback = False
+
+
+def local_relation(
+    spark: SparkSession, schema: str, *columns: Sequence
+) -> DataFrame:
+    """A driver-built relation: DDL ``schema`` (``"id long, dist int"``)
+    over one array per column (lists or NumPy arrays, cast to the DDL
+    types; all empty for an empty relation).
+
+    Built from a ``pyarrow.Table``, so Spark plans a ``LocalRelation``
+    whatever the session's Arrow setting: reads are ``LocalTableScan``s
+    and a ``collect()`` runs no job. A Python list handed to
+    ``createDataFrame`` instead plans a ``LogicalRDD`` over a pickled
+    ``parallelize`` (and so does a pandas frame with Arrow off): every read
+    is a job run by Python workers — 2.0 s when they start cold, 0.34-0.40
+    s warm, against 0.02 s and no job here, for one row of integers
+    (4 cores, Spark 4.1).
+    """
+    struct = _parse_datatype_string(schema)
+    table = pa.table(list(columns), names=struct.names)
+    return spark.createDataFrame(table, struct)
 
 
 def fast_pin(df: DataFrame) -> DataFrame:

@@ -268,6 +268,32 @@ def main() -> None:
     )
     e.unpersist()
 
+    # 3f. BFS level 1, built by kernels.bfs itself (its frontier loop is
+    #     swapped for one that hands back the seed and level builder): the
+    #     driver-made seed must be a LocalRelation, read as LocalTableScan.
+    #     A seed over Python rows is a raw Scan ExistingRDD that Python
+    #     workers recompute at every level until the next pin.
+    built = {}
+
+    def capture(seed, build, **_):
+        built.update(seed=seed, build=build)
+        return seed
+
+    loop, kernels._frontier_loop = kernels._frontier_loop, capture
+    try:
+        kernels.bfs(g.sym, 0)
+    finally:
+        kernels._frontier_loop = loop
+    p = plan_of(built["build"](1, built["seed"], built["seed"]))
+    t = _tree(p)
+    check(
+        "bfs level-1 push over a LocalRelation seed",
+        p,
+        must=["LocalTableScan"],
+        must_not=[],
+        holds={"no raw Scan ExistingRDD": _raw_scans(t) == 0},
+    )
+
     # 4. extractor: Python only at the extraction boundary
     from pasgal_spark.sources.pages import pages_from_documents
     from pasgal_spark.sources.extract import extract_links, links_to_edges

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
+
 from pasgal_spark.graph import directed, kernels
 from pasgal_spark.graph.builder import symmetrize, transpose, validate
 from pasgal_spark.plans.lineage import fast_pin, pin
@@ -563,3 +565,86 @@ def test_kernel_jobs_stay_in_callers_job_group(spark):
     listeners.waitUntilEmpty()
     assert tracker.getJobIdsForGroup("kernel-jobs")
     assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
+def test_kernels_build_driver_relations_without_python_rows(spark, monkeypatch):
+    """Driver-made relations (BFS/SSSP/reachability seeds, two-phase CC's
+    fix-up map) are Arrow LocalRelations: with the fixtures built, a
+    ``createDataFrame`` over Python rows or pandas raises, and every
+    kernel still matches its oracle."""
+    import pyarrow as pa
+    from pyspark.sql import SparkSession
+
+    pairs = _sym_pairs(TT_EDGES)
+    sym = edges_df(spark, pairs)
+    verts = vertices_df(spark, range(TT_N))
+    wpairs = [(u, v, (u * 31 + v * 17) % 8 + 1) for u, v in pairs]
+    wedges = spark.createDataFrame(wpairs, "src long, dst long, w long")
+    real = SparkSession.createDataFrame
+
+    def arrow_only(self, data, *args, **kwargs):
+        if not isinstance(data, pa.Table):
+            raise AssertionError(f"createDataFrame over {type(data).__name__}")
+        return real(self, data, *args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "createDataFrame", arrow_only)
+    hops = bfs_oracle(TT_EDGES, 0)
+    assert dict(kernels.bfs(sym, 0, vertices=verts).collect()) == hops
+    assert dict(kernels.sssp(wedges, 0).collect()) == dijkstra_oracle(wpairs, 0)
+    want = cc_oracle(TT_N, TT_EDGES)
+    for m_upper in (None, 2 * 4_000_000 + 1):  # direct path, forced shrink path
+        cc = kernels.connected_components_two_phase(sym, verts, m_upper=m_upper)
+        assert dict(cc.collect()) == want, m_upper
+    assert {r["id"] for r in directed.reachability(sym, 0).collect()} == set(hops)
+
+
+def _uf_moves(pairs):
+    a, b = (np.array(col, dtype=np.int64) for col in zip(*pairs))
+    ids, roots = kernels._min_root_union_find(a, b)
+    return dict(zip(ids.tolist(), roots.tolist()))
+
+
+def _oracle_moves(pairs):
+    """cc_oracle over the rank-compacted ids (order-preserving, so the
+    min label survives), as {id: min id} for ids that are not minima."""
+    ids = sorted({x for p in pairs for x in p})
+    rank = {x: i for i, x in enumerate(ids)}
+    label = cc_oracle(len(ids), [(rank[u], rank[v]) for u, v in pairs])
+    return {ids[i]: ids[lab] for i, lab in label.items() if lab != i}
+
+
+def test_union_find_matches_cc_oracle():
+    rng = np.random.default_rng(7)
+    perm = rng.permutation(2000).tolist()
+    chain = [(perm[i], perm[i + 1]) for i in range(1999)]
+    grid = [(r * 30 + c, r * 30 + c + 1) for r in range(30) for c in range(29)]
+    grid += [(r * 30 + c, (r + 1) * 30 + c) for r in range(29) for c in range(30)]
+    cases = {"chain": chain, "grid": grid}
+    for k in range(2):
+        ids = rng.choice(2**40, 3000, replace=False).tolist()
+        ends = rng.integers(0, 3000, (2500, 2)).tolist()
+        cases[f"random{k}"] = [(ids[x], ids[y]) for x, y in ends if x != y]
+    for name, pairs in cases.items():
+        pairs = [(min(p), max(p)) for p in pairs]
+        assert _uf_moves(pairs) == _oracle_moves(pairs), name
+
+
+def test_union_find_empty_residual_and_budget_boundary(spark):
+    """No inter-cluster pair leaves the labels as they are; a residual of
+    exactly ``max_residual`` pairs is finished, one pair more raises."""
+    import pytest
+
+    verts = vertices_df(spark, range(TT_N))
+    identity = verts.select("id", verts.id.alias("component"))
+    loops = edges_df(spark, [(3, 3)])
+    got = kernels.cc_phase2_union_find(loops, identity, identity_labels=True)
+    assert dict(got.collect()) == {i: i for i in range(TT_N)}
+    sym = edges_df(spark, _sym_pairs(TT_EDGES))
+    got = kernels.cc_phase2_union_find(
+        sym, identity, max_residual=len(TT_EDGES), identity_labels=True
+    )
+    assert dict(got.collect()) == cc_oracle(TT_N, TT_EDGES)
+    with pytest.raises(RuntimeError, match="residual exceeds"):
+        kernels.cc_phase2_union_find(
+            sym, identity, max_residual=len(TT_EDGES) - 1, identity_labels=True
+        )

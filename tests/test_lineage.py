@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import pin
+from pasgal_spark.plans.lineage import local_relation, pin
 from tests.conftest import edges_df
 
 
@@ -91,3 +91,28 @@ def test_fast_pin_fallback_logs_once(monkeypatch, caplog):
         assert lineage.fast_pin(plain) is plain
         assert lineage.fast_pin(plain) is plain
     assert sum("fast_pin" in r.getMessage() for r in caplog.records) == 1
+
+
+def test_local_relation_is_a_zero_job_local_relation_with_arrow_off(spark):
+    # A vanilla session (Arrow off) must still get a LocalRelation with the
+    # DDL's exact types, empty input included, and reading it runs no job.
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listeners = sc._jsc.sc().listenerBus()
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    spark.conf.set(key, "false")
+    try:
+        one = local_relation(spark, "id long, dist int", [7], [0])
+        empty = local_relation(spark, "id long, scc long", [], [])
+        for df in (one, empty):
+            assert _analyzed(df).getClass().getSimpleName() == "LocalRelation"
+        assert one.dtypes == [("id", "bigint"), ("dist", "int")]
+        assert empty.dtypes == [("id", "bigint"), ("scc", "bigint")]
+        listeners.waitUntilEmpty()
+        before = len(tracker.getJobIdsForGroup(None))
+        assert [tuple(r) for r in one.collect()] == [(7, 0)]
+        assert empty.collect() == []
+        listeners.waitUntilEmpty()
+        assert len(tracker.getJobIdsForGroup(None)) == before
+    finally:
+        spark.conf.set(key, "true")
