@@ -192,6 +192,14 @@ def boruvka_forest_cc(
     uf_parent: dict[int, int] = {}
     forest_parts: list[DataFrame] = []
 
+    def find(a: int) -> int:
+        """The root of ``a`` in the driver union-find, with path halving."""
+        r = uf_parent.setdefault(a, a)
+        while uf_parent[r] != r:
+            uf_parent[r] = uf_parent[uf_parent[r]]
+            r = uf_parent[r]
+        return r
+
     def _cross(labels: DataFrame) -> DataFrame:
         key = _pack(F.least("src", "dst"), F.greatest("src", "dst"))
         if not phase1_engaged:
@@ -345,15 +353,6 @@ def boruvka_forest_cc(
             # smaller so roots stay group minima: the forest (chosen
             # keys) is unaffected by link direction, and the labeling
             # byproduct comes out canonical for free.
-            parent = uf_parent
-
-            def find(a: int) -> int:
-                r = parent.setdefault(a, a)
-                while parent[r] != r:
-                    parent[r] = parent[parent[r]]
-                    r = parent[r]
-                return r
-
             chosen_keys = []
             rpdf = rpdf.sort_values("key", kind="stable")
             for x, y, k in zip(
@@ -362,9 +361,9 @@ def boruvka_forest_cc(
                 rx, ry = find(x), find(y)
                 if rx != ry:
                     if rx < ry:
-                        parent[ry] = rx
+                        uf_parent[ry] = rx
                     else:
-                        parent[rx] = ry
+                        uf_parent[rx] = ry
                     chosen_keys.append(k)
             if chosen_keys:
                 keys = np.asarray(chosen_keys, dtype=np.int64)
@@ -401,16 +400,9 @@ def boruvka_forest_cc(
 
     # --- connectivity labeling byproduct --------------------------------
     if uf_parent:
-        def _find(a: int) -> int:
-            r = uf_parent.setdefault(a, a)
-            while uf_parent[r] != r:
-                uf_parent[r] = uf_parent[uf_parent[r]]
-                r = uf_parent[r]
-            return r
-
-        moved = [x for x in list(uf_parent) if _find(x) != x]
+        moved = [x for x in list(uf_parent) if find(x) != x]
         map_df = local_relation(
-            spark, "comp long, final long", moved, [_find(x) for x in moved]
+            spark, "comp long, final long", moved, [find(x) for x in moved]
         )
         labels = labels.join(F.broadcast(map_df), "comp", "left").select(
             "id", F.coalesce("final", "comp").alias("comp")

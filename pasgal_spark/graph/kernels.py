@@ -41,10 +41,11 @@ cadence — on a cluster this would be a parquet/Iceberg checkpoint (see
 pasgal_spark.plans.checkpoints for the resumable variant).
 
 Two loops drive the iterative kernels: the probe loop ``_iterate``
-(PageRank, the min-label loops, LDD, Bellman-Ford SSSP) and the frontier
-loop ``_frontier_loop`` (BFS and ``directed``'s reachability). Δ- and
-ρ-stepping SSSP drive ``_StateChain`` themselves: their step depends on
-the probe's threshold.
+(PageRank, the min-label loops, LDD, the three SSSP variants) and the
+frontier loop ``_frontier_loop`` (BFS and ``directed``'s reachability).
+Bellman-Ford, Δ- and ρ-stepping SSSP share one kernel, ``_sssp``: one
+relax step whose threshold rule plans as a scalar subquery over the
+generation it relaxes.
 """
 
 from __future__ import annotations
@@ -52,7 +53,7 @@ from __future__ import annotations
 from typing import Callable
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.util import InheritableThread
 
@@ -943,6 +944,81 @@ def bfs(
     return _frontier_loop(seed, build, levels=max_depth, on_level=on_level)
 
 
+def _sssp(
+    wedges: DataFrame, source: int, rule: Callable[[DataFrame], Column], *,
+    cap, max_iterations: int, who: str,
+) -> DataFrame:
+    """The SSSP kernel behind ``sssp``, ``sssp_delta_stepping`` and
+    ``sssp_rho_stepping``: the reference's template method
+    (src/SSSP/sssp.h:196-236) on ``_iterate``. ``rule(unsettled rows)``
+    is the variant's ``get_threshold()``: a Column that picks this
+    round's frontier from the unsettled rows. Returns the pinned
+    (id, dist) for vertices with dist <= cap.
+
+    State (id, dist, rat): ``rat`` is the dist a vertex last relaxed its
+    out-edges at (null: never), so a row is unsettled while it improved
+    since (a delivered dist needs no re-delivery — dist+w candidates
+    from an unchanged sender are already in every neighbor's min). Each
+    superstep relaxes the frontier's out-edges and folds the candidates
+    with ``groupBy(id).agg(min)`` (``write_min``, src/utils.h:65-81);
+    frontier rows record ``rat = dist``. The rule reads the generation
+    it relaxes through a scalar subquery planned into the step — a top-k
+    ``orderBy("dist").limit(k)``, which plans as a TakeOrdered with no
+    exchange — so the step needs no driver-side value and compiles
+    during the probe like every other kernel. The probe counts
+    unsettled rows; none left is the capped fixpoint, and a budget of
+    ``max_iterations`` supersteps that ends short of it raises. The
+    minimum unsettled row is in every frontier and, with positive
+    weights, never reopens, so each superstep settles at least one
+    vertex and every schedule reaches the same result.
+
+    Weight-type generic (the reference's ``-DFLOAT`` build,
+    src/SSSP/sssp.cpp:11-15): ``dist`` adopts ``w``'s type. Float
+    determinism: every candidate is a left-to-right fold along one path
+    (``dist + w``) and the aggregate is a ``min``, with no
+    reduction-order-dependent summation, so double results are
+    bit-stable across partitionings and match a sequential Dijkstra.
+    """
+    wtype = dict(wedges.dtypes)["w"]
+    unsettled = F.col("rat").isNull() | (F.col("dist") < F.col("rat"))
+
+    def step(cur: DataFrame) -> DataFrame:
+        in_frontier = unsettled & rule(cur.filter(unsettled))
+        frontier = _hint_state(cur.filter(in_frontier).select("id", "dist"))
+        relaxed = (
+            wedges.join(frontier, wedges.src == frontier.id)
+            .select(wedges.dst.alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
+            .filter(F.col("dist") <= cap)
+            .withColumn("rat", F.lit(None).cast(wtype))
+        )
+        st = cur.select(
+            "id", "dist",
+            F.when(in_frontier, F.col("dist")).otherwise(F.col("rat")).alias("rat"),
+        )
+        return (
+            st.unionByName(relaxed)
+            .groupBy("id")
+            .agg(F.min("dist").alias("dist"), F.min("rat").alias("rat"))
+        )
+
+    seed = local_relation(wedges.sparkSession, f"id long, dist {wtype}", [source], [0])
+    chain = _StateChain(2)
+    cur, converged = _iterate(
+        chain, step, seed.withColumn("rat", F.lit(None).cast(wtype)),
+        rounds=max_iterations, probe=lambda s: _frontier_size(s, unsettled),
+        done=lambda n: n == 0,
+    )
+    if not converged:
+        chain.close()
+        # raise, don't truncate: frozen tentative distances are wrong
+        # answers, not approximations
+        raise RuntimeError(
+            f"{who}: unsettled vertices remain after {max_iterations} supersteps;"
+            " raise max_iterations (long-diameter or small-weight graph)"
+        )
+    return chain.seal(cur.select("id", "dist"))
+
+
 def sssp(
     wedges: DataFrame,
     source: int = 0,
@@ -950,105 +1026,14 @@ def sssp(
     cap: int = 40,
     max_iterations: int = 100,
 ) -> DataFrame:
-    """Bellman-Ford shortest paths with distances capped at ``cap``.
+    """Bellman-Ford shortest paths with distances capped at ``cap`` →
+    (id, dist) for vertices with dist <= cap.
 
-    The reference's template-method SSSP (src/SSSP/sssp.h:196-236) with the
-    Bellman-Ford threshold (src/SSSP/sssp.h:310-322): relax the entire
-    frontier each superstep; ``write_min`` (src/utils.h:65-81) becomes
-    ``groupBy(id).agg(min)``. Positive weights + cap bound the search.
-    Returns (id, dist) for vertices with dist <= cap.
-
-    Weight-type generic (the reference's ``-DFLOAT`` build,
-    src/SSSP/sssp.cpp:11-15): ``dist`` adopts ``w``'s type, so integer
-    and double weights both work. Float determinism stance: every
-    candidate distance is a *left-to-right fold along one path*
-    (``dist + w`` per relaxation) and the aggregate is a ``min`` over
-    those per-path values — there is no reduction-order-dependent
-    summation, so double results are bit-stable across partitionings and
-    match a sequential Dijkstra exactly (tests/test_kernels.py).
-    """
-    dist0, wtype = _sssp_source(wedges, source)
-
-    # Frontier-based relaxation (the reference's frontier semantics,
-    # sssp.h:196-236, and this engine's fused-delta pattern): only
-    # vertices whose tentative distance changed last round relax their
-    # out-edges. A distance the frontier delivered once never needs
-    # re-delivery — dist+w candidates from an unchanged u are already
-    # folded into every neighbor's min. Empty frontier ⟺ fixpoint.
-    def step(dist: DataFrame, frontier: DataFrame) -> DataFrame:
-        f = _hint_state(frontier)
-        relaxed = (
-            wedges.join(f, wedges.src == f.id)
-            .select(
-                wedges.dst.alias("id"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            .filter(F.col("dist") <= cap)
-            .withColumn("old", F.lit(None).cast(wtype))
-        )
-        st = dist.select("id", "dist", F.col("dist").alias("old"))
-        return (
-            st.unionByName(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"), F.min("old").alias("old"))
-        )
-
-    # newly reached (old is null) or improved (dist < old) → frontier.
-    # One aggregate action per superstep (r6): materializes the generation and
-    # counts senders, overlapped with the next superstep's compile.
-    changed = _changed("dist")
-    chain = _StateChain(2)
-    cur, converged = _iterate(
-        chain,
-        lambda s: step(s, s.filter(changed)),
-        dist0.withColumn("old", F.lit(None).cast(wtype)),
-        rounds=max_iterations,
-        probe=lambda s: _frontier_size(s, changed),
-        done=lambda nf: nf == 0,
-    )
-    if not converged:
-        chain.close()
-        # Raise-don't-truncate (the CC/min-label policy): frozen tentative
-        # distances are silently wrong answers, not approximations.
-        raise RuntimeError(
-            f"sssp: distances still improving after {max_iterations} "
-            "supersteps; raise max_iterations (long-diameter or "
-            "small-weight graph)"
-        )
-    return chain.seal(cur.select("id", "dist"))
-
-
-def _sssp_source(wedges: DataFrame, source: int) -> tuple[DataFrame, str]:
-    """(the one-row source state (id, dist), dist's type): ``dist`` adopts
-    the weight type (``-DFLOAT`` parity)."""
-    wtype = dict(wedges.dtypes)["w"]
-    state = local_relation(wedges.sparkSession, f"id long, dist {wtype}", [source], [0])
-    return state, wtype
-
-
-def _bucket_relax(
-    wedges: DataFrame, dist: DataFrame, in_frontier, *, cap, wtype: str
-) -> DataFrame:
-    """One Δ/ρ-stepping superstep over (id, dist, rat): the vertices
-    ``in_frontier`` relax their out-edges and record the dist they relaxed
-    at as ``rat``. Each id has exactly one state row, so min(rat) (nulls
-    skipped) is exactly that row's marker."""
-    frontier = _hint_state(dist.filter(in_frontier).select("id", "dist"))
-    relaxed = (
-        wedges.join(frontier, wedges.src == frontier.id)
-        .select(wedges.dst.alias("id"), (F.col("dist") + F.col("w")).alias("dist"))
-        .filter(F.col("dist") <= cap)
-        .withColumn("rat", F.lit(None).cast(wtype))
-    )
-    st = dist.select(
-        "id", "dist",
-        F.when(in_frontier, F.col("dist")).otherwise(F.col("rat")).alias("rat"),
-    )
-    return (
-        st.unionByName(relaxed)
-        .groupBy("id")
-        .agg(F.min("dist").alias("dist"), F.min("rat").alias("rat"))
-    )
+    The reference's Bellman-Ford threshold (src/SSSP/sssp.h:310-322, an
+    infinite threshold): every unsettled vertex relaxes each superstep.
+    Integer and double weights both work (see ``_sssp``)."""
+    return _sssp(wedges, source, lambda _: F.lit(True),
+                 cap=cap, max_iterations=max_iterations, who="sssp")
 
 
 def sssp_delta_stepping(
@@ -1061,62 +1046,21 @@ def sssp_delta_stepping(
 ) -> DataFrame:
     """Δ-stepping SSSP: relax in distance buckets of width ``delta``.
 
-    The reference's template-method SSSP with the Δ threshold rule
-    (src/SSSP/sssp.h:292-308: threshold advances by a fixed Δ). Per round,
-    only tentative distances under the current threshold relax — light
-    edges inside a bucket settle before the threshold advances, bounding
-    wasted re-relaxations versus plain Bellman-Ford on weighted graphs.
-    Results are identical to ``sssp`` (same cap semantics); only the
-    physical superstep schedule differs. Weight-type generic like
-    ``sssp`` (``-DFLOAT`` parity; same per-path-fold determinism stance).
-    """
-    dist, wtype = _sssp_source(wedges, source)
-    dist = dist.transform(pin)
-    # ``rat`` = the tentative distance at which a vertex LAST relaxed its
-    # out-edges (null = never relaxed). The active frontier is
-    # sub-threshold vertices whose dist improved since they last relaxed
-    # — without it, every settled vertex below the threshold re-relaxes
-    # every round (O(rounds × settled edges), a scale-killer once the
-    # settled prefix dominates). A delivered dist never needs
-    # re-delivery: dist+w candidates from an unchanged sender are already
-    # folded into every neighbor's min.
-    dist = dist.withColumn("rat", F.lit(None).cast(wtype))
-    threshold = delta
-    chain = _StateChain(3)
-    converged = False
-    unsettled = F.col("rat").isNull() | (F.col("dist") < F.col("rat"))
-    for _ in range(max_iterations):
-        in_frontier = (F.col("dist") < threshold) & unsettled
-        # ONE fused probe per round (r6, was isEmpty + a separate min-agg
-        # job on empty buckets + an eager checkpoint): materializes the
-        # latest generation, counts the active frontier, AND returns the
-        # min unsettled distance so an empty delta-bucket jumps the
-        # threshold with no extra job. The schedule changes, the result
-        # cannot: bucket order only affects which rounds relax what.
-        row = dist.agg(
-            F.sum(F.when(in_frontier, 1)).alias("nf"),
-            F.min(F.when(unsettled, F.col("dist"))).alias("mu"),
-        ).first()
-        if not (row["nf"] or 0):
-            if row["mu"] is None:
-                converged = True
-                break
-            threshold = (int(row["mu"] // delta) + 1) * delta
-            continue
-        dist = chain.advance(
-            _bucket_relax(wedges, dist, in_frontier, cap=cap, wtype=wtype)
-        )
-    if not converged:
-        # probe-before-raise (ADVICE r3 boundary rule): the budget may
-        # have run out exactly at the fixpoint
-        converged = dist.filter(unsettled).isEmpty()
-    if not converged:
-        chain.close()
-        raise RuntimeError(
-            f"sssp_delta_stepping: unsettled vertices remain after "
-            f"{max_iterations} rounds; raise max_iterations"
-        )
-    return chain.seal(dist.select("id", "dist"))
+    The reference's Δ threshold rule (src/SSSP/sssp.h:292-308): the
+    frontier is the unsettled vertices in the lowest non-empty bucket,
+    ``floor(dist / delta)`` at most that of the minimum unsettled
+    distance, so light edges inside a bucket settle before the next one
+    opens and empty buckets cost nothing. Same result as ``sssp``; only
+    the superstep schedule differs."""
+    if delta <= 0:
+        raise ValueError(f"sssp_delta_stepping: delta must be positive, got {delta}")
+
+    def rule(open_: DataFrame) -> Column:
+        least = open_.orderBy("dist").limit(1).select("dist").scalar()
+        return F.floor(F.col("dist") / delta) <= F.floor(least / delta)
+
+    return _sssp(wedges, source, rule, cap=cap, max_iterations=max_iterations,
+                 who="sssp_delta_stepping")
 
 
 def sssp_rho_stepping(
@@ -1127,81 +1071,24 @@ def sssp_rho_stepping(
     cap: int = 40,
     max_iterations: int = 200,
 ) -> DataFrame:
-    """ρ-stepping SSSP: per-round threshold = ρ-th smallest unsettled distance.
+    """ρ-stepping SSSP: each superstep's threshold is the ρ-th smallest
+    unsettled distance.
 
-    The reference's template-method SSSP with the ρ threshold rule
-    (src/SSSP/sssp.h:240-290): each outer round picks the ρ-th smallest
-    tentative distance among unsettled vertices as the relaxation threshold,
-    then relaxes the sub-threshold frontier to a fixpoint before advancing.
-    The reference estimates the quantile from 1024 samples
-    (src/SSSP/sssp.h:267-284); we compute it exactly and deterministically
-    with a top-K (`orderBy(dist).limit(rho)` — TakeOrdered, no full sort),
-    per the determinism stance in SURVEY.md §4.4. Results are identical to
-    ``sssp`` / ``sssp_delta_stepping`` (same cap semantics); only the
-    physical superstep schedule differs, so the same SQL oracle applies.
-    """
-    dist, wtype = _sssp_source(wedges, source)
-    dist = dist.transform(pin)
-    # every dist <= settled_upto is final (positive weights); inclusive
-    # bound so the rule is weight-type generic (``-DFLOAT`` parity) —
-    # identical bucket schedule to the old ``int(top) + 1`` exclusive
-    # form on integer weights
-    settled_upto = None
-    # ``rat`` marker, same as sssp_delta_stepping: relax only vertices
-    # whose dist improved since they last relaxed — the old
-    # frontier = (dist <= top) re-relaxed the ENTIRE settled prefix every
-    # inner round.
-    dist = dist.withColumn("rat", F.lit(None).cast(wtype))
-    budget = max_iterations  # bounds total supersteps across all buckets
-    chain = _StateChain(3)
-    converged = False
-    while budget > 0:
-        unsettled = (
-            dist if settled_upto is None
-            else dist.filter(F.col("dist") > settled_upto)
-        )
-        top = unsettled.orderBy("dist").limit(rho).agg(F.max("dist")).first()[0]
-        if top is None:
-            converged = True
-            break
-        # inner fixpoint on the active bucket (dist <= the ρ-th smallest)
-        while budget > 0:
-            budget -= 1
-            in_frontier = (F.col("dist") <= top) & (
-                F.col("rat").isNull() | (F.col("dist") < F.col("rat"))
-            )
-            # ONE fused probe per inner round (r6, was isEmpty + an eager
-            # checkpoint): materializes the latest generation and counts
-            # the active frontier.
-            nf = (
-                dist.agg(F.sum(F.when(in_frontier, 1)).alias("nf")).first()["nf"]
-                or 0
-            )
-            if not nf:
-                break
-            dist = chain.advance(
-                _bucket_relax(wedges, dist, in_frontier, cap=cap, wtype=wtype)
-            )
-        settled_upto = top
-        if settled_upto >= cap:
-            converged = True
-            break
-    if not converged:
-        # probe-before-raise (ADVICE r3 boundary rule): the budget may
-        # have run out exactly at the fixpoint — one cheap emptiness
-        # probe distinguishes that from genuine truncation
-        rem = (
-            dist if settled_upto is None
-            else dist.filter(F.col("dist") > settled_upto)
-        )
-        converged = rem.isEmpty()
-    if not converged:
-        chain.close()
-        raise RuntimeError(
-            f"sssp_rho_stepping: unsettled vertices remain after "
-            f"{max_iterations} supersteps; raise max_iterations"
-        )
-    return chain.seal(dist.select("id", "dist"))
+    The reference's ρ threshold rule (src/SSSP/sssp.h:240-290),
+    recomputed every round like the reference. The reference estimates
+    the quantile from 1024 samples (src/SSSP/sssp.h:267-284); here it is
+    exact and deterministic (SURVEY.md §4.4), a top-ρ of the unsettled
+    rows. Same result as ``sssp``; only the superstep schedule
+    differs."""
+    if rho < 1:
+        raise ValueError(f"sssp_rho_stepping: rho must be at least 1, got {rho}")
+
+    def rule(open_: DataFrame) -> Column:
+        top = open_.orderBy("dist").limit(rho).agg(F.max("dist")).scalar()
+        return F.col("dist") <= top
+
+    return _sssp(wedges, source, rule, cap=cap, max_iterations=max_iterations,
+                 who="sssp_rho_stepping")
 
 
 # ---------------------------------------------------------------------------

@@ -63,6 +63,35 @@ def _edge_side_unshuffled(plan: str) -> bool:
     return True
 
 
+def _single_partition_exchange(plan: str) -> bool:
+    """True iff some Exchange (main plan or subquery) gathers into one
+    partition: the formatted plan prints the partitioning among the
+    Exchange's Arguments."""
+    return any(
+        "Exchange" in seg.splitlines()[0] and "SinglePartition" in seg
+        for seg in plan.split("\n\n")
+        if seg.strip()
+    )
+
+
+def _sssp_step(kernel, wedges, **kw):
+    """The superstep ``kernel`` (an SSSP function) builds over ``wedges``,
+    captured by swapping its probe loop for one that hands back the step
+    unrun."""
+    built = {}
+
+    def capture(chain, step, state, **_):
+        built["step"] = step
+        return state, True
+
+    loop, kernels._iterate = kernels._iterate, capture
+    try:
+        kernel(wedges, 0, **kw)
+    finally:
+        kernels._iterate = loop
+    return built["step"]
+
+
 def _tree(plan: str) -> list[str]:
     """The lines of the formatted plan's operator tree (its first block)."""
     return plan.split("\n\n")[0].splitlines()
@@ -194,18 +223,19 @@ def main() -> None:
         print("  FAIL (Exchange between the join and the edge cache scan)")
         print(p[:2500])
 
-    # 3c. SSSP relax superstep over the weighted view: wedges is a
-    #     projection of the pinned sym leaf, and must keep its declared src
-    #     layout so the relax join reads the edge side unshuffled.
-    dist = g.vertices.select(
-        "id", F.lit(0).cast("bigint").alias("dist")
-    ).hint("shuffle_hash")  # the state-side hint kernels.sssp applies
-    relax = (
-        g.wedges.join(dist, g.wedges.src == dist.id)
-        .groupBy(g.wedges.dst)
-        .agg(F.min(dist.dist + g.wedges.w).alias("dist"))
-    )
-    p = plan_of(relax)
+    # 3c. SSSP relax superstep over the weighted view, built by
+    #     kernels.sssp itself over a generation leaf (rebound and cached,
+    #     as _StateChain.advance makes it): wedges is a projection of the
+    #     pinned sym leaf, and must keep its declared src layout so the
+    #     relax join reads the edge side unshuffled.
+    wtype = dict(g.wedges.dtypes)["w"]
+    sgen = fast_pin(
+        g.vertices.select(
+            "id", F.lit(0).cast(wtype).alias("dist"), F.lit(None).cast(wtype).alias("rat")
+        )
+    ).cache()
+    sgen.count()
+    p = plan_of(_sssp_step(kernels.sssp, g.wedges)(sgen))
     check(
         "sssp relax superstep over projected wedges",
         p,
@@ -293,6 +323,26 @@ def main() -> None:
         must_not=[],
         holds={"no raw Scan ExistingRDD": _raw_scans(t) == 0},
     )
+
+    # 3g. rho-stepping superstep, built by kernels.sssp_rho_stepping over
+    #     the same leaf: its threshold (the rho-th smallest unsettled
+    #     distance) is a scalar subquery planned into the step — a top-k
+    #     TakeOrdered over the generation, not a single-partition
+    #     aggregate exchange — and the relax join still reads the edge
+    #     side unshuffled.
+    p = plan_of(_sssp_step(kernels.sssp_rho_stepping, g.wedges, rho=256)(sgen))
+    check(
+        "rho-stepping superstep with its threshold as a subquery",
+        p,
+        must=["TakeOrderedAndProject"],
+        must_not=[],
+        holds={
+            "cached edge side not re-exchanged": _edge_side_unshuffled(p),
+            "threshold planned as a subquery": "Subquery:" in p,
+            "no Exchange SinglePartition": not _single_partition_exchange(p),
+        },
+    )
+    sgen.unpersist()
 
     # 4. extractor: Python only at the extraction boundary
     from pasgal_spark.sources.pages import pages_from_documents

@@ -3,7 +3,9 @@
 Runs every ``queries()`` entry on Spark and the matching ``oracle_sql()``
 under DuckDB on the same parquet tables, then compares row count, column
 names and (column-name-sorted, row-sorted) values — mirroring the
-CORRECTNESS_r{N}.json comparison. Usage:
+CORRECTNESS_r{N}.json comparison. Each query runs in its own job group,
+and its line prints the Spark jobs that group ran beside its wall
+(``spark=…s jobs=N``). Usage:
 
     python scripts/validate_oracles.py [sf_dir] [query ...]
 """
@@ -61,12 +63,17 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
 
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listeners = sc._jsc.sc().listenerBus()  # job ids register asynchronously
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        group = f"validate-{name}"
+        sc.setJobGroup(group, name)
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -74,9 +81,13 @@ def main() -> None:
             print(f"FAIL {name}: spark error {e}")
             failures.append(name)
             continue
+        finally:
+            sc._jsc.clearJobGroup()
         t_spark = time.time() - t0
+        listeners.waitUntilEmpty()
+        jobs = len(tracker.getJobIdsForGroup(group))
         if name not in oracles:
-            print(f"SKIP-ORACLE {name}: rows={len(sdf)} spark={t_spark:.1f}s")
+            print(f"SKIP-ORACLE {name}: rows={len(sdf)} spark={t_spark:.1f}s jobs={jobs}")
             continue
         t0 = time.time()
         try:
@@ -93,7 +104,7 @@ def main() -> None:
         status = "OK  " if vals_ok else "FAIL"
         print(
             f"{status} {name}: rows {len(a)}/{len(b)} cols {list(a.columns)}"
-            f" spark={t_spark:.1f}s duck={t_duck:.1f}s"
+            f" spark={t_spark:.1f}s jobs={jobs} duck={t_duck:.1f}s"
         )
         if not vals_ok:
             failures.append(name)

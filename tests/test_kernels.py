@@ -464,34 +464,51 @@ def test_sssp_family_raises_on_budget_exhaustion_exact_at_boundary(spark):
     wedges = spark.createDataFrame(wpairs, "src long, dst long, w long")
     exp = dijkstra_oracle(wpairs, 0, cap=40)
 
-    # (kernel, minimal budget measured on this fixture)
+    # (kernel, minimal budget measured on this fixture: each superstep
+    # settles the chain's next vertex, and the 11th finds none unsettled)
     cases = [
         (lambda mi: kernels.sssp(wedges, 0, cap=40, max_iterations=mi), 11),
         (
             lambda mi: kernels.sssp_delta_stepping(
                 wedges, 0, delta=2, cap=40, max_iterations=mi
             ),
-            16,
+            11,
         ),
         (
             lambda mi: kernels.sssp_rho_stepping(
                 wedges, 0, rho=2, cap=40, max_iterations=mi
             ),
-            21,
+            11,
         ),
     ]
     for fn, minimal in cases:
         with pytest.raises(RuntimeError, match="max_iterations"):
-            fn(minimal - 2).collect()
+            fn(minimal - 1).collect()
         got = dict(fn(minimal).select("id", "dist").collect())
         assert got == exp
 
 
-def test_delta_stepping_skips_empty_buckets_in_one_probe(spark):
+def test_sssp_stepping_rejects_bucket_sizes_that_admit_no_frontier(spark):
+    """delta <= 0 or rho < 1 admits no frontier; rho=0 used to return the
+    source alone as if every other vertex were unreachable."""
+    import pytest
+
+    wedges = spark.createDataFrame([(0, 1, 1)], "src long, dst long, w long")
+    for fn, kw in [
+        (kernels.sssp_delta_stepping, {"delta": 0}),
+        (kernels.sssp_delta_stepping, {"delta": -2}),
+        (kernels.sssp_rho_stepping, {"rho": 0}),
+    ]:
+        with pytest.raises(ValueError, match=next(iter(kw))):
+            fn(wedges, 0, **kw)
+
+
+def test_delta_stepping_skips_empty_buckets(spark):
     """Sparse far-apart weights: delta=1 with max dist 1000 would burn an
-    iteration per empty bucket pre-fix (1000 no-op advances vs a 200
-    budget); the threshold must jump straight to the next non-empty
-    bucket, converging well inside the default budget."""
+    iteration per empty bucket if the threshold advanced one bucket at a
+    time (1000 no-op advances vs a 200 budget); each superstep's bucket
+    must be the lowest non-empty one, converging well inside the default
+    budget."""
     wpairs = [(0, 1, 500), (1, 2, 500)]
     wedges = spark.createDataFrame(wpairs, "src long, dst long, w long")
     got = dict(
@@ -559,6 +576,8 @@ def test_kernel_jobs_stay_in_callers_job_group(spark):
         kernels.connected_components(sym, verts).collect()
         kernels.bfs(sym, 0, vertices=verts).collect()
         kernels.sssp(wedges, 0).collect()
+        kernels.sssp_delta_stepping(wedges, 0, delta=1).collect()
+        kernels.sssp_rho_stepping(wedges, 0, rho=2).collect()
         directed.reachability(sym, 0).collect()
     finally:
         sc._jsc.clearJobGroup()
