@@ -5,10 +5,10 @@ Spark-native re-expression of the reference's FAST-BCC
 is O(log n) regardless of graph diameter (the tagging machinery lives in
 ``pasgal_spark.graph.euler``):
 
-1. **Borůvka spanning forest** (``euler.boruvka_forest``) — each
+1. **Borůvka spanning forest** (``euler.boruvka_forest_cc``) — each
    component picks its minimum incident cross edge and contracts:
    <= log2(n) rounds. The contraction also certifies the connectivity
-   labeling (``euler.boruvka_forest_cc``), so no separate CC pass runs.
+   labeling, so no separate CC pass runs.
 2. **Euler tour by list ranking** (``euler.euler_tags``, fast-bcc.h:32-148)
    — the tree's arcs are threaded into a circuit and ranked by pointer
    doubling; ``first``/``last``/``parent`` fall out of the entering arcs,
@@ -39,13 +39,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import local_relation, pin
+from pasgal_spark.plans.lineage import DRIVER_ROWS, collect_within, local_relation, pin
 
-from pasgal_spark.graph.euler import (
-    MAX_DRIVER_ROWS,
-    boruvka_forest_cc,
-    euler_bcc_tags,
-)
+from pasgal_spark.graph.euler import boruvka_forest_cc, euler_bcc_tags
 from pasgal_spark.graph.kernels import connected_components_two_phase
 
 
@@ -113,7 +109,7 @@ def _fence_cc(sym: DataFrame, tags: DataFrame, vertices: DataFrame) -> DataFrame
     is sealed, so the cache is released immediately after.
     """
     m_upper = sym.count()
-    small = m_upper <= 2 * MAX_DRIVER_ROWS  # = two-phase's max_residual default
+    small = m_upper <= 2 * DRIVER_ROWS  # = two-phase's max_residual default
     filtered = fence_filter(sym, tags)
     if not small:
         filtered = filtered.cache()
@@ -413,22 +409,23 @@ def bcc_summary(
 
     Hybrid (r6, the engine's shrink-then-residual idiom, same budget
     class as ``connected_components_two_phase``'s zero-round direct
-    path): when the edge table fits the driver budget, ONE collect +
+    path): when the undirected edges fit the driver budget, ONE bounded
+    collect (``lineage.collect_within``, which is also the budget probe) +
     sequential Hopcroft-Tarjan computes the whole summary — the counts
     are graph invariants, so the row is identical to the distributed
-    path's (differential-tested). Past ``max_driver_edges`` (default
-    ``euler.MAX_DRIVER_ROWS``) the distributed euler machinery below runs
-    unchanged — that is the 100 TB path."""
+    path's (differential-tested). Past ``max_driver_edges`` undirected
+    edges (default ``lineage.DRIVER_ROWS``) the distributed euler
+    machinery below runs unchanged — that is the 100 TB path."""
     # validated before the driver fast path, so small and large inputs
     # reject the same arguments
     _check_strategy(strategy)
-    budget = MAX_DRIVER_ROWS if max_driver_edges is None else max_driver_edges
-    m_upper = sym.count()  # cheap on the pinned/cached ingest leaf
-    if m_upper <= 2 * budget:
-        pdf = sym.filter(F.col("src") < F.col("dst")).toPandas()
-        n_vertices = vertices.count()
+    budget = DRIVER_ROWS if max_driver_edges is None else max_driver_edges
+    pairs = collect_within(
+        sym.filter(F.col("src") < F.col("dst")).select("src", "dst"), budget
+    )
+    if pairs is not None:
         row = _bcc_summary_driver(
-            zip(pdf["src"].tolist(), pdf["dst"].tolist()), n_vertices
+            zip(pairs[0].tolist(), pairs[1].tolist()), vertices.count()
         )
         return local_relation(
             vertices.sparkSession,

@@ -9,7 +9,7 @@ reference's own scale path (parallel Euler tour via list ranking,
 /root/reference/src/sparse_table.h:7-59) as DataFrame supersteps whose
 count is O(log n) regardless of diameter:
 
-1. **Borůvka spanning forest** (`boruvka_forest`) — each component picks
+1. **Borůvka spanning forest** (`boruvka_forest_cc`) — each component picks
    its minimum incident cross edge, contracts, repeats: <= log2(n)
    rounds, each a couple of joins/aggregates over the (static) edge
    table. Replaces the O(diameter) BFS forest. (The reference derives
@@ -40,18 +40,25 @@ partitions by vertex, so a tree hub (e.g. a star root) serializes its
 own adjacency sort — bounded by max tree degree, the same bound the
 reference's per-vertex adjacency build has.
 
-**Hybrid driver fast paths (round 5).** Each stage applies the engine's
+**Hybrid driver fast paths.** Each stage applies the engine's
 shrink-then-residual idiom (``kernels.cc_phase2_union_find``) to its own
-problem: when the stage's working set fits the same 4M-row driver budget,
-the O(log n) pointer-doubling supersteps run as vectorized NumPy doubling
-over collected arrays — one collect + one upload instead of ~log n
-materialization jobs — and past the budget the distributed superstep path
-engages unchanged (probe-first, never raise: the distributed path IS the
-scale path). The NumPy kernels mirror the distributed arithmetic exactly
-(same adjacency order, same cut rule, same position/tag algebra), pinned
-by equality tests in tests/test_bcc.py. This is the same split the
-reference itself makes between its parallel list-ranking and its
-sequential fallbacks (fast-bcc.h:32-148 vs the serial validator).
+problem: when the stage's working set fits the driver budget
+(``lineage.DRIVER_ROWS`` rows unless a budget keyword says otherwise),
+one ``lineage.collect_within`` reads it as NumPy arrays and the stage
+runs as whole-array NumPy — Borůvka rounds over
+``kernels._min_root_union_find`` for the forest, pointer doubling for the
+Euler tour, the sparse table for low/high — then uploads its result
+through ``lineage.local_relation``: one collect and one upload instead of
+~log n materialization jobs. Past the budget the distributed superstep
+path engages unchanged (probe-first, never raise: the distributed path
+IS the scale path). The list-ranking and sparse-table kernels mirror the
+distributed arithmetic exactly (same adjacency order, same cut rule,
+same position/tag algebra), pinned by equality tests in
+tests/test_bcc.py; the driver forest is the unique minimum spanning
+forest under the distinct edge keys, the one the distributed rounds
+build. This is the same split the reference itself makes between its
+parallel list-ranking and its sequential fallbacks (fast-bcc.h:32-148
+vs the serial validator).
 """
 
 from __future__ import annotations
@@ -62,7 +69,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import local_relation, pin
+from pasgal_spark.graph.kernels import _min_root_union_find
+from pasgal_spark.plans.lineage import DRIVER_ROWS, collect_within, local_relation, pin
 
 _B = 2 ** 32  # (a, b) -> (a << 32) | b packing; ids asserted < 2^31
 
@@ -104,27 +112,35 @@ def _assert_packable(vertices: DataFrame, who: str) -> None:
         )
 
 
-# Shared driver budget for all residual/fast paths in this module — the
-# same 4M-row class as kernels.cc_phase2_union_find's max_residual.
-MAX_DRIVER_ROWS = 4_000_000
+def _msf_keys(x: np.ndarray, y: np.ndarray, key: np.ndarray) -> np.ndarray:
+    """The keys of the minimum spanning forest of the pairs ``(x[i], y[i])``
+    weighted by their DISTINCT ``key``s, by Borůvka rounds over whole arrays.
 
-
-def boruvka_forest(
-    sym: DataFrame,
-    vertices: DataFrame,
-    *,
-    shrink_rounds: int | str = "auto",
-    max_rounds: int = 64,
-    max_residual: int = MAX_DRIVER_ROWS,
-) -> DataFrame:
-    """(a, b) with a < b: a deterministic spanning forest of ``sym``.
-    Thin wrapper over :func:`boruvka_forest_cc` for callers that don't
-    need the connectivity labeling byproduct."""
-    forest, _ = boruvka_forest_cc(
-        sym, vertices, shrink_rounds=shrink_rounds,
-        max_rounds=max_rounds, max_residual=max_residual,
-    )
-    return forest
+    Each round, every component takes its minimum incident key, and the
+    components merge along the taken pairs through
+    ``kernels._min_root_union_find``; at least half the components merge,
+    so there are <= log2(n) rounds. Distinct keys make the minimum
+    spanning forest unique: the keys Kruskal accepts in ascending key
+    order (``tests/oracles.kruskal_keys``).
+    """
+    ids, inv = np.unique(np.concatenate([x, y]), return_inverse=True)
+    u, v = inv[: len(x)], inv[len(x):]
+    comp = np.arange(len(ids))
+    chosen = np.zeros(len(key), dtype=bool)
+    while True:
+        cu, cv = comp[u], comp[v]
+        live = cu != cv
+        if not live.any():
+            return key[chosen]
+        best = np.full(len(ids), np.iinfo(np.int64).max)
+        np.minimum.at(best, cu[live], key[live])
+        np.minimum.at(best, cv[live], key[live])
+        take = live & ((best[cu] == key) | (best[cv] == key))
+        chosen |= take
+        moved, roots = _min_root_union_find(cu[take], cv[take])
+        relabel = np.arange(len(ids))
+        relabel[moved] = roots
+        comp = relabel[comp]
 
 
 def boruvka_forest_cc(
@@ -133,11 +149,11 @@ def boruvka_forest_cc(
     *,
     shrink_rounds: int | str = "auto",
     max_rounds: int = 64,
-    max_residual: int = MAX_DRIVER_ROWS,
+    max_residual: int = DRIVER_ROWS,
 ) -> tuple[DataFrame, DataFrame]:
-    """(forest, cc): deterministic spanning forest of ``sym`` PLUS the
-    connectivity labeling it proves — ``cc`` is (id, component) with
-    component = min vertex id, bit-identical to
+    """(forest, cc): deterministic spanning forest of ``sym`` — (a, b)
+    with a < b — PLUS the connectivity labeling it proves: ``cc`` is
+    (id, component) with component = min vertex id, bit-identical to
     ``connected_components_two_phase``'s contract.
 
     Borůvka contraction already computes connectivity as a byproduct (a
@@ -149,7 +165,7 @@ def boruvka_forest_cc(
     ``shrink_rounds="auto"``: probe ``sym.count()`` (one metadata-cheap
     job on the cached edge table); when the deduped pair count provably
     fits the driver budget (m <= 2*max_residual) skip phase 1 entirely
-    and run the budgeted driver union-find directly — the exact
+    and finish on the driver directly — the exact
     ``cc_phase2_union_find`` shape. Past the budget the distributed
     contraction rounds engage unchanged.
 
@@ -165,18 +181,17 @@ def boruvka_forest_cc(
     bounded number of joins/aggregates over O(m) rows — no dependence on
     graph diameter.
 
-    **Phase 2 — budgeted driver union-find** over the residual component
+    **Phase 2 — NumPy Borůvka on the driver** over the residual component
     multigraph, deduped to one min-key edge per component pair (so its
     size is bounded by the *contracted* graph, which phase 1 shrank
-    geometrically). If the residual still exceeds ``max_residual``,
-    further contraction rounds run until it fits; raises past
+    geometrically): ``_msf_keys`` finishes the forest, and
+    ``kernels._min_root_union_find`` over the same pairs finishes the
+    labeling. The residual is tried after the shrink rounds, unless the
+    last round chose more than ``max_residual`` edges (then it cannot fit
+    yet); while it does not fit, contraction rounds continue. Raises at
     ``max_rounds`` rather than collecting an oversized residual.
-
-    Replaces the r3 all-distributed loop whose ~log2(n) rounds of fixed
-    driver-job overhead dominated the BCC bench at small sf (VERDICT r3
-    #2); at cluster scale the extra rounds re-engage automatically.
     """
-    _assert_packable(vertices, "boruvka_forest")
+    _assert_packable(vertices, "boruvka_forest_cc")
     spark = vertices.sparkSession
     if shrink_rounds == "auto":
         # one count on the (typically cached/pinned) edge table decides
@@ -189,16 +204,7 @@ def boruvka_forest_cc(
     # job-count tax on the driver fast path)
     labels = vertices.select("id", F.col("id").alias("comp"))
     phase1_engaged = False
-    uf_parent: dict[int, int] = {}
     forest_parts: list[DataFrame] = []
-
-    def find(a: int) -> int:
-        """The root of ``a`` in the driver union-find, with path halving."""
-        r = uf_parent.setdefault(a, a)
-        while uf_parent[r] != r:
-            uf_parent[r] = uf_parent[uf_parent[r]]
-            r = uf_parent[r]
-        return r
 
     def _cross(labels: DataFrame) -> DataFrame:
         key = _pack(F.least("src", "dst"), F.greatest("src", "dst"))
@@ -298,99 +304,55 @@ def boruvka_forest_cc(
         )
         return n_chosen, new_labels
 
-    rounds_done = 0
-    done = False
-    last_n_chosen = 0
-    for _ in range(shrink_rounds):
-        last_n_chosen, labels = _one_round(labels)
-        rounds_done += 1
-        if last_n_chosen == 0:
-            done = True
-            break
-
-    while not done:
-        if last_n_chosen > max_residual:
-            # Heuristic shortcut: many chosen edges last round suggests the
-            # residual pair count is still large, so contract again WITHOUT
-            # paying the residual-count job (at cluster scale this keeps
-            # the per-round job count identical to the all-distributed
-            # loop). It is NOT a proof — components can collapse to few
-            # residual pairs despite many chosen edges — but the worst
-            # case is one unnecessary extra contraction round; correctness
-            # is re-established by the rem.count() path below.
-            if rounds_done >= max_rounds:
-                raise RuntimeError(
-                    f"boruvka_forest: {last_n_chosen} components still "
-                    f"active after {rounds_done} rounds"
+    # One bounded loop: after the shrink rounds, try the driver residual
+    # (unless the last round chose more edges than the budget — then it
+    # cannot fit yet and the collect would be wasted); raise at
+    # max_rounds; stop when a round chooses no edge.
+    rounds_done = n_chosen = 0
+    residual = None
+    while True:
+        if rounds_done >= shrink_rounds and n_chosen <= max_residual:
+            # residual component multigraph, one min-key edge per
+            # unordered component pair — bounded by the contracted graph
+            rem = (
+                _cross(labels)
+                .groupBy(
+                    F.least("ca", "cb").alias("x"), F.greatest("ca", "cb").alias("y")
                 )
-            last_n_chosen, labels = _one_round(labels)
-            rounds_done += 1
-            if last_n_chosen == 0:
-                done = True
-            continue
-        # residual component multigraph, one min-key edge per unordered
-        # component pair — bounded by the contracted graph's size. ONE
-        # limit-bounded collect serves count-check and rows (r6, was
-        # cache + count + collect = 2 jobs + a cache entry).
-        rem = (
-            _cross(labels)
-            .groupBy(
-                F.least("ca", "cb").alias("x"), F.greatest("ca", "cb").alias("y")
+                .agg(F.min("key").alias("key"))
             )
-            .agg(F.min("key").alias("key"))
-        )
-        # limit-bounded Arrow transfer (r6; was .collect() — Row objects
-        # cost ~10x the arrow path in driver time/memory at the budget edge)
-        rpdf = rem.select("x", "y", "key").limit(max_residual + 1).toPandas()
-        cnt = len(rpdf)
-        if cnt == 0:
-            break
-        if cnt <= max_residual:
-            # deterministic driver union-find (path halving), edges in
-            # ascending key order: Kruskal, so it stays sequential — the
-            # chosen keys depend on the order (kernels'
-            # _min_root_union_find only labels). Link larger root under
-            # smaller so roots stay group minima: the forest (chosen
-            # keys) is unaffected by link direction, and the labeling
-            # byproduct comes out canonical for free.
-            chosen_keys = []
-            rpdf = rpdf.sort_values("key", kind="stable")
-            for x, y, k in zip(
-                rpdf["x"].tolist(), rpdf["y"].tolist(), rpdf["key"].tolist()
-            ):
-                rx, ry = find(x), find(y)
-                if rx != ry:
-                    if rx < ry:
-                        uf_parent[ry] = rx
-                    else:
-                        uf_parent[rx] = ry
-                    chosen_keys.append(k)
-            if chosen_keys:
-                keys = np.asarray(chosen_keys, dtype=np.int64)
-                forest_parts.append(
-                    local_relation(spark, "a long, b long", keys >> 32, keys & (_B - 1))
-                )
-            break
+            residual = collect_within(rem, max_residual)
+            if residual is not None:
+                break
         if rounds_done >= max_rounds:
             raise RuntimeError(
-                f"boruvka_forest: residual exceeds max_residual "
+                f"boruvka_forest_cc: no residual within max_residual "
                 f"({max_residual}) after {rounds_done} rounds"
             )
-        last_n_chosen, labels = _one_round(labels)
+        n_chosen, labels = _one_round(labels)
         rounds_done += 1
-        if last_n_chosen == 0:
-            done = True
+        if n_chosen == 0:
+            break
+
+    if residual is not None and len(residual[0]):
+        x, y, key = residual
+        keys = _msf_keys(x, y, key)
+        forest_parts.append(
+            local_relation(spark, "a long, b long", keys >> 32, keys & (_B - 1))
+        )
+        # connectivity labeling byproduct: roots are residual-group minima
+        comps, roots = _min_root_union_find(x, y)
+        map_df = local_relation(spark, "comp long, final long", comps, roots)
+        labels = labels.join(F.broadcast(map_df), "comp", "left").select(
+            "id", F.coalesce("final", "comp").alias("comp")
+        )
 
     if not forest_parts:
         forest = local_relation(spark, "a long, b long", [], [])
-    elif not phase1_engaged and len(forest_parts) == 1:
+    elif not phase1_engaged:
         # pure driver path: the forest is a single driver-built relation
-        # whose keys are unique by construction (one per accepted union).
-        # Keep it a LocalRelation: the old distinct+pin paid a job.
-        # Measured (Spark 4.1): euler_tags' limit+toPandas over it runs
-        # 0 jobs with Arrow off (a driver-local collect) and 1 job under
-        # the engine's Arrow toPandas, which runs even a LocalTableScan
-        # as a job.
+        # whose keys are unique by construction. Keep it a LocalRelation:
+        # collect_within in euler_tags reads it back without a job.
         forest = forest_parts[0]
     else:
         out = forest_parts[0]
@@ -398,15 +360,6 @@ def boruvka_forest_cc(
             out = out.unionByName(df)
         forest = out.distinct().transform(pin)
 
-    # --- connectivity labeling byproduct --------------------------------
-    if uf_parent:
-        moved = [x for x in list(uf_parent) if find(x) != x]
-        map_df = local_relation(
-            spark, "comp long, final long", moved, [find(x) for x in moved]
-        )
-        labels = labels.join(F.broadcast(map_df), "comp", "left").select(
-            "id", F.coalesce("final", "comp").alias("comp")
-        )
     if phase1_engaged:
         # phase-1 contraction roots are arbitrary cluster members;
         # canonicalize to min-id per component (two O(n) shuffles —
@@ -415,7 +368,7 @@ def boruvka_forest_cc(
         cmin = labels.groupBy("comp").agg(F.min("id").alias("component"))
         cc = labels.join(cmin, "comp").select("id", "component").transform(pin)
     else:
-        # pure driver path: min-linking kept roots canonical already, and
+        # pure driver path: the union-find's roots are group minima, and
         # the labeling plan is just (vertices leaf ⋈ broadcast remap) —
         # one projection per consumer. Leaving it lazy skips the pin's
         # localCheckpoint job (r6); recomputing a broadcast join per
@@ -529,25 +482,19 @@ def euler_tags(
     the same interval-containment contract.
 
     Hybrid: when the forest fits the driver budget (``max_driver_list``
-    edges, default MAX_DRIVER_ROWS) the doubling runs as the vectorized
+    edges, default ``lineage.DRIVER_ROWS``) the doubling runs as the vectorized
     NumPy kernel ``_euler_ent_numpy`` — one collect + one upload instead
     of ~ceil(log2(2n))/3 materialization jobs. Past the budget the
     distributed supersteps below run unchanged (the 100 TB path).
     """
-    budget = MAX_DRIVER_ROWS if max_driver_list is None else max_driver_list
+    budget = DRIVER_ROWS if max_driver_list is None else max_driver_list
     spark = forest.sparkSession
-    # ONE limit-bounded toPandas serves both the budget probe and the
-    # fast-path rows (r6, was count + toPandas = 2 jobs); only the
-    # distributed path still needs the exact count for its round bound.
-    pdf = forest.limit(budget + 1).toPandas()
-    if len(pdf) <= budget:
-        cols = (
-            _euler_ent_numpy(pdf["a"].to_numpy(), pdf["b"].to_numpy())
-            if len(pdf) else ([], [], [], [])
-        )
+    ab = collect_within(forest, budget)
+    if ab is not None:
+        cols = _euler_ent_numpy(*ab) if len(ab[0]) else ([], [], [], [])
         ent = local_relation(spark, "id long, minp long, maxp long, par long", *cols)
         return _tags_from_ent(cc, ent)
-    del pdf
+    # only the distributed path needs the exact count, for its round bound
     n_edges = forest.count()
 
     arcs = forest.select(
@@ -721,32 +668,20 @@ def subtree_minmax(
         # first probe job — the old eager pin here was an extra job
     )
 
-    budget = MAX_DRIVER_ROWS if max_driver_table is None else max_driver_table
+    budget = DRIVER_ROWS if max_driver_table is None else max_driver_table
     spark = base.sparkSession
-    # ONE limit-bounded toPandas serves the budget probe AND the fast-path
-    # rows (r6, was pin + probe-agg + toPandas = 3 jobs)
-    pdf = (
-        base.filter(F.col("last") > 0)
-        .select("component", "id", "first", "last", "w1", "w2")
-        .limit(budget + 1)
-        .toPandas()
+    rows = collect_within(
+        base.filter(F.col("last") > 0).select(
+            "component", "id", "first", "last", "w1", "w2"
+        ),
+        budget,
     )
-    if len(pdf) <= budget:
+    if rows is not None:
         # hybrid driver path: the tree vertices' (position, w1, w2) rows
         # run the identical sparse-table doubling vectorized; upload
         # (id, low, high) for internal vertices; leaves/isolated coalesce
         # to their own w1/w2 (= the one-position range answer)
-        cols = (
-            _minmax_numpy(
-                pdf["component"].to_numpy(),
-                pdf["id"].to_numpy(),
-                pdf["first"].to_numpy(),
-                pdf["last"].to_numpy(),
-                pdf["w1"].to_numpy(),
-                pdf["w2"].to_numpy(),
-            )
-            if len(pdf) else ([], [], [])
-        )
+        cols = _minmax_numpy(*rows) if len(rows[0]) else ([], [], [])
         res = local_relation(spark, "id long, low long, high long", *cols)
         out = (
             base.join(res, "id", "left")
@@ -762,7 +697,6 @@ def subtree_minmax(
         )
         base.unpersist()
         return out
-    del pdf
     max_last = base.agg(F.max("last")).first()[0] or 0
 
     n_levels = max(1, math.ceil(math.log2(max_last + 2)))
@@ -855,6 +789,6 @@ def euler_bcc_tags(
     when the caller already derived it (``boruvka_forest_cc``) to avoid a
     second contraction."""
     if forest is None:
-        forest = boruvka_forest(sym, vertices)
+        forest, _ = boruvka_forest_cc(sym, vertices)
     tags = euler_tags(forest, cc)
     return subtree_minmax(tags, sym)

@@ -57,7 +57,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.util import InheritableThread
 
-from pasgal_spark.plans.lineage import fast_pin, local_relation, pin
+from pasgal_spark.plans.lineage import (
+    DRIVER_ROWS, collect_within, fast_pin, local_relation, pin,
+)
 
 # Join-strategy hint for the state/frontier side of superstep joins
 # (guide §3.1: pick the strategy deliberately). The edge table is cached
@@ -516,7 +518,7 @@ def connected_components_two_phase(
     vertices: DataFrame,
     *,
     shrink_rounds: int = 3,
-    max_residual: int = 4_000_000,
+    max_residual: int = DRIVER_ROWS,
     on_round: Callable[[int], None] | None = None,
     m_upper: int | None = None,
 ) -> DataFrame:
@@ -582,7 +584,7 @@ def cc_phase2_union_find(
     sym: DataFrame,
     labels: DataFrame,
     *,
-    max_residual: int = 4_000_000,
+    max_residual: int = DRIVER_ROWS,
     context: str = "",
     identity_labels: bool = False,
 ) -> DataFrame:
@@ -627,18 +629,16 @@ def cc_phase2_union_find(
             .select(F.least("cu", "cv").alias("a"), F.greatest("cu", "cv").alias("b"))
             .distinct()
         )
-    # limit-bounded Arrow transfer (r6; was .collect() — 4M Row objects
-    # cost ~10x the arrow path in driver time and memory at the budget edge)
-    pdf = residual.limit(max_residual + 1).toPandas()
-    if len(pdf) > max_residual:
+    pairs = collect_within(residual, max_residual)
+    if pairs is None:
         raise RuntimeError(
             f"two-phase CC residual exceeds {max_residual} pairs {context}; "
             "raise shrink_rounds"
         )
-    if len(pdf) == 0:
+    if len(pairs[0]) == 0:
         return labels.select("id", "component")
 
-    ids, roots = _min_root_union_find(pdf["a"].to_numpy(), pdf["b"].to_numpy())
+    ids, roots = _min_root_union_find(*pairs)
     map_df = local_relation(
         labels.sparkSession, "component long, final long", ids, roots
     )

@@ -43,7 +43,7 @@ from pasgal_spark.graph.kernels import (
     min_label_step,
     pagerank_step,
 )
-from pasgal_spark.plans.lineage import pin
+from pasgal_spark.plans.lineage import DRIVER_ROWS, pin
 
 
 @dataclass
@@ -208,7 +208,7 @@ class CheckpointedConnectedComponents(_Resumable):
         *,
         run_id: str = "cc",
         shrink_rounds: int = 3,
-        max_residual: int = 4_000_000,
+        max_residual: int = DRIVER_ROWS,
     ) -> None:
         super().__init__(spark, workdir, run_id)
         self.sym = sym

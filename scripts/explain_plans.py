@@ -21,8 +21,10 @@ import os
 import sys
 import contextlib
 
-# import the package of the checkout this script lives in
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# import the package of the checkout this script lives in, on the driver
+# and (through spark.executorEnv.PYTHONPATH) in the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -138,7 +140,10 @@ def check(
 
 def main() -> None:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    spark = get_spark(
+        master="local[8]", shuffle_partitions=8,
+        extra_conf={"spark.executorEnv.PYTHONPATH": ROOT},
+    )
 
     # 1. pushdown + pruning on a parquet scan
     load_views(spark, sf, ["orders"])

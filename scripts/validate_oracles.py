@@ -5,7 +5,8 @@ under DuckDB on the same parquet tables, then compares row count, column
 names and (column-name-sorted, row-sorted) values — mirroring the
 CORRECTNESS_r{N}.json comparison. Each query runs in its own job group,
 and its line prints the Spark jobs that group ran beside its wall
-(``spark=…s jobs=N``). Usage:
+(``spark=…s jobs=N``); the last line sums them over the queries run
+(``TOTAL jobs=N``). Usage:
 
     python scripts/validate_oracles.py [sf_dir] [query ...]
 """
@@ -19,8 +20,10 @@ import time
 import duckdb
 import pandas as pd
 
-# import the package of the checkout this script lives in
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# import the package of the checkout this script lives in, on the driver
+# and (through spark.executorEnv.PYTHONPATH) in the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from pasgal_spark.session import get_spark  # noqa: E402
@@ -53,10 +56,11 @@ def main() -> None:
 
     # local[8] keeps the sf0.01 default cheap; the scale tiers override
     # (e.g. SPARK_GRAFT_CPUS=32 SPARK_DRIVER_MEM=64g at sf10)
-    import os
-
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8))
+    spark = get_spark(
+        master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8),
+        extra_conf={"spark.executorEnv.PYTHONPATH": ROOT},
+    )
     con = duckdb.connect()
     for t in TPCH_TABLES:
         con.sql(
@@ -69,6 +73,7 @@ def main() -> None:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    total_jobs = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -86,6 +91,7 @@ def main() -> None:
         t_spark = time.time() - t0
         listeners.waitUntilEmpty()
         jobs = len(tracker.getJobIdsForGroup(group))
+        total_jobs += jobs
         if name not in oracles:
             print(f"SKIP-ORACLE {name}: rows={len(sdf)} spark={t_spark:.1f}s jobs={jobs}")
             continue
@@ -120,6 +126,7 @@ def main() -> None:
             else:
                 print(f"   spark head:\n{a.head(3)}\n   oracle head:\n{b.head(3)}")
     print("FAILURES:", failures or "none")
+    print(f"TOTAL jobs={total_jobs}")
     sys.exit(1 if failures else 0)
 
 

@@ -190,3 +190,25 @@ def articulation_oracle(n_vertices, sym_edges):
         for m in members:
             cnt[m] += 1
     return {v for v, c in cnt.items() if c >= 2}
+
+
+def kruskal_keys(xs, ys, keys):
+    """Keys of the minimum spanning forest of the pairs (xs[i], ys[i])
+    under their distinct keys: Kruskal, pairs in ascending key order over a
+    path-halving union-find."""
+    parent = {}
+
+    def find(a):
+        r = parent.setdefault(a, a)
+        while parent[r] != r:
+            parent[r] = parent[parent[r]]
+            r = parent[r]
+        return r
+
+    chosen = []
+    for k, x, y in sorted(zip(keys, xs, ys)):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+            chosen.append(k)
+    return chosen

@@ -8,7 +8,7 @@ import pytest
 
 from pasgal_spark.graph import bcc as bccmod
 from tests.conftest import edges_df, vertices_df
-from tests.oracles import articulation_oracle, bcc_oracle
+from tests.oracles import articulation_oracle, bcc_oracle, kruskal_keys
 
 
 def _sym_pairs(pairs):
@@ -221,6 +221,8 @@ def test_boruvka_cc_byproduct_matches_two_phase(spark, seed):
     ncomp = want.select("component").distinct().count()
     assert forest_a.count() == n - ncomp
     assert forest_d.count() == n - ncomp
+    # distinct edge keys: one minimum spanning forest, whichever path
+    assert sorted(forest_a.collect()) == sorted(forest_d.collect())
 
 
 def test_euler_stage_driver_paths_match_distributed(spark):
@@ -281,3 +283,39 @@ def test_bcc_summary_driver_matches_distributed(spark):
         fast = bccmod.bcc_summary(sym, vertices).first()
         dist = bccmod.bcc_summary(sym, vertices, max_driver_edges=0).first()
         assert tuple(fast) == tuple(dist), f"seed {seed}"
+
+
+def _residual_arrays(pairs):
+    """(x, y, key) arrays of a residual: x < y, key = (x << 32) | y."""
+    import numpy as np
+
+    x = np.array([min(p) for p in pairs], dtype=np.int64)
+    y = np.array([max(p) for p in pairs], dtype=np.int64)
+    return x, y, (x << 32) | y
+
+
+def test_msf_keys_match_kruskal():
+    """The driver forest's NumPy Borůvka rounds accept exactly Kruskal's
+    keys: on the fixture graphs, on random residuals with shuffled,
+    non-contiguous ids and shuffled keys, on one pair and on none."""
+    import random
+
+    import numpy as np
+
+    from pasgal_spark.graph.euler import _msf_keys
+
+    cases = {"one pair": [(3, 9)], "empty": []}
+    for name, pairs in (("fig8", FIG8), ("chord", CHORD), ("path", PATH),
+                        ("theta", THETA)):
+        cases[name] = pairs
+    for seed in range(6):
+        rng = random.Random(seed)
+        graph, n = _random_graph(seed, 60, 90)
+        ids = rng.sample(range(10**9), n)  # shuffled, non-contiguous ids
+        cases[f"random{seed}"] = [(ids[a], ids[b]) for a, b in graph]
+    for name, pairs in cases.items():
+        x, y, key = _residual_arrays(pairs)
+        # component labels need not order like keys: shuffle the keys
+        key = np.random.default_rng(len(pairs)).permutation(key)
+        got = sorted(_msf_keys(x, y, key).tolist())
+        assert got == sorted(kruskal_keys(x.tolist(), y.tolist(), key.tolist())), name

@@ -12,7 +12,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pasgal_spark.plans.lineage import local_relation, pin
+from pasgal_spark.plans.lineage import collect_within, local_relation, pin
 from tests.conftest import edges_df
 
 
@@ -116,3 +116,40 @@ def test_local_relation_is_a_zero_job_local_relation_with_arrow_off(spark):
         assert len(tracker.getJobIdsForGroup(None)) == before
     finally:
         spark.conf.set(key, "true")
+
+
+def test_collect_within_returns_typed_arrays_up_to_the_budget(spark):
+    df = spark.range(5).select(
+        F.col("id"), F.col("id").cast("int").alias("i"), (F.col("id") / 2).alias("h")
+    )
+    got = collect_within(df, 5)
+    assert [c.dtype.name for c in got] == ["int64", "int32", "float64"]
+    assert sorted(got[0].tolist()) == [0, 1, 2, 3, 4]
+    assert collect_within(df, 4) is None
+    empty = collect_within(df.filter(F.col("id") < 0), 0)
+    assert [(c.dtype.name, len(c)) for c in empty] == [
+        ("int64", 0), ("int32", 0), ("float64", 0)
+    ]
+
+
+def test_collect_within_reads_a_local_relation_without_a_job(spark):
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    listeners = sc._jsc.sc().listenerBus()
+
+    def jobs(group, df):
+        sc.setJobGroup(group, "collect_within jobs")
+        try:
+            out = collect_within(df, 2)
+        finally:
+            sc._jsc.clearJobGroup()
+        listeners.waitUntilEmpty()
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    local = local_relation(spark, "id long, dist int", [7, 8], [0, 1])
+    (ids, dist), n_local = jobs("cw-local", local)
+    assert (ids.tolist(), dist.tolist(), dist.dtype.name) == ([7, 8], [0, 1], "int32")
+    assert n_local == 0
+    assert jobs("cw-local-over", local_relation(spark, "id long", [1, 2, 3]))[0] is None
+    _, n_plain = jobs("cw-plain", local.select((F.col("id") + 1).alias("id")))
+    assert n_plain >= 1
